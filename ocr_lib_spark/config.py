@@ -10,7 +10,7 @@ keeps the same knob surface — config is data, never code.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -72,11 +72,6 @@ class ExtractionConfig:
 
     #: number of hash buckets for checkpoint/lineage partitioning.
     lineage_buckets: int = 32
-
-    #: salt width for conv_id-salted repartitioning of the heavy stage.
-    repartition_partitions: int | None = None
-
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = ExtractionConfig()

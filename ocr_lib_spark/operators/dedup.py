@@ -6,7 +6,6 @@ DISTINCT (SURVEY.md §2.3) and Jaccard |∩|/|∪| is its matching kernel
 those primitives to corpus scale:
 
   exact_duplicates      hash-groupBy (one shuffle on the digest)
-  ngram_jaccard         shingle-set Jaccard between candidate pairs
   minhash_signatures    k independent min-hashes over shingle sets
   lsh_candidate_pairs   banded LSH bucketing -> same-bucket pair join
   simhash64             bitwise majority fingerprint over token hashes
@@ -34,26 +33,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         df.select(F.md5(F.col(text_col)).alias("digest"), F.col(id_col))
         .groupBy("digest")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-    )
-
-
-def shingle_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5) -> DataFrame:
-    return df.select(F.col(id_col), char_shingles(F.col(text_col), k).alias("shingles"))
-
-
-def ngram_jaccard_pairs(
-    pairs: DataFrame, k: int = 5, left_text: str = "text_a", right_text: str = "text_b"
-) -> DataFrame:
-    """Exact shingle-set Jaccard for pre-selected candidate pairs —
-    the verification stage after LSH candidate generation. Pure array
-    functions (array_intersect/array_union = clojure.set intersection/
-    union, SURVEY.md §2.6)."""
-    a = char_shingles(F.col(left_text), k)
-    b = char_shingles(F.col(right_text), k)
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return pairs.withColumn(
-        "jaccard", (inter / F.greatest(union, F.lit(1))).cast("double")
     )
 
 

@@ -5,9 +5,7 @@ unknown sign scored against every prototype (check-matching-fn,
 core.clj:1020-1069). Lifted to vectors:
 
   brute_force_topk  — broadcast the (small) query set against the corpus,
-                      exact cosine, per-query top-k. The baseline.
-  lsh_topk          — sign-bucket LSH restricts each query to its bucket
-                      (+ optional neighbor probing) — the 100 TB path.
+                      exact cosine, per-query top-k.
 
 Cosine is computed with built-in higher-order array functions
 (zip_with/aggregate → JVM codegen, no Python); top-k is TWO-PHASE:
@@ -23,23 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocr_lib_spark.operators.dedup import _sign_bucket
-
-
-def _cosine(av, bv):
-    dot = F.aggregate(F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    na = F.sqrt(F.aggregate(av, F.lit(0.0), lambda a, x: a + x * x))
-    nb = F.sqrt(F.aggregate(bv, F.lit(0.0), lambda a, x: a + x * x))
-    return dot / (na * nb)
-
 
 def _norm(v):
-    """sqrt of the left-fold sum of squares — the exact sub-expression
-    `_cosine` folds per pair, lifted out so callers can compute it once
-    per ROW below the join (bit-identical: same fold on the same cast
-    array, and IEEE-754 `a*b` is commutative so the denominator product
-    is unchanged). Per-pair verify cost drops from three array folds to
-    one (the dot)."""
+    """sqrt of the left-fold sum of squares — the cosine denominator's
+    per-vector factor, computed once per ROW below the join instead of
+    per pair (IEEE-754 `a*b` is commutative, so the denominator product
+    is the same either way). Per-pair verify cost drops from three
+    array folds to one (the dot)."""
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
@@ -96,43 +84,6 @@ def brute_force_topk(
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-    )
-    return _topk_two_phase(scored, k).select("query_id", "rank", "neighbor_id", "cosine")
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: compare only within the query's sign bucket.
-    Recall < 1 by construction; at corpus scale the equi-join on bucket
-    replaces the cross join (shuffle key = bucket)."""
-    qv = F.col(vec_col).cast("array<double>")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        qv.alias("qv"),
-        _norm(qv).alias("qn"),
-        _sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
-    )
-    cv = F.col(vec_col).cast("array<double>")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        cv.alias("cv"),
-        _norm(cv).alias("cn"),
-        _sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), ["bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",

@@ -22,8 +22,6 @@ merge machinery core.clj:1392-1458 disappears — SURVEY.md §4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,6 +29,7 @@ from pyspark.sql import types as T
 from ocr_lib_spark.config import DEFAULT_CONFIG, ExtractionConfig
 from ocr_lib_spark.operators.extract import extract_batch
 from ocr_lib_spark.operators.prototypes import taught_prototypes
+from ocr_lib_spark.partitioning import SCAN_WAVES, spread_width
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -94,7 +93,7 @@ def extract_turns(
                 acc.add(tm.get(k, 0.0))
 
     src = df.select("conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "role", "text")
-    p = partitions or cfg.repartition_partitions or spark.sparkContext.defaultParallelism
+    p = partitions or spark.sparkContext.defaultParallelism
     if repartition == "auto":
         # Shuffle only when the upstream layout can't feed every core
         # (fewer splits than the target parallelism). A balanced
@@ -113,31 +112,20 @@ def extract_turns(
         if n_src < p:
             repartition = True
             # Scale-adaptive spread width: when the under-split input is
-            # also TINY (below the spread_small byte budget — i.e. the
-            # scan itself would never have split it by bytes), a full
-            # p-way salted spread buys no balance the kernel needs and
-            # multiplies per-task fixed cost (p python round-trips, p
-            # map inputs into the downstream assembly shuffle). Spread
-            # to the spread_small cap instead — measured at sf0.1
-            # local[32]: extract 0.547->0.441s, extract+assemble
-            # 0.873->0.532s. Inputs past the byte budget keep the full
-            # p-way spread (unsplittable-big-file layouts stay covered);
-            # explicit ``partitions``/cfg overrides are untouched.
-            if partitions is None and cfg.repartition_partitions is None:
-                from ocr_lib_spark.partitioning import (
-                    SPREAD_BYTES_PER_TASK,
-                    SPREAD_MAX_PARTITIONS,
-                    plan_size_bytes,
-                )
-
-                cap = min(p, SPREAD_MAX_PARTITIONS)
-                size = plan_size_bytes(df)
-                if 0 <= size < cap * SPREAD_BYTES_PER_TASK:
-                    p = cap
+            # also TINY (spread_width says the scan itself would never
+            # have split it by bytes), a full p-way salted spread buys no
+            # balance the kernel needs and multiplies per-task fixed cost
+            # (p python round-trips, p map inputs into the downstream
+            # assembly shuffle). Spread to the spread_small width instead
+            # — measured at sf0.1 local[32]: extract 0.547->0.441s,
+            # extract+assemble 0.873->0.532s. Inputs past the byte budget
+            # keep the full p-way spread (unsplittable-big-file layouts
+            # stay covered); an explicit ``partitions`` is untouched.
+            if partitions is None:
+                p = spread_width(df) or p
         else:
             repartition = False
-            waves = int(os.environ.get("SPARK_GRAFT_SCAN_WAVES", "8"))
-            if n_src > 2 * waves * p:
+            if n_src > 2 * SCAN_WAVES * p:
                 # Coalesce only ABOVE twice the wave target: coalescing
                 # from the (waves*p, 2*waves*p] band gives merged
                 # partitions of 1 OR 2 source splits — a built-in 2x
@@ -148,7 +136,7 @@ def extract_turns(
                 # .minPartitionNum), so sized scans run as-is on
                 # already-balanced splits and only genuinely
                 # over-split inputs (small-files layouts) coalesce.
-                src = src.coalesce(waves * p)
+                src = src.coalesce(SCAN_WAVES * p)
     if repartition:
         src = src.repartition(p, "conv_id", "turn_idx")
     return src.mapInPandas(run, schema=EXTRACTED_SCHEMA)

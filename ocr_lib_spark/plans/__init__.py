@@ -23,6 +23,10 @@ def load(spark, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def documents(spark, sf_dir: str):
+    return load(spark, sf_dir, "documents")
+
+
 def build_registry() -> dict:
     from ocr_lib_spark.plans import (
         agentops,

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocr_lib_spark.plans import QueryDef, load
+from ocr_lib_spark.plans import QueryDef, documents, load
 
 #: word-K-gram window shared with the decontamination gate
 #: (plans/textops.py DECON_K) — same definition of "an n-gram"
@@ -27,10 +27,6 @@ NOVELTY_K = 8
 
 #: ppm resolution shared by every rate/score in this module
 _PPM = 1_000_000
-
-
-def _docs(spark, sf_dir):
-    return load(spark, sf_dir, "documents")
 
 
 def _gram_hash_pairs(d):
@@ -80,7 +76,7 @@ def _q_ngram_novelty(spark, sf_dir):
     groupBy(doc). Two gram-keyed shuffles, both map-side combinable,
     keys md5-uniform (no skew); docs with < K tokens surface with
     zeros via the left join from the doc scan."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     pairs = _gram_hash_pairs(d).localCheckpoint(eager=False)
     firsts = pairs.groupBy("gh").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
@@ -154,7 +150,7 @@ def _q_mix_rebalance(spark, sf_dir):
     the applied counts. n_kept tracks rate_ppm * n_docs only in
     expectation (the hash is uniform, not stratified-exact) — both
     numbers are emitted so the plan/apply gap is visible."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "source",
         (F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long") % _PPM).alias(
             "h"
@@ -244,7 +240,7 @@ def _q_quality_curriculum(spark, sf_dir):
     d = (
         # spread: tokenize + array_distinct per row runs single-task on
         # a small single-row-group scan (no-op at scale)
-        spread_small(_docs(spark, sf_dir))
+        spread_small(documents(spark, sf_dir))
         .select(
             "doc_id",
             F.size(toks).cast("long").alias("n_tokens"),
@@ -347,7 +343,7 @@ def _q_temperature_mix(spark, sf_dir):
 
     Scale shape: one groupBy(source) census; the per-source rate table
     (rows = #sources) broadcasts back onto the scan. No other shuffle."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "source",
         (F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long") % _PPM).alias(
             "h"
@@ -445,7 +441,7 @@ def _q_dedup_keep_best(spark, sf_dir):
 
     # spread: quality_score tokenizes every doc; single-task otherwise
     # on a small single-row-group scan (no-op at scale)
-    q = spread_small(_docs(spark, sf_dir)).select(
+    q = spread_small(documents(spark, sf_dir)).select(
         "doc_id", quality_score("text").cast("long").alias("q")
     )
     m = (
@@ -539,7 +535,7 @@ def _q_incremental_dedup(spark, sf_dir):
         SHINGLE_K,
     )
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     is_new = (F.col("doc_id") % INC_MOD) == INC_NEW_RES
     dg = d.select("doc_id", F.md5("text").alias("dig"), is_new.alias("is_new"))
     old_dig = (
@@ -722,7 +718,7 @@ def _q_segment_scrub(spark, sf_dir):
     probe read the same materialization."""
     from ocr_lib_spark.plans.textops import SEG_K
 
-    t = _docs(spark, sf_dir).select(
+    t = documents(spark, sf_dir).select(
         "doc_id", F.split(F.trim("text"), " ").alias("toks")
     )
     seg = (
@@ -867,7 +863,7 @@ SCRUB_RUN_TEXT_SQL = SCRUB_RUN_TEXT.replace("'", "''")
 def _scrub_docs(spark, sf_dir):
     """documents with the derived shared-run injection applied; the
     common scan for _q_substring_scrub (tokenized, checkpointed once)."""
-    base = _docs(spark, sf_dir)
+    base = documents(spark, sf_dir)
     padded = F.concat(
         F.expr(f"repeat('pad ', cast(doc_id % {SCRUB_PAD_MOD} as int))"),
         F.lit(SCRUB_RUN_TEXT),
@@ -1021,7 +1017,7 @@ def _q_shard_manifest(spark, sf_dir):
     from ocr_lib_spark.functions.text import bpe_token_count, token_count
     from ocr_lib_spark.plans.textops import PACK_SHARDS
 
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).cast("int").alias("shard"),
         token_count("text").cast("long").alias("ws"),
@@ -1093,7 +1089,7 @@ def _q_stream_incremental_dedup(spark, sf_dir):
     snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
     tag = _hashlib.md5(f"incdedup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
     src = f"/tmp/ocr_stream_incdedup_src_{tag}"
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     if not _Path(src, "_SUCCESS").exists():
         d.where(F.col("doc_id") % INC_MOD == INC_NEW_RES).repartitionByRange(
             4, "doc_id"
@@ -1172,7 +1168,7 @@ def _q_compaction_plan(spark, sf_dir):
     from ocr_lib_spark.plans.textops import PACK_SHARDS
 
     census = (
-        _docs(spark, sf_dir)
+        documents(spark, sf_dir)
         .groupBy((F.col("doc_id") % PACK_SHARDS).cast("int").alias("shard"))
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -1387,7 +1383,7 @@ def _q_dsir_select(spark, sf_dir):
 
     # spread: the tokenize+explode+md5 hashed-bigram stage is CPU-dense
     # and would run on a small single-row-group scan's one task
-    d = spread_small(_docs(spark, sf_dir))
+    d = spread_small(documents(spark, sf_dir))
     toks = F.explode(F.split(F.trim("text"), " ")).alias("tok")
     tb = (
         d.select(
@@ -1585,7 +1581,7 @@ def _funnel_txt(d):
 def _funnel_frame(spark, sf_dir):
     """Per-doc rule bits + first-failing-stage label over the derived
     fixture text; see funnel_attribution_frame for the shape."""
-    return funnel_attribution_frame(_funnel_txt(_docs(spark, sf_dir)))
+    return funnel_attribution_frame(_funnel_txt(documents(spark, sf_dir)))
 
 
 def funnel_attribution_frame(d):
@@ -1694,7 +1690,7 @@ def _q_curation_funnel_by_source(spark, sf_dir):
     frame and one combinable groupBy; output rows = #sources (a layout
     constant, never corpus-scale)."""
     f = _funnel_frame(spark, sf_dir)
-    src = _docs(spark, sf_dir).select("doc_id", "source")
+    src = documents(spark, sf_dir).select("doc_id", "source")
     stage_n = [
         F.sum((F.col("stage") == st).cast("int")).cast("long").alias(f"n_{st}")
         for st in FUNNEL_STAGES
@@ -1838,7 +1834,7 @@ def _q_normalized_dedup(spark, sf_dir):
     two-level groupBy ((norm, raw) then norm — both map-side
     combinable, so the boilerplate mega-digest partial-aggregates
     before the shuffle; no window, no join-back)."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id",
         F.when(
             F.col("doc_id") % FUNNEL_BOILER_MOD == FUNNEL_BOILER_RES,
@@ -1983,7 +1979,7 @@ def _q_bpe_merge_step(spark, sf_dir):
     d = (
         # spread: census explode + greedy count pass run off this
         # checkpoint; a small single-row-group scan gives it one task
-        spread_small(_docs(spark, sf_dir))
+        spread_small(documents(spark, sf_dir))
         .select("doc_id", toks.alias("t"))
         .select("doc_id", F.expr("filter(t, x -> x != '')").alias("t"))
         .localCheckpoint(eager=False)  # feeds the census and the count pass
@@ -2104,7 +2100,7 @@ def _q_bpe_merge_loop(spark, sf_dir):
     total. BPE_STEPS rounds, stream rebuilt between rounds."""
     toks = F.split(F.trim("text"), " ")
     t = (
-        _docs(spark, sf_dir)
+        documents(spark, sf_dir)
         .select("doc_id", toks.alias("t"))
         .select("doc_id", F.expr("filter(t, x -> x != '')").alias("t"))
     )
@@ -2232,7 +2228,7 @@ def _q_bpe_apply_merges(spark, sf_dir):
     t = (
         # spread: all BPE_STEPS rounds of HOF merge passes inherit this
         # partitioning (see bpe_merge_loop_frame)
-        spread_small(_docs(spark, sf_dir))
+        spread_small(documents(spark, sf_dir))
         .select("doc_id", toks.alias("t"))
         .select("doc_id", F.expr("filter(t, x -> x != '')").alias("t"))
         .withColumn("n0", F.size("t").cast("long"))
@@ -2290,7 +2286,7 @@ def _q_leakage_safe_split(spark, sf_dir):
 
     lab = _near_dup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
     base = (
-        _docs(spark, sf_dir)
+        documents(spark, sf_dir)
         .select("doc_id")
         .join(lab, "doc_id", "left")
         .select(
@@ -2374,7 +2370,7 @@ def _q_chunk_overlap(spark, sf_dir):
     from ocr_lib_spark.functions.text import bpe_token_count
 
     W, S = CHUNK_WIDTH, CHUNK_STRIDE
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id", bpe_token_count("text").cast("long").alias("n_tokens")
     )
     # Integer-exact ceiling (ADVICE r6): CEIL(x / S) was the contract's
@@ -2616,7 +2612,7 @@ def _q_url_dedup(spark, sf_dir):
     before its shuffle. Output is bounded by the host key space.
     sum_keep_ids pins the keep-first rule (MIN doc_id per canonical)
     in the external hash."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id", F.expr(derived_url_sql("doc_id")).alias("raw_url")
     )
     d = d.select(
@@ -2712,7 +2708,7 @@ def _q_quality_score(spark, sf_dir):
     zero UDFs; zero-bigram docs surface with zeros via the left join
     from the doc scan and are never kept."""
     B = QS_BUCKETS
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id",
         F.when(
             F.col("doc_id") % FUNNEL_BOILER_MOD == FUNNEL_BOILER_RES,

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_lib_spark.functions.text import stable_hash64
-from ocr_lib_spark.plans import QueryDef
+from ocr_lib_spark.plans import QueryDef, documents
 from ocr_lib_spark.plans.textops import _O_TOKS_CTE, _toks_nonempty
 
 #: retrieval fan-out: QK query terms, top K docs per term.
@@ -293,9 +293,8 @@ def _q_doc_length_histogram(spark, sf_dir) -> DataFrame:
     first chart on any dataset card. One combinable groupBy over a
     ~log(max_len) bucket key; integer-exact everywhere."""
     from ocr_lib_spark.functions.text import bpe_token_count
-    from ocr_lib_spark.plans.textops import _docs
 
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         bpe_token_count(F.coalesce("text", F.lit(""))).cast("long").alias("ntok")
     )
     return (
@@ -342,10 +341,10 @@ def _q_tokenizer_fertility(spark, sf_dir) -> DataFrame:
     ADVICE r7 flagged (Spark \\s+ vs oracle ' ' diverged on any tab or
     newline; the gate now exercises that axis on ~43% of docs)."""
     from ocr_lib_spark.functions.text import bpe_token_count
-    from ocr_lib_spark.plans.textops import HOSTILE_WS_SQL, _docs
+    from ocr_lib_spark.plans.textops import HOSTILE_WS_SQL
 
     ht = F.expr(HOSTILE_WS_SQL.format(d="doc_id", t="COALESCE(text, '')"))
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "lang",
         bpe_token_count(ht).cast("long").alias("bpe"),
         F.size(F.filter(F.split(F.trim(ht), r"\s+"), lambda x: x != ""))

@@ -23,7 +23,7 @@ from ocr_lib_spark.operators.dedup import (
     minhash_signatures,
     simhash64,
 )
-from ocr_lib_spark.plans import QueryDef, load
+from ocr_lib_spark.plans import QueryDef, documents
 from ocr_lib_spark.partitioning import spread_small
 
 N_HASHES = 8
@@ -32,14 +32,10 @@ SHINGLE_K = 5
 SIMHASH_BITS = 20  # oracle SQL grows per bit; 20 is plenty to pin semantics
 
 
-def _docs(spark, sf_dir):
-    return load(spark, sf_dir, "documents")
-
-
 # --- token statistics (scalar kernels; contrast-fn analog core.clj:210-239) -
 
 def _text_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim("text"), r"\s+")
     tok_chars = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
     return d.select(
@@ -65,7 +61,7 @@ FROM documents
 # --- language ID + quality (nearest-prototype scalar banding) ---------------
 
 def _lang_quality(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return d.select(
         "doc_id",
         vowel_ratio("text").alias("vowel_ratio"),
@@ -97,7 +93,7 @@ FROM t
 # --- fingerprint (digest + stable bucket) -----------------------------------
 
 def _fingerprint(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return d.select(
         "doc_id",
         md5_fingerprint("text").alias("fp"),
@@ -115,7 +111,7 @@ FROM documents
 # --- exact dedup (hash-groupBy) ----------------------------------------------
 
 def _exact_dedup(spark, sf_dir):
-    return exact_duplicates(_docs(spark, sf_dir))
+    return exact_duplicates(documents(spark, sf_dir))
 
 
 _O_EXACT_DEDUP = """
@@ -136,7 +132,7 @@ def _doc_repetition(spark, sf_dir):
     toks = F.split(F.trim("text"), " ")
     # spread: tokenize + array_distinct + bigram transform are CPU-dense
     # per byte; a small single-row-group scan runs them on one task
-    base = spread_small(_docs(spark, sf_dir)).select(
+    base = spread_small(documents(spark, sf_dir)).select(
         "doc_id",
         toks.alias("t"),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -214,7 +210,7 @@ def _decontaminate(spark, sf_dir):
     # spread: the K-gram construction (concat_ws over sliced token
     # arrays) is CPU-dense and runs once per branch (holdout broadcast +
     # probe); a small single-row-group scan would run each on one task
-    d = spread_small(_docs(spark, sf_dir)).select("doc_id", toks.alias("t"))
+    d = spread_small(documents(spark, sf_dir)).select("doc_id", toks.alias("t"))
     d = d.select("doc_id", F.explode(grams_expr).alias("g"))
     holdout = (
         d.where(F.col("doc_id") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
@@ -265,7 +261,7 @@ def _decontaminate_spans(spark, sf_dir):
         f"i -> concat_ws(' ', slice(t, i + 1, {DECON_K}))) "
         f"ELSE cast(array() as array<string>) END"
     )
-    d = _docs(spark, sf_dir).select("doc_id", toks.alias("t"))
+    d = documents(spark, sf_dir).select("doc_id", toks.alias("t"))
     g = d.select("doc_id", "t", F.posexplode(grams_expr).alias("pos", "g"))
     holdout = (
         g.where(F.col("doc_id") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
@@ -375,7 +371,7 @@ def _pii_scrub(spark, sf_dir):
     # passes per row — parallelism equals scan split count, and a small
     # single-row-group parquet yields ONE working task (measured 733 ms
     # single-task in the r9 profile; no-op at real corpus sizes)
-    d = spread_small(_docs(spark, sf_dir)).withColumn(
+    d = spread_small(documents(spark, sf_dir)).withColumn(
         "card_base",
         F.lpad(
             (((F.col("doc_id") % PII_ID_MOD) * 1099511628211) % 1000000000000000).cast("string"),
@@ -533,7 +529,7 @@ def _q_stream_exact_dedup(spark, sf_dir):
     tag = _hashlib.md5(f"dedup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
     src = f"/tmp/ocr_stream_dedup_src_{tag}"
     if not _Path(src, "_SUCCESS").exists():
-        _docs(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
+        documents(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
     sdf = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 2)
@@ -589,7 +585,7 @@ def _q_stream_dedup_watermark(spark, sf_dir):
     tag = _hashlib.md5(f"wmdedup2|{sf_dir}|{snap}".encode()).hexdigest()[:8]
     src = f"/tmp/ocr_stream_wmdedup_src_{tag}"
     if not _Path(src, "_SUCCESS").exists():
-        _docs(spark, sf_dir).repartitionByRange(6, "doc_id").write.mode(
+        documents(spark, sf_dir).repartitionByRange(6, "doc_id").write.mode(
             "overwrite"
         ).parquet(src)
     sdf = (
@@ -688,7 +684,7 @@ def segment_dedup_frame(docs):
 
 
 def _segment_dedup(spark, sf_dir):
-    return segment_dedup_frame(_docs(spark, sf_dir))
+    return segment_dedup_frame(documents(spark, sf_dir))
 
 
 _O_SEGMENT_DEDUP = f"""
@@ -794,7 +790,7 @@ def gopher_bits_frame(docs):
 
 
 def _gopher_quality_bits(spark, sf_dir):
-    return gopher_bits_frame(_docs(spark, sf_dir))
+    return gopher_bits_frame(documents(spark, sf_dir))
 
 
 _O_GOPHER = f"""
@@ -850,7 +846,7 @@ def _q_stream_near_dup(spark, sf_dir):
     tag = _hashlib.md5(f"neardup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
     src = f"/tmp/ocr_stream_neardup_src_{tag}"
     if not _Path(src, "_SUCCESS").exists():
-        _docs(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
+        documents(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
     sdf = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 2)
@@ -916,7 +912,7 @@ def _adjacent_jaccard(spark, sf_dir):
             {"n_inter": ni, "n_union": [a + b - i for a, b, i in zip(na, nb, ni)]}
         )
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
     j = a.join(b, F.col("id_b") == F.col("id_a") + 1)
@@ -961,7 +957,7 @@ FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
 
 def _minhash(spark, sf_dir):
     return minhash_signatures(
-        _docs(spark, sf_dir), n_hashes=N_HASHES, k=SHINGLE_K
+        documents(spark, sf_dir), n_hashes=N_HASHES, k=SHINGLE_K
     )
 
 
@@ -997,7 +993,7 @@ LSH_MAX_BUCKET = 100
 
 
 def _lsh_pairs(spark, sf_dir):
-    sig = minhash_signatures(_docs(spark, sf_dir), n_hashes=N_HASHES, k=SHINGLE_K)
+    sig = minhash_signatures(documents(spark, sf_dir), n_hashes=N_HASHES, k=SHINGLE_K)
     return lsh_candidate_pairs(
         sig, n_hashes=N_HASHES, band_rows=BAND_ROWS, max_bucket_size=LSH_MAX_BUCKET
     )
@@ -1040,7 +1036,7 @@ def _simhash(spark, sf_dir):
     # relational twin with identical values (pinned by the oracle)
     from ocr_lib_spark.operators.dedup import simhash_bits
 
-    return simhash_bits(_docs(spark, sf_dir), n_bits=SIMHASH_BITS).select(
+    return simhash_bits(documents(spark, sf_dir), n_bits=SIMHASH_BITS).select(
         "doc_id", F.col("simhash").alias("simhash_low")
     )
 
@@ -1081,7 +1077,7 @@ SIMHASH_ND_MAX_BUCKET = 200
 def _simhash_near_dup(spark, sf_dir):
     from ocr_lib_spark.operators.dedup import simhash_bits, simhash_near_dup_pairs
 
-    fp = simhash_bits(_docs(spark, sf_dir), n_bits=SIMHASH_BITS)
+    fp = simhash_bits(documents(spark, sf_dir), n_bits=SIMHASH_BITS)
     return simhash_near_dup_pairs(
         fp,
         n_bits=SIMHASH_BITS,
@@ -1134,7 +1130,7 @@ def _q_simhash64_near_dup(spark, sf_dir):
     simhash_near_dup (band equi-join + hot-bucket cap)."""
     from ocr_lib_spark.operators.dedup import simhash_bits, simhash_near_dup_pairs
 
-    fp = simhash_bits(_docs(spark, sf_dir), n_bits=SIMHASH64_BITS)
+    fp = simhash_bits(documents(spark, sf_dir), n_bits=SIMHASH64_BITS)
     return simhash_near_dup_pairs(
         fp,
         n_bits=SIMHASH64_BITS,
@@ -1213,7 +1209,7 @@ def _token_fingerprints(spark, sf_dir):
         return rolling_hashes_pandas(texts, k=8)
 
     return (
-        spread_small(_docs(spark, sf_dir))
+        spread_small(documents(spark, sf_dir))
         .select(
             "doc_id",
             token_count("text").alias("ws_tokens"),
@@ -1276,7 +1272,7 @@ def _near_dup_verified(spark, sf_dir):
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sig = minhash_signatures(d, n_hashes=N_HASHES, k=SHINGLE_K)
     cand = lsh_candidate_pairs(
         sig,
@@ -1409,7 +1405,7 @@ def _containment_dedup(spark, sf_dir):
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sig = minhash_signatures(d, n_hashes=N_HASHES, k=SHINGLE_K)
     cand = lsh_candidate_pairs(
         sig,
@@ -1552,7 +1548,7 @@ def _udocs(spark, sf_dir):
         F.lit("Σπ—"),
         F.regexp_replace(F.regexp_replace(F.col("text"), "e", "é"), "a", "→"),
     )
-    return _docs(spark, sf_dir).select("doc_id", u.alias("text"))
+    return documents(spark, sf_dir).select("doc_id", u.alias("text"))
 
 
 def _unicode_wrap(oracle: str) -> str:
@@ -1690,7 +1686,7 @@ def _training_mix(spark, sf_dir):
     # packing's bpe_token_count would run on a small single-row-group
     # scan's ONE task (no-op at real corpus sizes; the pack window
     # re-shuffles by shard, so the output is partitioning-invariant)
-    docs = spread_small(_docs(spark, sf_dir))
+    docs = spread_small(documents(spark, sf_dir))
     drop = (
         _near_dup_clusters(spark, sf_dir)
         .where(F.col("doc_id") != F.col("keep_id"))
@@ -1862,7 +1858,7 @@ def pack_tokens(
 def _token_packing(spark, sf_dir):
     # pinned shard count under the driver gate (the static oracle SQL
     # must know it); the operator default is layout-scaled
-    return pack_tokens(_docs(spark, sf_dir), budget=PACK_BUDGET, shards=PACK_SHARDS)
+    return pack_tokens(documents(spark, sf_dir), budget=PACK_BUDGET, shards=PACK_SHARDS)
 
 
 def _token_packing_oracle() -> str:
@@ -1901,7 +1897,7 @@ def _stratified_sample(spark, sf_dir):
     # spread: lang_id + md5 bucket per row, zero-shuffle map — its
     # parallelism equals the scan split count (one working task on a
     # small single-row-group parquet; no-op at scale)
-    d = spread_small(_docs(spark, sf_dir)).select(
+    d = spread_small(documents(spark, sf_dir)).select(
         "doc_id",
         lang_id("text").alias("lang"),
         hex_bucket(F.col("text"), 1000).cast("int").alias("h"),
@@ -1988,7 +1984,7 @@ def _toks_nonempty(spark, sf_dir):
     # spread_small round-robins ONLY a small under-split scan so the
     # explode runs on every core (no-op at real corpus sizes)
     return (
-        spread_small(_docs(spark, sf_dir))
+        spread_small(documents(spark, sf_dir))
         .select(
             "doc_id",
             F.explode(F.split(F.trim(F.expr(hostile)), r"\s+")).alias("tok"),
@@ -2131,7 +2127,7 @@ def _source_mix(spark, sf_dir):
     one combinable groupBy over a bounded (source × lang) key space;
     the corpus total joins back as a broadcast single row; integer
     basis points by floor division."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "doc_id",
         "source",
         "lang",

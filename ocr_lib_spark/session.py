@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ocr_lib_spark.partitioning import SCAN_WAVES
+
 
 def _pin_blas_threads() -> None:
     """Pin per-process BLAS/OpenMP pools to one thread.
@@ -51,6 +53,9 @@ def get_spark(
       60-70%% sys time). ``-Xms == -Xmx`` + ``AlwaysPreTouch`` keeps the
       steady state out of the kernel; on a real cluster this is the
       standard executor sizing rule (fixed heap per executor).
+
+    ``extra`` is applied last, so it overrides any conf set here for one
+    session (e.g. a smaller ``spark.sql.execution.arrow.maxRecordsPerBatch``).
     """
     _pin_blas_threads()
     if cores is None:
@@ -79,31 +84,19 @@ def get_spark(
         # gains proportionally more) and bounds in-flight batch memory
         # to ~32 MB per worker — safe at local[32] and per-executor-core
         # on a cluster
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "32000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32000")
         .config("spark.driver.memory", driver_memory)
-        # Pre-size scan splits to >= SPARK_GRAFT_SCAN_WAVES (default 8)
-        # even waves per core (VERDICT r7 item 3): with the default
-        # (minPartitionNum = parallelism) a medium input lands in the
-        # awkward zone — e.g. a 317 MB corpus read at local[2] packed
-        # into 5 uneven splits = 2.5 task waves with a half-idle tail,
-        # and 1.3 GB at local[8] into 19 skewed splits (max/median task
-        # 17.2s/13.0s; profiled via tools/profile_auto.py). Asking the
-        # scan for waves*cores splits makes them ~equal by construction
-        # (bytesPerCore sizing) with NO exchange — the cluster-scale
-        # analog is sizing maxPartitionBytes off the table census
-        # before a big read. Same-session A/B at 4 vs 8 waves: level-2
-        # 201k->211k turns/s, level-8 731k->780k, last-stage task-time
-        # quantiles [1671..2160]ms vs [3988..12528]ms unsized — finer
-        # even splits shrink the straggler wave tail faster than the
-        # per-task fixed cost grows (tasks stay ~1.8s at bench scale;
-        # at 100 TB they are minutes, so 8 waves is pure margin).
-        .config(
-            "spark.sql.files.minPartitionNum",
-            str(int(os.environ.get("SPARK_GRAFT_SCAN_WAVES", "8")) * cores),
-        )
+        # Pre-size scan splits to >= SCAN_WAVES even waves per core
+        # (VERDICT r7 item 3): with the default (minPartitionNum =
+        # parallelism) a medium input lands in the awkward zone — e.g. a
+        # 317 MB corpus read at local[2] packed into 5 uneven splits =
+        # 2.5 task waves with a half-idle tail, and 1.3 GB at local[8]
+        # into 19 skewed splits (max/median task 17.2s/13.0s; profiled
+        # via tools/profile_auto.py). Asking the scan for waves*cores
+        # splits makes them ~equal by construction (bytesPerCore sizing)
+        # with NO exchange — the cluster-scale analog is sizing
+        # maxPartitionBytes off the table census before a big read.
+        .config("spark.sql.files.minPartitionNum", str(SCAN_WAVES * cores))
         # File-open cost charged per file when packing scan splits. The
         # 4 MB default models remote-storage open latency; it also FLOORS
         # the split size, so a small-but-CPU-dense scan (e.g. a 2.6 MB
@@ -114,11 +107,9 @@ def get_spark(
         # minPartitionNum's bytesPerCore sizing actually split small
         # inputs. Scale-inert: once bytesPerCore exceeds 256 KB (any
         # real corpus), splits are sized by bytesPerCore/maxPartitionBytes
-        # exactly as before; on object storage keep the 4 MB default.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(256 * 1024)),
-        )
+        # exactly as before; on object storage pass the 4 MB default
+        # back through ``extra``.
+        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -835,14 +835,18 @@ def test_vectorized_shingling_exact_vs_python_sets():
         assert na[i] == len(sx) and nb[i] == len(sy), (x, y)
 
 
-def test_spread_small_is_scale_adaptive(spark):
+def test_spread_small_is_scale_adaptive(spark, monkeypatch):
     """partitioning.spread_small (round 9): fans a small input out to
     the capped target, leaves a frame with a large size estimate
-    untouched (the 100 TB no-op contract), and never changes rows."""
+    untouched (the 100 TB no-op contract), and never changes rows.
+    extract_turns' "auto" branch asks the same question: an under-split
+    tiny input spreads to the same cap, an under-split input with a
+    large size estimate to full defaultParallelism."""
     from pyspark.sql import functions as F
 
     from ocr_lib_spark import partitioning
-    from ocr_lib_spark.partitioning import spread_small
+    from ocr_lib_spark.partitioning import plan_size_bytes, spread_small
+    from ocr_lib_spark.pipeline import extract_turns
 
     df = spark.range(1000).select(
         F.col("id"), F.concat(F.lit("doc-"), F.col("id")).alias("text")
@@ -855,3 +859,54 @@ def test_spread_small_is_scale_adaptive(spark):
     # big estimate (join-inflated, like a candidate self-join) -> unchanged
     big = df.alias("a").crossJoin(df.alias("b").select(F.col("id").alias("id2")))
     assert spread_small(big) is big
+
+    # a cap below defaultParallelism, so "spread to the cap" and "full
+    # p-way spread" are different widths
+    monkeypatch.setattr(partitioning, "SPREAD_MAX_PARTITIONS", 3)
+    full = spark.sparkContext.defaultParallelism
+    assert full > 3
+
+    def turns(n):
+        return spark.range(n).select(
+            F.concat(F.lit("c"), F.col("id") % 7).alias("conv_id"),
+            F.col("id").alias("turn_idx"),
+            F.lit("user").alias("role"),
+            F.concat(F.lit("turn "), F.col("id")).alias("text"),
+        )
+
+    tiny = turns(200).coalesce(1)
+    assert spread_small(tiny).rdd.getNumPartitions() == 3
+    assert extract_turns(tiny).rdd.getNumPartitions() == 3
+
+    wide = (
+        turns(200)
+        .crossJoin(spark.range(1000).withColumnRenamed("id", "k"))
+        .drop("k")
+        .coalesce(1)
+    )
+    assert plan_size_bytes(wide) >= 3 * partitioning.SPREAD_BYTES_PER_TASK
+    assert spread_small(wide) is wide
+    assert extract_turns(wide).rdd.getNumPartitions() == full
+
+
+def test_package_reads_no_environment_knobs():
+    """Stage width and session confs are constants (partitioning.py) or
+    per-session ``get_spark(extra=...)`` values. The only environment
+    reads left in the package are the deployment core count and the
+    BLAS thread pin."""
+    import pathlib
+    import re
+
+    import ocr_lib_spark
+
+    root = pathlib.Path(ocr_lib_spark.__file__).parent
+    reads = sorted(
+        (str(path.relative_to(root)), line.strip())
+        for path in root.rglob("*.py")
+        for line in path.read_text().splitlines()
+        if re.search(r"\b(environ|getenv|putenv)\b", line)
+    )
+    assert reads == [
+        ("session.py", 'cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)'),
+        ("session.py", 'os.environ.setdefault(var, "1")'),
+    ]

@@ -1,18 +1,17 @@
 """Small-query drift probe (BENCH/BASELINE.md round-4 watchlist closure):
 times the five watchlist queries in a fresh JVM under a named config.
 Usage: python tools/drift_probe.py warm32|warm10|cold32"""
-import json, os, sys, time
+import json, sys, time
 sys.path.insert(0, ".")
 
 mode = sys.argv[1]  # warm32 | warm10 | cold32
-if mode == "warm10":
-    os.environ["SPARK_GRAFT_ARROW_BATCH"] = "10000"
 import __spark_entry__ as entry_mod
 from pyspark.sql import functions as F
 from ocr_lib_spark.session import get_spark
 
 SF = "/root/testdata/sf0.1"
-spark = get_spark(app=f"drift-{mode}", cores=32, shuffle_partitions=32)
+extra = {"spark.sql.execution.arrow.maxRecordsPerBatch": "10000"} if mode == "warm10" else None
+spark = get_spark(app=f"drift-{mode}", cores=32, shuffle_partitions=32, extra=extra)
 if mode != "cold32":
     from ocr_lib_spark.pipeline import extract_turns
     from ocr_lib_spark.sources.synth import transcripts_from_documents
