@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_lib_spark.pipeline import assemble_conversations
+from test_driver_contract import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -145,6 +146,137 @@ def test_ivf_arrow_assignment_equals_relational_twin(spark):
         "query_id", "rank"
     ).toPandas()
     pd.testing.assert_frame_equal(fast, ref)
+
+
+@pytest.fixture(scope="module")
+def recall_topk_sf0001(spark):
+    """The fused recall pass at sf0.001 over the seed and the trained
+    codebook, nprobe 2 only."""
+    from ocr_lib_spark.plans import vectors as V
+
+    ev = V._vectors(spark, SF_DIR)
+    seed, queries = V._seed_and_queries(ev)
+    trained = V._train_codebook(ev, seed, V.IVF_TRAIN_ITERS)
+    books = [("seed", seed, [2]), ("trained", trained, [2])]
+    return V._recall_topk(ev, queries, books).toPandas()
+
+
+def test_recall_pass_truth_equals_brute_force(spark, recall_topk_sf0001):
+    """The fused pass's truth tag is ``brute_force_topk`` exactly: same
+    pairs, same ranks, bit-identical cosines."""
+    from ocr_lib_spark.operators.similarity import brute_force_topk
+    from ocr_lib_spark.plans.vectors import IVF_K, N_QUERIES, _emb
+
+    e = _emb(spark, SF_DIR)
+    want = brute_force_topk(e, e.where(F.col("vec_id") < N_QUERIES), k=IVF_K).toPandas()
+    got = recall_topk_sf0001
+    cols = ["query_id", "rank", "neighbor_id", "cosine"]
+    got = got[got.tag == "truth"][cols].sort_values(cols[:2]).reset_index(drop=True)
+    want = want[cols].sort_values(cols[:2]).reset_index(drop=True)
+    assert len(got) == N_QUERIES * IVF_K
+    assert got.astype({"rank": "int64"}).values.tolist() == want.astype(
+        {"rank": "int64"}
+    ).values.tolist()
+
+
+def test_recall_pass_variants_equal_ivf_topk(spark, recall_topk_sf0001):
+    """``seed|2`` and ``trained|2`` of the fused pass are the pairs and
+    ranks of the standalone ``ivf_topk`` / ``ivf_topk_trained`` plans."""
+    from ocr_lib_spark.plans.vectors import _ivf_topk
+
+    for tag, trained in (("seed|2", False), ("trained|2", True)):
+        got = recall_topk_sf0001
+        got = sorted(
+            map(tuple, got[got.tag == tag][["query_id", "rank", "neighbor_id"]].values.tolist())
+        )
+        want = sorted(
+            (r.query_id, r.rank, r.neighbor_id)
+            for r in _ivf_topk(spark, SF_DIR, trained=trained).collect()
+        )
+        assert got == want, tag
+
+
+def test_driver_summed_lloyd_partials_equal_lloyd_stats(spark):
+    """One Lloyd round as one job (partials summed on the driver) gives
+    exactly the rows of the shuffled ``_lloyd_stats`` frame, at two
+    codebooks (the seed and a trained one)."""
+    from ocr_lib_spark.plans import vectors as V
+
+    ev = V._vectors(spark, SF_DIR)
+    seed = V._seed_and_queries(ev)[0]
+    for cent in (seed, V._train_codebook(ev, seed, 1)):
+        want = sorted(tuple(r) for r in V._lloyd_stats(ev, cent).collect())
+        assert V._lloyd_round(ev, cent) == want
+
+
+def _hand_vectors(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, v array<double>")
+
+
+def test_recall_pass_rejects_null_element(spark):
+    from ocr_lib_spark.plans.vectors import _recall_topk
+
+    rows = [(0, [1.0, None, 0.0]), (1, [0.2, 1.0, 0.3]), (2, [0.5, 0.5, 0.5])]
+    ok = [(1, [0.2, 1.0, 0.3])]
+    with pytest.raises(Exception, match="ValueError: null/ragged embedding vectors"):
+        _recall_topk(_hand_vectors(spark, rows), ok, [("seed", ok, [1])]).collect()
+
+
+def test_recall_pass_nan_first_zero_norm_last_like_duckdb(spark):
+    """NaN cosines (a NaN element) rank FIRST, as in Spark's ``desc``
+    and DuckDB's ORDER BY ... DESC — numpy ``lexsort`` on ``-cos``
+    would rank them last. A zero-norm vector's 0/0 is NULL in DuckDB
+    (an error in Spark under ANSI), so it ranks LAST with a NULL
+    cosine. The fused truth equals the DuckDB ranking of the same
+    frame."""
+    import math
+
+    import duckdb
+
+    from ocr_lib_spark.plans.vectors import _DD_COS, _recall_topk
+
+    nan = float("nan")
+    rows = [
+        (0, [1.0, 0.5, 0.0]),
+        (1, [0.2, 1.0, 0.3]),
+        (2, [0.5, 0.5, 0.5]),
+        (3, [0.0, 0.0, 0.0]),
+        (4, [1.0, nan, 0.0]),
+        (5, [-1.0, 0.2, 0.1]),
+    ]
+    queries = [r for r in rows if r[0] < 2]
+    book = [r for r in rows if r[0] in (1, 2)]
+    # rows, not toPandas(): pandas would fold NULL and NaN together
+    got = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.cosine)
+        for r in _recall_topk(
+            _hand_vectors(spark, rows), queries, [("seed", book, [1])]
+        )
+        .where("tag = 'truth'")
+        .collect()
+    )
+
+    vals = ", ".join(
+        "(%d, [%s])" % (i, ", ".join("'%r'::DOUBLE" % x for x in v)) for i, v in rows
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE emb AS SELECT * FROM (VALUES {vals}) t(vec_id, v)")
+    cos = _DD_COS.format(a="q.v", b="c.v")
+    want = con.execute(
+        f"""SELECT q.vec_id, ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                ORDER BY {cos} DESC, c.vec_id), c.vec_id, {cos}
+            FROM emb q JOIN emb c ON q.vec_id < 2 AND c.vec_id <> q.vec_id
+            ORDER BY 1, 2"""
+    ).fetchall()
+
+    def key(r):  # NaN != NaN: compare its repr
+        return tuple("nan" if isinstance(x, float) and math.isnan(x) else x for x in r)
+
+    assert [key(r) for r in got] == [key(r) for r in want]
+    for qid in (0, 1):
+        ranked = [r for r in got if r[0] == qid]
+        assert ranked[0][2] == 4 and math.isnan(ranked[0][3])
+        assert ranked[-1][2] == 3 and ranked[-1][3] is None
 
 
 def test_rolling_hash_codepoint_twins_non_ascii(spark):
