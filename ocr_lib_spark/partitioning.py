@@ -43,7 +43,9 @@ from pyspark.sql import DataFrame
 #: [3988..12528]ms unsized — finer even splits shrink the straggler
 #: wave tail faster than the per-task fixed cost grows (tasks stay
 #: ~1.8s at bench scale; at 100 TB they are minutes, so 8 waves is pure
-#: margin).
+#: margin). The per-task fixed cost here was measured while every
+#: python task still re-parsed SPARK_HOME's zips at start (~0.2 s, see
+#: ``pydaemon``); re-tuning against the cheaper task is its own claim.
 SCAN_WAVES = 8
 
 #: per-task byte budget under which an input is considered "too small
@@ -60,6 +62,9 @@ SPREAD_BYTES_PER_TASK = 4 << 20
 #: the partition count, multiplying the 32-task tax). 8 is the
 #: local-mode sweet spot; on a cluster the spread only fires for
 #: similarly tiny inputs, where the same logic holds per executor.
+#: The python-roundtrip cost was measured with the per-task zip re-read
+#: that ``pydaemon`` removes; the cap is left as measured until it is
+#: re-tuned under its own claim.
 SPREAD_MAX_PARTITIONS = 8
 
 

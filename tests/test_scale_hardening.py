@@ -1042,3 +1042,71 @@ def test_package_reads_no_environment_knobs():
         ("session.py", 'cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)'),
         ("session.py", 'os.environ.setdefault(var, "1")'),
     ]
+
+
+def _in_every_task(spark, fn):
+    """``fn()``'s value from one task per default-parallelism slot."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    return sc.parallelize(range(n), n).mapPartitions(lambda _: [fn()]).collect()
+
+
+def test_task_start_does_not_reparse_spark_zips(spark):
+    """Every task start calls ``importlib.invalidate_caches()``; under the
+    ``pydaemon`` daemon it no longer re-parses the pyspark/py4j/spark-core
+    archives (~0.15 s of CPU per task when it does)."""
+
+    def invalidate_cpu_s():
+        import importlib
+        import time
+
+        t = time.process_time()
+        importlib.invalidate_caches()
+        return time.process_time() - t
+
+    _in_every_task(spark, invalidate_cpu_s)  # workers up and importers cached
+    assert max(_in_every_task(spark, invalidate_cpu_s)) < 0.005
+
+
+def test_daemon_archives_have_only_sealed_importers(spark):
+    def importers():
+        import importlib.util
+        import sys
+        import zipimport
+
+        from pyspark.files import SparkFiles
+
+        importlib.util.find_spec("ocr_lib_spark_no_such_module")  # an importer per path entry
+        root = SparkFiles.getRootDirectory()
+        return sorted(
+            {
+                (type(i).__name__, i.archive)
+                for i in sys.path_importer_cache.values()
+                if isinstance(i, zipimport.zipimporter) and not i.archive.startswith(root)
+            }
+        )
+
+    for found in _in_every_task(spark, importers):
+        assert any(archive.endswith("pyspark.zip") for _, archive in found), found
+        assert {kind for kind, _ in found} == {"_SealedZipImporter"}, found
+
+
+def test_pyfile_added_after_workers_start_imports(spark, tmp_path):
+    import uuid
+    import zipfile
+
+    _in_every_task(spark, lambda: None)
+    name = f"late_pyfile_{uuid.uuid4().hex}"
+    archive = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{name}.py", "VALUE = 42\n")
+    spark.sparkContext.addPyFile(str(archive))
+
+    def load():
+        import importlib
+        import sys
+
+        module = importlib.import_module(name)
+        return module.VALUE, type(sys.path_importer_cache[module.__file__.rsplit("/", 1)[0]]).__name__
+
+    assert set(_in_every_task(spark, load)) == {(42, "zipimporter")}

@@ -17,6 +17,13 @@ On a real cluster the same command with ``--master yarn``/k8s and
 must pin BLAS pools exactly like the harness does
 (``spark.executorEnv.OMP_NUM_THREADS=1`` etc., see
 ``session._pin_blas_threads``).
+
+This session does not set ``spark.python.daemon.module``, which
+``get_spark`` sets to ``ocr_lib_spark.pydaemon``: the python daemon
+starts before ``--py-files`` are added, so with the conf every Python
+task fails with ``No module named 'ocr_lib_spark'`` (measured at
+``--master local[2]``). Using it on a cluster would need the package
+installed on the executors, which this repository does not test.
 """
 
 from __future__ import annotations
