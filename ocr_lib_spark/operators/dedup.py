@@ -219,9 +219,13 @@ def lsh_candidate_pairs(
         # corpus in one bucket, measured) would blow that task up first.
         # groupBy partial-aggregates map-side; the semi join never
         # multiplies rows (heavy keys simply probe and drop). The
-        # banding frame is lazily checkpointed first: the size agg, the
-        # semi probe, and the downstream self-join sides all read the
-        # materialized narrow blocks, so the signature UDF runs ONCE
+        # banding frame is checkpointed first, and NOT lazily: under AQE
+        # localCheckpoint(eager=False) runs the plan's shuffle stages
+        # (the minhash spread exchange) as their own job while the query
+        # is built; only the final stage waits for the first action. The
+        # size agg, the semi probe, and the downstream self-join sides
+        # all read the materialized narrow blocks, so the signature UDF
+        # runs ONCE
         # (without it, the diverging exchanges defeat Spark's
         # exchange-reuse and the kernel runs per branch — measured 2x).
         # On a real cluster point sparkContext.setCheckpointDir at
@@ -470,7 +474,10 @@ def simhash_near_dup_pairs(
         id_col, "h", F.col("s.band_idx").alias("band_idx"), F.col("s.band_val").alias("band_val")
     )
     if max_bucket_size is not None:
-        allb = allb.localCheckpoint(eager=False)  # see lsh_candidate_pairs
+        # checkpointed so the kernel upstream runs once; under AQE this runs
+        # the plan's shuffle stages now, while the query is built (see
+        # lsh_candidate_pairs)
+        allb = allb.localCheckpoint(eager=False)
         kept = (
             allb.groupBy("band_idx", "band_val")
             .agg(F.count("*").alias("__bsz"))
@@ -530,9 +537,17 @@ def near_dup_clusters(
     defensive cap and overrunning it raises instead of silently
     emitting a half-converged labeling.
     """
-    e = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
+    # both orientations from ONE pass over ``pairs``: a union of ``e``
+    # with its swap would copy the whole upstream plan (e.g. the
+    # LSH+verify kernel) into a second branch and run it twice
+    a, b = F.col(id_a), F.col(id_b)
     edges = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
+        pairs.select(
+            F.explode(
+                F.array(F.struct(a.alias("s"), b.alias("d")), F.struct(b.alias("s"), a.alias("d")))
+            ).alias("e")
+        )
+        .select("e.s", "e.d")
         .distinct()
         # NOT lazy under AQE: eager=False still runs every shuffle stage
         # of the plan at this call (near_dup_clusters at sf0.1, 4 cores:

@@ -46,6 +46,13 @@ from pyspark.sql import DataFrame
 #: margin). The per-task fixed cost here was measured while every
 #: python task still re-parsed SPARK_HOME's zips at start (~0.2 s, see
 #: ``pydaemon``); re-tuning against the cheaper task is its own claim.
+#: The waves only even out work while every split is at least a row
+#: group: parquet hands each row group to the one split holding its
+#: midpoint, so the other splits of the file read no rows yet still run
+#: a task (a python round trip in a kernel stage). Spark's default
+#: 4 MB openCostInBytes floors split size, which keeps splits that big
+#: for the single-row-group files of the fixtures and the benchmark; a
+#: single-row-group file larger than the floor still yields empty splits.
 SCAN_WAVES = 8
 
 #: per-task byte budget under which an input is considered "too small

@@ -65,6 +65,8 @@ def get_spark(
       from the worker's working directory or ``PYTHONPATH`` (local mode
       from the repository root, or an install on the executors); a
       ``--py-files``-only deployment must leave it out.
+    - Scan splits: ``minPartitionNum = SCAN_WAVES x cores`` over Spark's
+      default 4 MB ``openCostInBytes`` split floor (see ``SCAN_WAVES``).
 
     ``extra`` is applied last, so it overrides any conf set here for one
     session (e.g. a smaller ``spark.sql.execution.arrow.maxRecordsPerBatch``).
@@ -110,19 +112,6 @@ def get_spark(
         # with NO exchange — the cluster-scale analog is sizing
         # maxPartitionBytes off the table census before a big read.
         .config("spark.sql.files.minPartitionNum", str(SCAN_WAVES * cores))
-        # File-open cost charged per file when packing scan splits. The
-        # 4 MB default models remote-storage open latency; it also FLOORS
-        # the split size, so a small-but-CPU-dense scan (e.g. a 2.6 MB
-        # parquet of 150k rows feeding an explode+join stage) packs into
-        # ONE task while every other core idles — measured 399 ms
-        # single-task stages in the r9 battery profile. Local NVMe +
-        # page cache make the true open cost ~none; 256 KB lets
-        # minPartitionNum's bytesPerCore sizing actually split small
-        # inputs. Scale-inert: once bytesPerCore exceeds 256 KB (any
-        # real corpus), splits are sized by bytesPerCore/maxPartitionBytes
-        # exactly as before; on object storage pass the 4 MB default
-        # back through ``extra``.
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -407,6 +407,28 @@ def test_near_dup_clusters_converges_on_chain_star_clique(spark):
     ]
 
 
+def test_near_dup_clusters_evaluates_pairs_once(spark):
+    """Both edge orientations come from one pass over the pairs: the
+    upstream (a Python UDF here, the LSH+verify kernel in the queries)
+    is evaluated once per pair row, not once per orientation."""
+    from ocr_lib_spark.operators.dedup import near_dup_clusters
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        seen.add(1)
+        return x
+
+    pairs = [(i, i + 1) for i in range(0, 60, 2)] + [(1, 3), (3, 5)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long").select(
+        counted("id_a").alias("id_a"), "id_b"
+    )
+    got = near_dup_clusters(df).toPandas()
+    assert len(got) == 60
+    assert seen.value == len(pairs)
+
+
 def test_values_df_literal_plan_roundtrip(spark):
     """_values_df builds metadata tables as LocalRelation literals (no
     python-RDD stage): exact round-trip for strings needing escaping,
@@ -1019,6 +1041,47 @@ def test_spread_small_is_scale_adaptive(spark, monkeypatch):
     assert plan_size_bytes(wide) >= 3 * partitioning.SPREAD_BYTES_PER_TASK
     assert spread_small(wide) is wide
     assert extract_turns(wide).rdd.getNumPartitions() == full
+
+
+def test_single_row_group_files_scan_without_empty_splits(spark, tmp_path):
+    """Parquet hands a row group to the one split holding its midpoint,
+    so a file cut into several splits leaves all but one empty — each
+    still a task, and a python round trip in a kernel stage. One
+    single-row-group file of 1-4 MB per core must scan as one split per
+    file, every split with rows, and extract_turns keeps that width with
+    no exchange."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_lib_spark.pipeline import extract_turns
+
+    n = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(0)
+    rows = 1500
+    for f in range(n):
+        table = pa.table(
+            {
+                "conv_id": [f"c{f}-{i % 50}" for i in range(rows)],
+                "turn_idx": list(range(rows)),
+                "role": ["user"] * rows,
+                "text": [rng.bytes(500).hex() for _ in range(rows)],
+            }
+        )
+        path = tmp_path / f"part-{f}.parquet"
+        pq.write_table(table, path, row_group_size=rows)
+        assert pq.ParquetFile(path).metadata.num_row_groups == 1
+        assert 1 << 20 <= path.stat().st_size <= 4 << 20
+
+    df = spark.read.parquet(str(tmp_path))
+    per_split = df.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+    assert len(per_split) == n, per_split
+    assert min(per_split) > 0, per_split
+    assert sum(per_split) == n * rows
+
+    out = extract_turns(df)
+    assert out.rdd.getNumPartitions() == n
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_package_reads_no_environment_knobs():
