@@ -515,33 +515,67 @@ def near_dup_clusters(
 
     The corpus-scale recast of the reference's flood fill
     (find-sign-dots-fn core.clj:574-638: grow a component, consuming
-    members from the remaining set): a local worklist becomes
-    bounded-round MIN-LABEL PROPAGATION over hash-partitioned joins —
-    every doc starts labeled min(own id, min neighbor id); each round a doc adopts
-    the minimum label among itself and its neighbors, then POINTER-JUMPS
-    to its label's label (halving label-chain depth, so convergence is
-    O(log diameter) rounds, not O(diameter) — the classic
-    Hash-to-Min/pointer-doubling CC trick). All per-round work is
-    joins + groupBy on the id key (parallel, map-side combinable); the
-    driver loop is over ROUNDS, and per-round state is truncated with
-    an eager localCheckpoint so plan lineage stays flat (use a reliable
-    checkpoint dir on a real cluster). Convergence is detected by
-    counting CHANGED labels (each id's previous label rides the merge
-    aggregation as a carried column, so the comparison needs no extra
-    join) — overflow-free at any id magnitude, unlike a
-    SUM(label) fixpoint which can exceed int64 at 10^9+ docs with
-    large ids (failing under ANSI mode or wrapping silently).
+    members from the remaining set), as the large-star/small-star
+    reduction of Kiveris et al. (SoCC'14): components are labeled inside
+    each partition first, and only what straddles partitions is
+    propagated.
 
-    Near-dup graphs are overwhelmingly tiny cliques/chains (dup
-    clusters), so real round counts are 1-3; ``max_rounds`` is a
-    defensive cap and overrunning it raises instead of silently
-    emitting a half-converged labeling.
+    1. Both edge orientations come from one pass over ``pairs``,
+       deduplicated by one ``distinct()`` exchange.
+    2. One ``mapInArrow`` kernel (``_union_find_partition``) runs
+       union-find with iterative path compression over each partition's
+       edges. Roots are linked smaller-id-wins, so every root is its
+       local component's minimum id. It emits (doc_id, cluster_id,
+       n_members) for every node of the partition. The output is
+       localCheckpointed once: under AQE that runs the upstream shuffle
+       stages now (the LSH+verify pipeline and the edge exchange), so
+       they run once; only the kernel's own stage waits for the action.
+    3. The checkpoint's partition count is read, which costs no job.
+       With ONE partition the kernel saw every edge, so its labeling is
+       global and exact: each local component is a whole component, its
+       root is the component's MIN(reachable id) — the oracle's meaning
+       — and its size is n_members. It is returned as-is, with no
+       driver round, count or size join. That is every measured case
+       (sf0.001-sf0.1, local[4] and local[16]): AQE coalesces the edge
+       exchange to one partition while the edges fit under its minimum
+       partition size.
+    4. With more partitions (coalescing off, or edges past AQE's size
+       floor) a node can sit in several partitions with a different
+       local root in each: ``_merge_local_components`` links each
+       node's roots into a contracted graph over local roots only and
+       runs bounded min-label propagation with hooking and pointer
+       jumping over it (``_propagate_min_labels``: O(log n) rounds,
+       at most ``max_rounds``, RuntimeError on overrun — never a
+       half-converged labeling), then recounts n_members.
+
+    A null endpoint raises ``ValueError``: a null id has no place in a
+    min-id labeling.
     """
-    # both orientations from ONE pass over ``pairs``: a union of ``e``
-    # with its swap would copy the whole upstream plan (e.g. the
-    # LSH+verify kernel) into a second branch and run it twice
+    local = _label_partitions(pairs, id_a, id_b)
+    if local.rdd.getNumPartitions() <= 1:
+        return local.select(
+            "doc_id", "cluster_id", F.col("cluster_id").alias("keep_id"), "n_members"
+        )
+    return _merge_local_components(local, max_rounds)
+
+
+def _label_partitions(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Checkpointed per-partition labeling (doc_id, cluster_id,
+    n_members) of the pair graph's edges; global iff one partition."""
+    edges = _both_orientations(pairs, id_a, id_b)
+    id_type = edges.schema["s"].dataType.simpleString()
+    return edges.mapInArrow(
+        _union_find_partition, f"doc_id {id_type}, cluster_id {id_type}, n_members long"
+    ).localCheckpoint(eager=False)
+
+
+def _both_orientations(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Distinct (s, d) edges in both orientations, from ONE pass over
+    ``pairs``: a union of the pairs with their swap would copy the whole
+    upstream plan (e.g. the LSH+verify kernel) into a second branch and
+    run it twice."""
     a, b = F.col(id_a), F.col(id_b)
-    edges = (
+    return (
         pairs.select(
             F.explode(
                 F.array(F.struct(a.alias("s"), b.alias("d")), F.struct(b.alias("s"), a.alias("d")))
@@ -549,42 +583,141 @@ def near_dup_clusters(
         )
         .select("e.s", "e.d")
         .distinct()
-        # NOT lazy under AQE: eager=False still runs every shuffle stage
-        # of the plan at this call (near_dup_clusters at sf0.1, 4 cores:
-        # 7 jobs, 1.6-2.0 s warm); only the final stage waits for the
-        # first round's count. The checkpoint guarantees the upstream
-        # (e.g. the whole LSH+verify pipeline) runs ONCE, not once per
-        # round
-        .localCheckpoint(eager=False)
     )
+
+
+def _union_find_partition(batches):
+    """``mapInArrow`` kernel: connected components of one partition's
+    (s, d) edges → one (doc_id, cluster_id, n_members) row per node,
+    cluster_id the local component's minimum id. Fails fast on a null
+    endpoint instead of labeling it arbitrarily."""
+    import numpy as np
+    import pyarrow as pa
+
+    src, dst, typ = [], [], None
+    for batch in batches:
+        s, d = batch.column("s"), batch.column("d")
+        if s.null_count or d.null_count:
+            raise ValueError("null near-dup pair endpoint; every pair needs two non-null ids")
+        typ = s.type
+        src.append(s.to_numpy(zero_copy_only=False))
+        dst.append(d.to_numpy(zero_copy_only=False))
+    if typ is None:  # empty partition
+        return
+    ends = np.concatenate(src + dst)
+    # dense node indices in ascending id order: the smaller index is
+    # the smaller id, so smaller-index-wins linking keeps each root its
+    # component's minimum id
+    ids, node = np.unique(ends, return_inverse=True)
+    parent = list(range(len(ids)))
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    half = len(ends) // 2
+    for x, y in zip(node[:half].tolist(), node[half:].tolist()):
+        rx, ry = find(x), find(y)
+        if rx < ry:
+            parent[ry] = rx
+        elif ry < rx:
+            parent[rx] = ry
+    roots = np.fromiter(map(find, range(len(ids))), dtype=np.int64, count=len(ids))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, typ), pa.array(ids[roots], typ), pa.array(np.bincount(roots)[roots])],
+        names=["doc_id", "cluster_id", "n_members"],
+    )
+
+
+def _merge_local_components(local: DataFrame, max_rounds: int) -> DataFrame:
+    """Global labeling from per-partition labelings (near_dup_clusters'
+    more-than-one-partition path). A node seen in k partitions has up
+    to k local roots, all in its component; linking each to the node's
+    least root contracts the straddling nodes into root-to-root edges,
+    so propagation runs over local roots only. The global minimum of a
+    component is the least of its local roots, hence its label."""
+    per_node = local.groupBy("doc_id").agg(
+        F.min("cluster_id").alias("least"), F.collect_set("cluster_id").alias("roots")
+    )
+    links = per_node.select(F.explode("roots").alias("root"), "least").where(
+        F.col("root") != F.col("least")
+    )
+    # checkpointed so the groupBy upstream runs once, not once per round
+    labels = _propagate_min_labels(
+        _both_orientations(links, "root", "least").localCheckpoint(eager=False), max_rounds
+    )
+    # a root outside the contracted graph labels its whole component
+    final = per_node.join(labels.withColumnRenamed("id", "least"), "least", "left").select(
+        "doc_id", F.coalesce("lbl", "least").alias("lbl")
+    )
+    # member counts via groupBy + join, NOT a count-over-window: a
+    # window partitioned by cluster label materializes each cluster in
+    # ONE task, and a degenerate giant cluster (boilerplate-heavy
+    # corpus) is exactly when that breaks. The groupBy partial-
+    # aggregates map-side; the join back is AQE-skew-splittable.
+    sizes = final.groupBy("lbl").agg(F.count("*").alias("n_members"))
+    return final.join(sizes, "lbl").select(
+        "doc_id",
+        F.col("lbl").alias("cluster_id"),
+        F.col("lbl").alias("keep_id"),
+        "n_members",
+    )
+
+
+def _propagate_min_labels(edges: DataFrame, max_rounds: int) -> DataFrame:
+    """Bounded-round MIN-LABEL PROPAGATION over checkpointed
+    both-orientation ``edges`` (s, d) → (id, lbl), lbl the component's
+    minimum id. Labels are node ids, so they form a pointer forest.
+    Every node starts labeled min(own id, min neighbor id); each round,
+    for every edge (s, d), d AND d's label node take lbl(s) if smaller
+    (propagate + HOOK), then every node POINTER-JUMPS to its label's
+    label — Shiloach-Vishkin style hooking and shortcutting. The hook
+    is what makes this O(log n) rounds: without it a label node never
+    learns what its followers saw, and a chain of shuffled ids needs
+    O(diameter) rounds (replaying the rounds in plain Python on a
+    2,000-node chain: no fixpoint in 500 rounds without the hook, 10
+    rounds with it). All per-round work is joins + groupBy on the id key; per-round
+    state is checkpointed (``_round_checkpoint``) so plan lineage stays
+    flat. Convergence is detected by counting CHANGED labels —
+    overflow-free at any id magnitude, unlike a SUM(label) fixpoint.
+    Overrunning ``max_rounds`` raises instead of silently emitting a
+    half-converged labeling."""
     # seed labels with min(id, min neighbor) — the first propagation
     # round comes free with the seeding scan
     labels = (
         edges.groupBy("s")
         .agg(F.least(F.min("d"), F.col("s")).alias("lbl"))
         .select(F.col("s").alias("id"), "lbl")
-        # runs the groupBy's shuffle stage now (see above)
-        .localCheckpoint(eager=False)
     )
+    # under AQE this runs the groupBy's shuffle stage at this call
+    labels = _round_checkpoint(labels)
     lbl_type = dict(labels.dtypes)["lbl"]
     for _ in range(max_rounds):
-        prop = edges.join(labels.withColumnRenamed("id", "s"), "s").select(
-            F.col("d").alias("id"), "lbl"
-        )
+        prop = edges.join(labels.withColumnRenamed("id", "s"), "s")
+        # the hook: d's label node hears lbl(s) too
+        hook = prop.join(
+            labels.select(F.col("id").alias("d"), F.col("lbl").alias("root")), "d"
+        ).select(F.col("root").alias("id"), "lbl")
         # carry each id's previous label THROUGH the merge aggregation
         # (prev is non-null on exactly the one labels-row per id — every
-        # prop id is an edge destination, hence also a seeded source —
-        # so max(prev) recovers it) instead of re-joining labels after
-        # the pointer jump: one shuffle join fewer per round, identical
-        # convergence test.
+        # prop id is an edge destination, hence also a seeded source,
+        # and every hook id is a label, hence a node — so max(prev)
+        # recovers it) instead of re-joining labels after the pointer
+        # jump: one shuffle join fewer per round, identical convergence
+        # test.
+        no_prev = F.lit(None).cast(lbl_type).alias("prev")
         tagged = labels.select("id", "lbl", F.col("lbl").alias("prev")).unionByName(
-            prop.select("id", "lbl", F.lit(None).cast(lbl_type).alias("prev"))
-        )
-        merged = tagged.groupBy("id").agg(
-            F.min("lbl").alias("lbl"), F.max("prev").alias("prev_lbl")
+            prop.select(F.col("d").alias("id"), "lbl", no_prev)
+        ).unionByName(hook.select("id", "lbl", no_prev))
         # runs the groupBy's shuffle stages at this call; the count
         # below runs only the final stage
-        ).localCheckpoint(eager=False)
+        merged = _round_checkpoint(
+            tagged.groupBy("id").agg(F.min("lbl").alias("lbl"), F.max("prev").alias("prev_lbl"))
+        )
         # changed-label count BEFORE the pointer jump: labels only ever
         # decrease, so zero changed rows == propagation fixpoint, and at
         # the fixpoint every edge has equal endpoint labels (labels are
@@ -604,15 +737,18 @@ def near_dup_clusters(
         )
     else:
         raise RuntimeError(f"near_dup_clusters did not converge in {max_rounds} rounds")
-    # member counts via groupBy + join, NOT a count-over-window: a
-    # window partitioned by cluster label materializes each cluster in
-    # ONE task, and a degenerate giant cluster (boilerplate-heavy
-    # corpus) is exactly when that breaks. The groupBy partial-
-    # aggregates map-side; the join back is AQE-skew-splittable.
-    sizes = labels.groupBy("lbl").agg(F.count("*").alias("n_members"))
-    return labels.join(sizes, "lbl").select(
-        F.col("id").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        F.col("lbl").alias("keep_id"),
-        "n_members",
-    )
+    return labels
+
+
+def _round_checkpoint(df: DataFrame) -> DataFrame:
+    """localCheckpoint(eager=False) for loop state that drops the origin
+    plan's size estimate. A checkpoint keeps its origin's estimate, and
+    without CBO a join's estimate is the product of its sides', so a
+    loop that joins last round's checkpoint multiplies the estimate's
+    digit count every round; on a long chain's rounds the planner spent
+    minutes multiplying million-digit integers. Re-wrapping the checkpointed
+    rows as a new relation (JVM-side, no job, no Python) resets the
+    estimate to spark.sql.defaultSizeInBytes every round."""
+    ck = df.localCheckpoint(eager=False)._jdf
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(ck.javaRDD(), ck.schema()), spark)

@@ -2156,42 +2156,45 @@ def _bpe_chain_sql() -> str:
     """The unrolled BPE_STEPS-round CTE chain (census -> 3-aggregate
     argmax -> gaps-and-islands chosen positions -> list rebuild per
     round), shared by the loop and apply oracles; ends after the last
-    CTE, final SELECT supplied by the caller."""
+    CTE, final SELECT supplied by the caller. Every CTE is declared
+    MATERIALIZED: each round reads the previous round's CTEs more than
+    once, so DuckDB's inlining would multiply the work with every round
+    and the unrolled chain would not finish."""
     parts = [
         """
-WITH t0 AS (
+WITH t0 AS MATERIALIZED (
   SELECT doc_id, list_filter(string_split(trim(text), ' '), x -> x <> '') AS t
   FROM documents)"""
     ]
     for k in range(1, BPE_STEPS + 1):
         p = k - 1
         parts.append(f""",
-p{k} AS (
+p{k} AS MATERIALIZED (
   SELECT t[i+1] AS a, t[i+2] AS b
   FROM (SELECT t, unnest(range(len(t) - 1)) AS i FROM t{p} WHERE len(t) >= 2)),
-c{k} AS (SELECT a, b, COUNT(*)::BIGINT AS c FROM p{k} GROUP BY a, b),
-cm{k} AS (SELECT MAX(c) AS c_max FROM c{k}),
-am{k} AS (SELECT MIN(a) AS a_min FROM c{k}, cm{k} WHERE c = c_max),
-b{k} AS (
+c{k} AS MATERIALIZED (SELECT a, b, COUNT(*)::BIGINT AS c FROM p{k} GROUP BY a, b),
+cm{k} AS MATERIALIZED (SELECT MAX(c) AS c_max FROM c{k}),
+am{k} AS MATERIALIZED (SELECT MIN(a) AS a_min FROM c{k}, cm{k} WHERE c = c_max),
+b{k} AS MATERIALIZED (
   SELECT MIN(b) AS pair_b, MIN(a) AS pair_a, MAX(c) AS pair_count
   FROM c{k}, cm{k}, am{k} WHERE c = c_max AND a = a_min),
-dm{k} AS (
+dm{k} AS MATERIALIZED (
   SELECT doc_id, t,
          list_filter(range(len(t) - 1),
                      i -> t[i+1] = bb.pair_a AND t[i+2] = bb.pair_b) AS m
   FROM t{p}, b{k} bb),
-mp{k} AS (SELECT doc_id, unnest(m) AS pos FROM dm{k}),
-il{k} AS (
+mp{k} AS MATERIALIZED (SELECT doc_id, unnest(m) AS pos FROM dm{k}),
+il{k} AS MATERIALIZED (
   SELECT doc_id, pos,
          pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
   FROM mp{k}),
-ch{k} AS (
+ch{k} AS MATERIALIZED (
   SELECT doc_id, pos FROM (
     SELECT doc_id, pos,
            row_number() OVER (PARTITION BY doc_id, grp ORDER BY pos) AS rn
     FROM il{k}) WHERE rn % 2 = 1),
-cl{k} AS (SELECT doc_id, list(pos ORDER BY pos) AS ch FROM ch{k} GROUP BY doc_id),
-t{k} AS (
+cl{k} AS MATERIALIZED (SELECT doc_id, list(pos ORDER BY pos) AS ch FROM ch{k} GROUP BY doc_id),
+t{k} AS MATERIALIZED (
   SELECT dm.doc_id,
          CASE WHEN cl.ch IS NULL THEN dm.t ELSE
            flatten(list_transform(range(len(dm.t)), i ->
@@ -2200,7 +2203,7 @@ t{k} AS (
                   ELSE [dm.t[i+1]] END))
          END AS t
   FROM dm{k} dm LEFT JOIN cl{k} cl USING (doc_id)),
-s{k} AS (
+s{k} AS MATERIALIZED (
   SELECT {k}::INT AS step, bb.pair_a, bb.pair_b, bb.pair_count,
          mm.n_merges, nn.n_tokens_after
   FROM b{k} bb,

@@ -2316,7 +2316,7 @@ QUERIES = {
     "near_dup_clusters": QueryDef(
         _near_dup_clusters,
         _near_dup_clusters_oracle(),
-        "verified pairs -> transitive-closure canonical clusters (min-label propagation + pointer jumping; flood-fill recast, core.clj:574-638)",
+        "verified pairs -> transitive-closure canonical clusters (partition-local union-find, contracted-graph propagation past one partition; flood-fill recast, core.clj:574-638)",
     ),
     "training_mix": QueryDef(
         _training_mix,

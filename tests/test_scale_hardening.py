@@ -10,8 +10,12 @@
    oracle twins agree on non-ASCII text (ADVICE round 1).
 """
 
+import contextlib
+
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocr_lib_spark.pipeline import assemble_conversations
@@ -427,6 +431,137 @@ def test_near_dup_clusters_evaluates_pairs_once(spark):
     got = near_dup_clusters(df).toPandas()
     assert len(got) == 60
     assert seen.value == len(pairs)
+
+
+@contextlib.contextmanager
+def _edges_unmerged(spark):
+    """AQE coalesces a small edge exchange to one partition, so
+    near_dup_clusters labels it in one pass; with coalescing off the
+    edges keep spark.sql.shuffle.partitions partitions and the
+    contracted-graph fallback runs."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _bfs_components(pairs):
+    """Pure-Python reference: {doc_id: (min id, size)} per component."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for y in adj[todo.pop()] - comp:
+                comp.add(y)
+                todo.append(y)
+        for x in comp:
+            out[x] = (min(comp), len(comp))
+    return out
+
+
+def _assert_clusters(spark, pairs, max_rounds=50, fallback=False):
+    from ocr_lib_spark.operators.dedup import _label_partitions, near_dup_clusters
+
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    # the labeled frame near_dup_clusters branches on
+    n_parts = _label_partitions(df, "id_a", "id_b").rdd.getNumPartitions()
+    assert (n_parts > 1) if fallback else (n_parts == 1), n_parts
+    got = near_dup_clusters(df, max_rounds=max_rounds).toPandas()
+    want = _bfs_components(pairs)
+    assert len(got) == len(want)
+    for r in got.itertuples():
+        assert (r.cluster_id, r.n_members) == want[r.doc_id], r
+        assert r.keep_id == r.cluster_id
+
+
+def _shuffled_chain(n, seed):
+    import random
+
+    ids = random.Random(seed).sample(range(10_000, 10_000 + 10 * n), n)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
+def test_near_dup_clusters_fallback_joins_components_straddling_partitions(spark):
+    """With several edge partitions a component's edges land in
+    different partitions; nodes labeled in more than one partition link
+    the local roots, and the merged labeling is the global one."""
+    from ocr_lib_spark.operators.dedup import _label_partitions
+
+    pairs = (
+        [(i, i + 1) for i in range(100, 160)]  # chain
+        + [(7, 8), (8, 9), (7, 9)]  # clique
+        + [(1000, 2000)]  # pair
+        + [(3, 160), (3, 9)]  # bridges chain and clique into one
+    )
+    with _edges_unmerged(spark):
+        local = _label_partitions(
+            spark.createDataFrame(pairs, "id_a long, id_b long"), "id_a", "id_b"
+        )
+        straddling = local.groupBy("doc_id").count().where("count > 1").count()
+        assert straddling > 0
+        _assert_clusters(spark, pairs, fallback=True)
+
+
+def test_near_dup_clusters_long_shuffled_chain(spark):
+    """A 2,000-node chain whose ids are shuffled along it: the fallback's
+    contracted graph is itself a long chain of local roots, which the
+    hooked propagation labels in O(log n) rounds (plain min-label
+    propagation with pointer jumping needs O(diameter))."""
+    pairs = _shuffled_chain(2000, seed=3)
+    _assert_clusters(spark, pairs)
+    with _edges_unmerged(spark):
+        _assert_clusters(spark, pairs, fallback=True)
+
+
+def test_near_dup_clusters_giant_star(spark):
+    hub = 77_777
+    pairs = [(hub, x) for x in range(1, 5001)]
+    _assert_clusters(spark, pairs)
+    with _edges_unmerged(spark):
+        _assert_clusters(spark, pairs, fallback=True)
+
+
+def test_near_dup_clusters_fallback_raises_past_max_rounds(spark):
+    from ocr_lib_spark.operators.dedup import near_dup_clusters
+
+    df = spark.createDataFrame(_shuffled_chain(200, seed=5), "id_a long, id_b long")
+    with _edges_unmerged(spark):
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            near_dup_clusters(df, max_rounds=1)
+    # one partition labels exactly in the kernel: no round to bound
+    assert near_dup_clusters(df, max_rounds=1).count() == 200
+
+
+def test_near_dup_clusters_rejects_null_endpoint(spark):
+    from ocr_lib_spark.operators.dedup import near_dup_clusters
+
+    df = spark.createDataFrame([(1, 2), (2, None)], "id_a long, id_b long")
+    with pytest.raises(Exception, match="ValueError: null near-dup pair endpoint"):
+        near_dup_clusters(df).collect()
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=40
+    )
+)
+def test_near_dup_clusters_equal_bfs_on_random_graphs(spark, pairs):
+    """Both paths — one partition and the contracted-graph fallback —
+    equal a BFS reference on random multigraphs (self-loops, repeated
+    and reversed pairs included)."""
+    _assert_clusters(spark, pairs)
+    with _edges_unmerged(spark):
+        _assert_clusters(spark, pairs, fallback=True)
 
 
 def test_values_df_literal_plan_roundtrip(spark):

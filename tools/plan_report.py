@@ -92,9 +92,11 @@ def main() -> None:
         "  CONSTRUCTION. No per-type single-task global sort remains",
         "  (the round-2 scale hazard); the window twin is equivalence-",
         "  pinned in tests.",
-        "- near_dup_clusters is audited on its final labeling (the",
-        "  propagation rounds run before the audited plan; each is a",
-        "  hash-partitioned join + groupBy, checkpoint-truncated).",
+        "- near_dup_clusters is audited on its final labeling: a scan of",
+        "  the checkpointed union-find kernel output when the edges fit",
+        "  one partition (every measured scale). With more partitions the",
+        "  contracted-graph propagation rounds run before the audited plan;",
+        "  each is hash-partitioned joins + groupBy, checkpoint-truncated.",
     ]
     with open("PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
