@@ -22,7 +22,7 @@ merge machinery core.clj:1392-1458 disappears — SURVEY.md §4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -142,65 +142,6 @@ def extract_turns(
     return src.mapInPandas(run, schema=EXTRACTED_SCHEMA)
 
 
-def extract_turns_deduped(
-    df: DataFrame,
-    cfg: ExtractionConfig = DEFAULT_CONFIG,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Dedupe-before-extract: run the extraction kernel ONCE per unique
-    payload digest corpus-wide, then join results back to every turn.
-
-    The cross-partition twin of the kernel's batch-local memoization:
-    batch memoization only catches duplicates that land in the same
-    Arrow batch; this plan catches them across the whole corpus with
-    one digest `dropDuplicates` + one join. Worth it when
-    (dup_factor - 1) x kernel_cost > 2 x shuffle_cost — true for real
-    transcript corpora (20-50% exact-dup turns: repeated prompts, tool
-    headers, canned responses) whenever the kernel is the dominant
-    cost. Results are byte-identical to ``extract_turns`` (extraction
-    is a pure function of the payload; md5 keys the join).
-    """
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(taught_prototypes())
-    src = df.select(
-        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "role", "text"
-    ).withColumn(
-        # NULL must hash apart from EVERY real string (a literal
-        # "<NULL-SENTINEL>" payload would otherwise collide): prefix a
-        # nullability flag byte onto the digest
-        "__digest",
-        F.when(F.col("text").isNull(), F.lit("0")).otherwise(
-            F.concat(F.lit("1"), F.md5("text"))
-        ),
-    )
-
-    uniq = src.select("__digest", "text").dropDuplicates(["__digest"])
-
-    def run(batches):
-        protos, labels, keep = bc.value
-        for pdf in batches:
-            res = extract_batch(pdf["text"], cfg, protos, labels, keep)
-            out = pdf[["__digest"]].copy()
-            out["extracted_text"] = res["extracted_text"].values
-            out["spans"] = res["spans"].values
-            out["n_blocks"] = res["n_blocks"].values
-            out["unknown_blocks"] = res["unknown_blocks"].values
-            yield out
-
-    schema = T.StructType(
-        [T.StructField("__digest", T.StringType())]
-        + [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx", "role")]
-    )
-    ex_u = uniq.mapInPandas(run, schema=schema)
-    return (
-        src.join(ex_u, "__digest")
-        .select(
-            "conv_id", "turn_idx", "role",
-            "extracted_text", "spans", "n_blocks", "unknown_blocks",
-        )
-    )
-
-
 def ordered(extracted: DataFrame) -> DataFrame:
     """Stable (conv_id, turn_idx) presentation order — the reading-order
     invariant (sort-rows / thread-result reordering, core.clj:753-785,
@@ -212,52 +153,40 @@ def ordered(extracted: DataFrame) -> DataFrame:
 def assemble_conversations(
     extracted: DataFrame,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
-    chunk_turns: int | None = 1024,
+    chunk_turns: int = 1024,
 ) -> DataFrame:
     """Conversation-level document assembly: turn texts concatenated in
     turn order (per-row text assembly + newline insertion analog,
     core.clj:1687-1689) — pure Catalyst, no UDF.
 
-    Scale shape: TWO-LEVEL chunked concat. Level 1 groups by
-    (conv_id, turn_idx // chunk_turns) and concatenates each chunk's
-    turns; level 2 concatenates the (already-joined) chunk strings in
-    chunk order. Each aggregation buffer therefore holds at most
-    ``chunk_turns`` turn structs (level 1) or n_turns/chunk_turns chunk
-    strings (level 2) — the north rule's 10^6-turn mega-conversation
-    never materializes as ONE 10^6-element collect_list row, which is
-    the one place a single-level groupBy could OOM an executor at 100×
-    scale. Both levels stay map-side combinable (array_sort inside the
-    aggregate; no window pre-sort). Results are byte-identical to the
-    single-level plan (``chunk_turns=None``), which is retained for
-    small-conversation layouts where one shuffle beats two.
+    One plan, one exchange. The input is hash-partitioned ONCE on
+    ``conv_id``; then a two-level chunked concat runs inside that
+    stage. Level 1 groups by (conv_id, turn_idx // chunk_turns) and
+    joins each chunk's non-empty turns; level 2 joins the chunk strings
+    in chunk order. ``HashPartitioning(conv_id)`` satisfies the
+    clustering both aggregates require (each groups by a superset of
+    ``conv_id``), so neither adds an exchange of its own. Each
+    aggregation buffer holds at most ``chunk_turns`` turn structs
+    (level 1) or n_turns/chunk_turns chunk strings (level 2): a 10^6-
+    turn conversation never materializes as ONE 10^6-element
+    collect_list row, though all of its chunks run in one task.
+
+    The price is map-side combining: the exchange runs before either
+    aggregate, so turn rows cross it uncombined. Measured extract +
+    assemble at local[4], sf0.1, noop sink, on the benchmark's
+    12x-replicated corpus (medians of 10 alternating reps, 3 sessions):
+    0.68-0.73 s, vs 0.71-0.81 s with one exchange per level and
+    0.63-0.64 s for one unchunked groupBy — the chunk bound costs
+    0.05-0.09 s there. An input already in one partition, which satisfied
+    both aggregates with no exchange at all, now pays this one.
     """
+    if chunk_turns < 1:
+        raise ValueError(f"chunk_turns must be >= 1, got {chunk_turns}")
     sep = cfg.block_separator
     content = F.sum(F.when(F.col("extracted_text") != "", 1).otherwise(0))
-    if chunk_turns is None:
-        return (
-            extracted.groupBy("conv_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("turn_idx", "extracted_text"))
-                ).alias("ordered"),
-                F.count("*").alias("n_turns"),
-                content.alias("n_content_turns"),
-            )
-            .select(
-                "conv_id",
-                F.array_join(
-                    F.filter(
-                        F.transform("ordered", lambda s: s.extracted_text),
-                        lambda t: t != "",
-                    ),
-                    sep,
-                ).alias("conv_text"),
-                "n_turns",
-                "n_content_turns",
-            )
-        )
     chunks = (
-        extracted.groupBy(
+        extracted.repartition("conv_id")
+        .groupBy(
             "conv_id",
             F.floor(F.col("turn_idx") / F.lit(chunk_turns)).alias("chunk_idx"),
         )
@@ -296,7 +225,7 @@ def assemble_conversations(
         .select(
             "conv_id",
             # all-empty chunks join to '' and are filtered here, exactly as
-            # empty turns are in the single-level plan
+            # empty turns are at level 1
             F.array_join(
                 F.filter(
                     F.transform("ordered", lambda s: s.chunk_text),

@@ -14,11 +14,7 @@ import base64
 
 from pyspark.sql import functions as F
 
-from ocr_lib_spark.pipeline import (
-    assemble_conversations,
-    extract_turns,
-    extract_turns_deduped,
-)
+from ocr_lib_spark.pipeline import assemble_conversations, extract_turns
 from ocr_lib_spark.plans import QueryDef
 from ocr_lib_spark.sources.synth import (
     B64_PRE,
@@ -68,16 +64,6 @@ FROM documents
 """
 
 
-def _q_extract_dedup_plan(spark, sf_dir):
-    """Same answer as extract_text via the dedupe-before-extract plan:
-    kernel runs once per unique payload digest corpus-wide, results
-    join back — the canonical expensive-enrichment-over-dup-heavy-
-    corpus shape, verified against the identical oracle."""
-    tr = transcripts_from_documents(spark, sf_dir)
-    ex = extract_turns_deduped(tr)
-    return ex.select("conv_id", "turn_idx", "extracted_text", "n_blocks")
-
-
 def _q_extract_spans(spark, sf_dir):
     tr = transcripts_from_documents(spark, sf_dir)
     ex = extract_turns(tr)
@@ -118,24 +104,10 @@ FROM base WHERE c = 2
 """
 
 
-def _assemble_small(ex):
-    """Assembly for the KNOWN-SMALL fixture layout: the synthetic
-    transcripts bound turns-per-conversation at n_docs / N_CONVS
-    (sources/synth.py round-robins doc_id), so the two-level chunked
-    concat's OOM guard buys nothing here and its second shuffle costs
-    a same-window A/B-measured 1.32-1.37x (tools/conv_assembly_ab.py,
-    sf0.1, 9 interleaved reps — the round-5 conv_assembly "2x drift"
-    was this, not the host window). chunk_turns=None is the
-    single-shuffle plan; the operator default stays 1024 so unknown
-    callers keep the 10^6-turn safety (pipeline.assemble_conversations
-    docstring has the tradeoff)."""
-    return assemble_conversations(ex, chunk_turns=None)
-
-
 def _q_conv_assembly(spark, sf_dir):
     tr = transcripts_from_documents(spark, sf_dir)
     ex = extract_turns(tr)
-    return _assemble_small(ex).select(
+    return assemble_conversations(ex).select(
         "conv_id", "conv_text", "n_turns", "n_content_turns"
     )
 
@@ -318,7 +290,7 @@ def _q_conv_dedup(spark, sf_dir):
     pipeline a 100 TB corpus dedup runs, with extraction earned from
     the payloads, not the construction)."""
     tr = transcripts_from_documents(spark, sf_dir)
-    conv = _assemble_small(extract_turns(tr))
+    conv = assemble_conversations(extract_turns(tr))
     return (
         conv.select(F.md5("conv_text").alias("digest"), "conv_id")
         .groupBy("digest")
@@ -558,7 +530,7 @@ def _q_conv_near_dup(spark, sf_dir):
     )
 
     tr = transcripts_from_documents(spark, sf_dir)
-    conv = _assemble_small(extract_turns(tr))
+    conv = assemble_conversations(extract_turns(tr))
     # normalize the turn-separator newlines to spaces BEFORE hashing:
     # the shared simhash tokenization contract is single-space-split
     # (documents are newline-free; assembled conversations are not)
@@ -752,7 +724,7 @@ def _q_conv_packing(spark, sf_dir):
     from pyspark.sql import Window
 
     tr = transcripts_from_documents(spark, sf_dir)
-    conv = _assemble_small(extract_turns(tr))
+    conv = assemble_conversations(extract_turns(tr))
     d = conv.select(
         "conv_id",
         F.pmod(stable_hash64(F.col("conv_id")), F.lit(PACK_SHARDS))
@@ -850,7 +822,7 @@ def _q_conv_training_mix(spark, sf_dir):
         # precedent): the quality gate, simhash banding and packing
         # branches all inherit the checkpoint's partitioning
         spread_small(
-            _assemble_small(extract_turns(tr)).select("conv_id", "conv_text")
+            assemble_conversations(extract_turns(tr)).select("conv_id", "conv_text")
         ).localCheckpoint(eager=False)
     )
     quality_keep = (
@@ -971,7 +943,7 @@ def _q_conv_quality_bits(spark, sf_dir):
     from ocr_lib_spark.plans.textops import gopher_bits_frame
 
     tr = transcripts_from_documents(spark, sf_dir)
-    conv = _assemble_small(extract_turns(tr))
+    conv = assemble_conversations(extract_turns(tr))
     return gopher_bits_frame(
         conv.select(
             F.col("conv_id").alias("doc_id"),
@@ -1287,8 +1259,8 @@ def _q_conv_decontaminate(spark, sf_dir):
     = conversations whose numeric id ≡ 0 (mod DECON_HOLDOUT_MOD); their
     distinct gram set broadcasts (holdouts are small by nature), the
     corpus side streams through the broadcast join — never a
-    corpus×corpus product. Composes extract -> assemble (single-level,
-    known-small layout) -> gram overlap, all earned from payloads."""
+    corpus×corpus product. Composes extract -> assemble -> gram
+    overlap, all earned from payloads."""
     from ocr_lib_spark.plans.textops import DECON_HOLDOUT_MOD, DECON_K
 
     from ocr_lib_spark.partitioning import spread_small
@@ -1302,7 +1274,7 @@ def _q_conv_decontaminate(spark, sf_dir):
         # of them with ZERO extra exchanges (no-op at scale; measured
         # 348 ms single-task gram stage in the r9 profile)
         spread_small(
-            _assemble_small(extract_turns(tr)).select(
+            assemble_conversations(extract_turns(tr)).select(
                 "conv_id", F.expr("replace(conv_text, chr(10), ' ')").alias("text")
             )
         )
@@ -1513,11 +1485,6 @@ QUERIES = {
         _q_extract_text,
         _ORACLE_TEXT,
         "flagship: per-turn main-content extraction (read-image-fn analog, core.clj:1772-1806)",
-    ),
-    "extract_text_dedup_plan": QueryDef(
-        _q_extract_dedup_plan,
-        _ORACLE_TEXT,
-        "dedupe-before-extract plan: kernel once per unique digest, join back (same oracle as extract_text)",
     ),
     "extract_spans": QueryDef(
         _q_extract_spans,

@@ -1,8 +1,8 @@
 """Custom stateful streaming operator: cross-micro-batch conversation
 assembly with ``applyInPandasWithState`` (event-time session semantics).
 
-The batch engine assembles a conversation in one aggregate
-(pipeline.assemble_conversations). In a stream, a conversation's turns
+The batch engine assembles a conversation in one conv_id-partitioned
+stage (pipeline.assemble_conversations). In a stream, a conversation's turns
 arrive across micro-batches, so assembly needs per-conversation state:
 accumulate (turn_idx, extracted_text) pairs; when the event-time
 watermark passes the conversation's last activity plus ``gap``, the
@@ -119,6 +119,8 @@ def assemble_conversations_stateful(
     chunk's byte-store, and the state row holds O(n_turns/chunk_turns)
     elements, never a per-turn array — the streaming twin of the batch
     assembler's two-level chunked concat (pipeline.py)."""
+    if chunk_turns < 1:
+        raise ValueError(f"chunk_turns must be >= 1, got {chunk_turns}")
     sep_b = separator.encode()
 
     def _emit(conv_id, chunk_idxs, metas, stores):

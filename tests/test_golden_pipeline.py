@@ -130,30 +130,6 @@ def test_skewed_layout_salted_spread_equals_oracle(spark):
     assert max(r["count"] for r in per_part) < 800
 
 
-def test_dedupe_before_extract_plan_equals_direct(spark, corpus_pdf):
-    """extract_turns_deduped (kernel once per unique digest, join back)
-    is byte-identical to the direct plan — on a corpus with duplicate
-    payloads injected to exercise the dedup path."""
-    from pyspark.sql import functions as F
-
-    from ocr_lib_spark.pipeline import extract_turns_deduped
-
-    df = generated_transcripts_df(spark, n_convs=60, seed=7)
-    # duplicate every payload under fresh (conv_id, turn_idx) keys
-    dup = df.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit("-dup")))
-    both = df.unionByName(dup)
-    cols = ["conv_id", "turn_idx", "extracted_text", "n_blocks"]
-    a = ordered(extract_turns(both)).select(cols).toPandas().reset_index(drop=True)
-    b = (
-        extract_turns_deduped(both)
-        .orderBy("conv_id", "turn_idx")
-        .select(cols)
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_vectorized_kernels_equal_relational_twins(spark):
     """The Arrow fast paths (zero-shuffle minhash / simhash) are pinned
     bit-identical to their pure-Catalyst twins on real data."""

@@ -1,9 +1,9 @@
 """Scale-hardening and twin-equivalence regression tests (round 2).
 
-1. Chunked two-level conversation assembly: byte-identical to the
-   single-level plan and to a pandas golden, on a mega-conversation
-   (the north rule's 10^6-turn hazard, scaled down) — VERDICT.md round 1
-   "What's wrong" #3.
+1. Chunked two-level conversation assembly: byte-identical to a pandas
+   golden at two chunk sizes, on a mega-conversation (the north rule's
+   10^6-turn hazard, scaled down), with one shuffle for both levels —
+   VERDICT.md round 1 "What's wrong" #3.
 2. Arrow dedup kernels drop NULL/token-less docs exactly like their
    relational twins (ADVICE round 1).
 3. Rolling hashes use Unicode codepoints, so the pandas / Catalyst /
@@ -11,6 +11,8 @@
 """
 
 import contextlib
+import hashlib
+import math
 
 import pandas as pd
 import pytest
@@ -52,10 +54,33 @@ def _pandas_golden(pdf):
     )
 
 
+def _final_plan_nodes(df):
+    """Run ``df`` once, then return every operator of its final executed
+    plan, with adaptive query stages unwrapped into the exchanges they
+    ran."""
+    df.collect()
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        nodes.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
 def test_chunked_assembly_equals_single_level_and_golden(spark, mega_extracted):
+    """Two chunk sizes, each byte-identical to the pandas golden (a
+    single-level, unchunked assembly of the same turns)."""
     pdf, df = mega_extracted
     golden = _pandas_golden(pdf)
-    for chunk_turns in (64, 1024, None):
+    for chunk_turns in (64, 1024):
         got = (
             assemble_conversations(df, chunk_turns=chunk_turns)
             .orderBy("conv_id")
@@ -71,24 +96,67 @@ def test_chunked_assembly_equals_single_level_and_golden(spark, mega_extracted):
 
 
 def test_chunked_assembly_bounds_aggregation_rows(spark, mega_extracted):
-    """The level-1 aggregate really is chunked: no (conv_id, chunk) group
-    holds more than chunk_turns turns, so the mega-conversation never
+    """The level-1 aggregate really is chunked: in the executed plan it
+    emits one row per (conv_id, chunk) — ceil(5000/64) chunks of the
+    mega-conversation plus one per short conversation — so no buffer
+    holds more than chunk_turns turns and the mega-conversation never
     materializes as one collect_list row."""
     _, df = mega_extracted
     chunk = 64
-    sizes = (
-        df.groupBy("conv_id", F.floor(F.col("turn_idx") / chunk).alias("c"))
-        .count()
-        .agg(F.max("count").alias("m"))
-        .collect()[0]["m"]
-    )
-    assert sizes <= chunk
+    aggs = [
+        n
+        for n in _final_plan_nodes(assemble_conversations(df, chunk_turns=chunk))
+        if n.getClass().getSimpleName().endswith("AggregateExec")
+    ]
+    rows = {
+        (n.groupingExpressions().size(), int(n.metrics().apply("numOutputRows").value()))
+        for n in aggs
+    }
+    # partial and final of each level: (conv_id, chunk) then conv_id
+    assert rows == {(2, math.ceil(5000 / chunk) + 10), (1, 11)}, rows
+
+
+def test_assembly_partitions_once_on_conv_id(spark, mega_extracted):
+    """One shuffle serves both chunk levels: the conv_id hash partitioning
+    satisfies the (conv_id, chunk) and the conv_id aggregates alike —
+    over the one-partition fixture and over the same rows spread across
+    the default parallelism (a per-level plan shuffles twice there)."""
+    pdf, df = mega_extracted
+    spread = spark.createDataFrame(pdf, schema=df.schema)
+    assert df.rdd.getNumPartitions() == 1 < spread.rdd.getNumPartitions()
+    for src in (df, spread):
+        names = [
+            n.getClass().getSimpleName()
+            for n in _final_plan_nodes(assemble_conversations(src))
+        ]
+        assert names.count("ShuffleExchangeExec") == 1, names
+
+
+@pytest.mark.parametrize("chunk_turns", [0, -2])
+def test_assembly_rejects_non_positive_chunk_turns(spark, mega_extracted, chunk_turns):
+    """Floor division by a negative chunk size reversed the chunk order
+    and 0 only failed once an action ran; both now raise at call time,
+    in the batch and the streaming assembler."""
+    from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
+
+    _, df = mega_extracted
+    with pytest.raises(ValueError, match="chunk_turns"):
+        assemble_conversations(df, chunk_turns=chunk_turns)
+    with pytest.raises(ValueError, match="chunk_turns"):
+        assemble_conversations_stateful(None, chunk_turns=chunk_turns)
 
 
 def test_conv_dedup_identical_under_chunking(spark, mega_extracted):
     """Digest-level equality: the downstream exact-dedup digest (md5 of
-    conv_text) is unchanged by the chunked plan."""
-    _, df = mega_extracted
+    conv_text) is the same at two chunk sizes and equals the golden's."""
+    pdf, df = mega_extracted
+    golden = _pandas_golden(pdf)
+    expected = pd.DataFrame(
+        {
+            "conv_id": golden.conv_id,
+            "d": [hashlib.md5(t.encode()).hexdigest() for t in golden.conv_text],
+        }
+    )
 
     def digests(chunk_turns):
         return (
@@ -98,7 +166,8 @@ def test_conv_dedup_identical_under_chunking(spark, mega_extracted):
             .toPandas()
         )
 
-    pd.testing.assert_frame_equal(digests(64), digests(None))
+    pd.testing.assert_frame_equal(digests(64), expected)
+    pd.testing.assert_frame_equal(digests(1024), expected)
 
 
 DEGENERATE_DOCS = [

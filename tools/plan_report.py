@@ -79,10 +79,10 @@ def main() -> None:
     lines += [
         "",
         "Notes:",
-        "- conv_assembly/conv_dedup: +1 shuffle vs round 1 is the two-level",
-        "  chunked concat (bounded aggregation buffers for mega-conversations);",
-        "  the level-2 exchange moves one row per (conv, chunk) — negligible",
-        "  bytes, and the protection is exactly for the skewed layouts.",
+        "- conv_* assembly adds ONE shuffle, on conv_id: both levels of the",
+        "  chunked concat (bounded aggregation buffers for mega-conversations)",
+        "  run inside that stage, since conv_id hash partitioning satisfies",
+        "  the (conv_id, chunk) and the conv_id aggregates alike.",
         "- stream_extract_text is audited post-hoc (memory sink), so its row",
         "  shows the sink scan, not the streaming micro-batch plan; ditto",
         "  stream_conv_assembly (stateful applyInPandasWithState plan).",

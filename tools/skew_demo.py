@@ -70,36 +70,6 @@ def main() -> None:
         out["auto_inherits_layout"]["secs"] / out["salted_spread"]["secs"], 2
     )
 
-    # --- mega-conversation assembly leg (north-rule hazard evidence) ----
-    # The 500k-turn conversation flows through BOTH assembly plans; the
-    # chunked two-level concat bounds every aggregation buffer at
-    # chunk_turns rows, the single-level plan materializes one 500k-
-    # element collect_list row. Digests must agree exactly.
-    from ocr_lib_spark.pipeline import assemble_conversations
-
-    ex = extract_turns(df, partitions=cores, repartition=True)
-    asm = {}
-    for name, chunk in (("chunked_1024", 1024), ("single_level", None)):
-        t0 = time.monotonic()
-        rows = (
-            assemble_conversations(ex, chunk_turns=chunk)
-            .select(F.md5("conv_text").alias("d"), "conv_id", "n_turns")
-            .orderBy("conv_id")
-            .collect()
-        )
-        import hashlib
-
-        combined = hashlib.md5("".join(r["d"] for r in rows).encode()).hexdigest()
-        asm[name] = {
-            "secs": round(time.monotonic() - t0, 2),
-            "n_convs": len(rows),
-            "max_turns": max(r["n_turns"] for r in rows),
-            "fingerprint": combined[:12],
-        }
-    out["mega_assembly"] = asm
-    out["assembly_digests_equal"] = (
-        asm["chunked_1024"]["fingerprint"] == asm["single_level"]["fingerprint"]
-    )
     print(json.dumps(out))
     spark.stop()
 
