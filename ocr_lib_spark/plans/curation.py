@@ -2118,38 +2118,55 @@ def bpe_merge_loop_frame(t, steps_n: int = BPE_STEPS):
     # pass, and rebuild inherit the checkpoint partitioning, and a
     # small single-row-group scan would otherwise run all of them on
     # ONE task per round (no-op at real corpus sizes)
-    t = spread_small(t)
-    steps = []
-    for step in range(1, steps_n + 1):
-        t = t.localCheckpoint(eager=False)  # census + stats + rebuild
+    rounds, _ = _bpe_rounds(spread_small(t), steps_n, checkpoint_matched=True)
+    steps = [
+        tt.agg(
+            F.sum(F.size("ch")).cast("long").alias("n_merges"),
+            F.sum(F.size("t") - F.size("ch")).cast("long").alias("n_tokens_after"),
+        )
+        .crossJoin(F.broadcast(best))
+        .select(
+            F.lit(step).cast("int").alias("step"),
+            "pair_a",
+            "pair_b",
+            "pair_count",
+            "n_merges",
+            "n_tokens_after",
+        )
+        for step, (best, tt) in enumerate(rounds, start=1)
+    ]
+    out = steps[0]
+    for s in steps[1:]:
+        out = out.unionByName(s)
+    return out
+
+
+def _bpe_rounds(t, steps_n: int, checkpoint_matched: bool = False):
+    """The BPE merge rounds over a (doc_id, t token-array, ...) frame,
+    written once for bpe_merge_loop and bpe_apply_merges. Each round
+    checkpoints the stream (the census and the match pass both read
+    it), broadcasts its ``_bpe_pair_argmax`` pair onto every row, adds
+    the match positions m and the greedy chosen positions ch, and
+    rebuilds the stream from ch; columns other than t carry through.
+    ``checkpoint_matched`` also checkpoints the matched frame, for
+    callers that read it twice (per-round stats and the next round's
+    stream). Returns
+    ([(best, matched frame) per round], final stream)."""
+    rounds = []
+    for _ in range(steps_n):
+        t = t.localCheckpoint(eager=False)
         best = _bpe_pair_argmax(t)
         tt = (
             t.crossJoin(F.broadcast(best))
             .withColumn("m", F.expr(BPE_MATCHES_EXPR))
             .withColumn("ch", F.expr(BPE_CHOSEN_EXPR))
-            .localCheckpoint(eager=False)  # stats + next-round stream
         )
-        stats = (
-            tt.agg(
-                F.sum(F.size("ch")).cast("long").alias("n_merges"),
-                F.sum(F.size("t") - F.size("ch")).cast("long").alias("n_tokens_after"),
-            )
-            .crossJoin(F.broadcast(best))
-            .select(
-                F.lit(step).cast("int").alias("step"),
-                "pair_a",
-                "pair_b",
-                "pair_count",
-                "n_merges",
-                "n_tokens_after",
-            )
-        )
-        steps.append(stats)
-        t = tt.select("doc_id", F.expr(BPE_REBUILD_EXPR).alias("t"))
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+        if checkpoint_matched:
+            tt = tt.localCheckpoint(eager=False)
+        rounds.append((best, tt))
+        carry = [c for c in t.columns if c != "t"]
+        t = tt.select(*carry, F.expr(BPE_REBUILD_EXPR).alias("t"))
+    return rounds, t
 
 
 def _bpe_chain_sql() -> str:
@@ -2236,15 +2253,7 @@ def _q_bpe_apply_merges(spark, sf_dir):
         .select("doc_id", F.expr("filter(t, x -> x != '')").alias("t"))
         .withColumn("n0", F.size("t").cast("long"))
     )
-    for _step in range(BPE_STEPS):
-        t = t.localCheckpoint(eager=False)
-        best = _bpe_pair_argmax(t)
-        t = (
-            t.crossJoin(F.broadcast(best))
-            .withColumn("m", F.expr(BPE_MATCHES_EXPR))
-            .withColumn("ch", F.expr(BPE_CHOSEN_EXPR))
-            .select("doc_id", "n0", F.expr(BPE_REBUILD_EXPR).alias("t"))
-        )
+    _, t = _bpe_rounds(t, BPE_STEPS)
     return t.select(
         "doc_id",
         F.col("n0").alias("n_tokens_before"),

@@ -719,12 +719,20 @@ def _q_conv_packing(spark, sf_dir):
     stable md5 hash of conv_id mod PACK_SHARDS (conv ids are strings;
     the hash rule is the engine's standard cross-engine int64), order
     within shard = conv_id (ASCII, both engines agree)."""
-    from ocr_lib_spark.functions.text import bpe_token_count, stable_hash64
-    from ocr_lib_spark.plans.textops import PACK_BUDGET, PACK_SHARDS
+    tr = transcripts_from_documents(spark, sf_dir)
+    return _pack_conversations(assemble_conversations(extract_turns(tr)))
+
+
+def _pack_conversations(conv):
+    """(conv_id, conv_text) -> one row per conversation with its shard,
+    BPE-ish token count and (chunk_idx, chunk_offset) placement under
+    the context budget: a per-shard running-sum window, no global sort.
+    Shared by conv_packing and conv_training_mix."""
     from pyspark.sql import Window
 
-    tr = transcripts_from_documents(spark, sf_dir)
-    conv = assemble_conversations(extract_turns(tr))
+    from ocr_lib_spark.functions.text import bpe_token_count, stable_hash64
+    from ocr_lib_spark.plans.textops import PACK_BUDGET, PACK_SHARDS
+
     d = conv.select(
         "conv_id",
         F.pmod(stable_hash64(F.col("conv_id")), F.lit(PACK_SHARDS))
@@ -800,13 +808,8 @@ def _q_conv_training_mix(spark, sf_dir):
     doc_id-only transcript scan (no kernel). Every stage reuses the
     independently-gated operator and the oracle nests the verified
     oracle strings whole — no fragment surgery."""
-    from pyspark.sql import Window
-
-    from ocr_lib_spark.functions.text import bpe_token_count, stable_hash64
     from ocr_lib_spark.operators.dedup import simhash_bits, simhash_near_dup_pairs
     from ocr_lib_spark.plans.textops import (
-        PACK_BUDGET,
-        PACK_SHARDS,
         SIMHASH_BITS,
         SIMHASH_ND_BANDS,
         SIMHASH_ND_MAX_BUCKET,
@@ -861,27 +864,7 @@ def _q_conv_training_mix(spark, sf_dir):
         .join(quality_keep, "conv_id")
         .join(dup_drop, "conv_id", "left_anti")
     )
-    d = keep.select(
-        "conv_id",
-        F.pmod(stable_hash64(F.col("conv_id")), F.lit(PACK_SHARDS))
-        .cast("int")
-        .alias("shard"),
-        bpe_token_count("conv_text").cast("int").alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
-    return d.select(
-        "conv_id",
-        "shard",
-        F.lit(PACK_SHARDS).cast("int").alias("n_shards"),
-        "n_tokens",
-        F.floor(start / PACK_BUDGET).cast("long").alias("chunk_idx"),
-        (start % PACK_BUDGET).cast("long").alias("chunk_offset"),
-    )
+    return _pack_conversations(keep)
 
 
 def _conv_training_mix_oracle() -> str:

@@ -23,6 +23,7 @@ from ocr_lib_spark.operators.dedup import (
     minhash_signatures,
     simhash64,
 )
+from ocr_lib_spark.operators.shingling import set_counts_udf
 from ocr_lib_spark.plans import QueryDef, documents
 from ocr_lib_spark.partitioning import spread_small
 
@@ -35,7 +36,10 @@ SIMHASH_BITS = 20  # oracle SQL grows per bit; 20 is plenty to pin semantics
 # --- token statistics (scalar kernels; contrast-fn analog core.clj:210-239) -
 
 def _text_stats(spark, sf_dir):
-    d = documents(spark, sf_dir)
+    return _text_stats_of(documents(spark, sf_dir))
+
+
+def _text_stats_of(d):
     toks = F.split(F.trim("text"), r"\s+")
     tok_chars = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
     return d.select(
@@ -883,51 +887,20 @@ def _q_stream_near_dup(spark, sf_dir):
 def _adjacent_jaccard(spark, sf_dir):
     # Join the (narrow) texts first — joining pre-shingled fat arrays
     # shuffles ~200× more bytes. The shingle-set |∩|/|∪| kernel runs in
-    # an Arrow-batched pandas UDF (python set ops per pair, exact
-    # cardinalities — ~4× faster than the char_shingles +
+    # an Arrow-batched pandas UDF (operators/shingling.py: exact
+    # cardinalities, ~4× faster than the char_shingles +
     # array_intersect/array_union Catalyst expressions on this shape).
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("n_inter", T.LongType()),
-                T.StructField("n_union", T.LongType()),
-            ]
-        )
-    )
-    def set_counts(ta, tb):
-        import pandas as pd
-
-        from ocr_lib_spark.operators.shingling import batch_pair_set_counts
-
-        # vectorized packed-window shingle sets (operators/shingling.py):
-        # each unique text's sorted id array is built once per batch,
-        # |∩| via np.intersect1d — exact, ~3x the Python-set loop
-        ni, na, nb = batch_pair_set_counts(
-            ta.astype(object), tb.astype(object), SHINGLE_K
-        )
-        return pd.DataFrame(
-            {"n_inter": ni, "n_union": [a + b - i for a, b, i in zip(na, nb, ni)]}
-        )
-
     d = documents(spark, sf_dir)
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
-    j = a.join(b, F.col("id_b") == F.col("id_a") + 1)
     # The broadcast self-join PRESERVES the probe side's partitioning,
     # and a small-SF single-file scan is ONE split — which fed the whole
     # pandas kernel to one python worker (the r2 bench regression:
-    # 1.32s single-task vs ~0.97s repartitioned, measured under the
-    # driver harness). Spread the pair rows before the kernel whenever
-    # the source can't feed every core; at cluster scale a multi-file
-    # scan already gives >= p splits and this stays a no-op.
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        j = j.repartition(p)
+    # 1.32s single-task vs ~0.97s repartitioned). probe=d: the join's
+    # size estimate is not honest.
+    j = spread_small(a.join(b, F.col("id_b") == F.col("id_a") + 1), probe=d)
     return (
-        j.select("id_a", "id_b", set_counts("ta", "tb").alias("c"))
+        j.select("id_a", "id_b", set_counts_udf(SHINGLE_K)("ta", "tb").alias("c"))
         .select(
             "id_a",
             "id_b",
@@ -1184,6 +1157,10 @@ WHERE bit_count(xor(a.h, b.h)) <= {SIMHASH_ND_MAX_HAMMING}
 # --- BPE-ish token budget + rolling-hash fingerprints ------------------------
 
 def _token_fingerprints(spark, sf_dir):
+    return _token_fingerprints_of(documents(spark, sf_dir))
+
+
+def _token_fingerprints_of(d):
     # token counts stay JVM-side (regex codegen); the two rolling hashes
     # run in an Arrow-batched pandas UDF — the O(n) prefix-hash twin of
     # the O(n·k) Catalyst expressions (bit-identical mod 2^31-1;
@@ -1209,7 +1186,7 @@ def _token_fingerprints(spark, sf_dir):
         return rolling_hashes_pandas(texts, k=8)
 
     return (
-        spread_small(documents(spark, sf_dir))
+        spread_small(d)
         .select(
             "doc_id",
             token_count("text").alias("ws_tokens"),
@@ -1263,15 +1240,13 @@ NEAR_DUP_BAND_ROWS = 4
 NEAR_DUP_MAX_BUCKET = 100
 
 
-def _near_dup_verified(spark, sf_dir):
-    """LSH candidate generation -> exact |∩|/|∪| verification >= τ —
-    the two-stage shape every corpus-scale near-dup run uses (candidates
-    bound the quadratic; the exact kernel runs only on candidates).
-    Verification joins the narrow texts back by id and runs the same
-    Arrow-batched set-cardinality kernel as adjacent_jaccard."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
+def _lsh_pair_counts(spark, sf_dir):
+    """The LSH -> verify chain shared by near_dup_verified and
+    containment_dedup: banded MinHash candidates (precision bands +
+    hot-bucket cap), the narrow texts joined back by id, and ONE
+    evaluation of the shingle-set kernel per candidate pair. Returns
+    (id_a, id_b, c) with c the ``set_counts_udf`` struct; each caller
+    adds only its verdict columns."""
     d = documents(spark, sf_dir)
     sig = minhash_signatures(d, n_hashes=N_HASHES, k=SHINGLE_K)
     cand = lsh_candidate_pairs(
@@ -1280,37 +1255,6 @@ def _near_dup_verified(spark, sf_dir):
         band_rows=NEAR_DUP_BAND_ROWS,
         max_bucket_size=NEAR_DUP_MAX_BUCKET,
     )
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("n_inter", T.LongType()),
-                T.StructField("n_union", T.LongType()),
-            ]
-        )
-    )
-    def set_counts(ta, tb):
-        import pandas as pd
-
-        from ocr_lib_spark.operators.shingling import batch_pair_set_counts
-
-        # vectorized packed-window shingle sets (operators/shingling.py):
-        # each unique text's sorted id array is built once per batch,
-        # |∩| via np.intersect1d — exact, ~3x the Python-set loop
-        ni, na, nb = batch_pair_set_counts(
-            ta.astype(object), tb.astype(object), SHINGLE_K
-        )
-        return pd.DataFrame(
-            {"n_inter": ni, "n_union": [a + b - i for a, b, i in zip(na, nb, ni)]}
-        )
-
-    # nondeterministic stops the optimizer pushing the jaccard filter
-    # BELOW the projection and re-evaluating the kernel on both sides
-    # (guide-class duplication: two ArrowEvalPython nodes, each
-    # shingling every candidate pair — measured as a duplicated
-    # 380 ms single-task stage). The kernel is pure; results identical.
-    set_counts = set_counts.asNondeterministic()
-
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
     # spread the verify kernel's input when the corpus is small: AQE
@@ -1318,9 +1262,17 @@ def _near_dup_verified(spark, sf_dir):
     # CPU-dense shingle kernel 1-2 tasks (measured 386 ms on 2 tasks at
     # local[32]). probe=d — join-output size estimates are
     # multiplicative garbage; the base table's is honest.
+    return spread_small(cand.join(a, "id_a").join(b, "id_b"), probe=d).select(
+        "id_a", "id_b", set_counts_udf(SHINGLE_K)("ta", "tb").alias("c")
+    )
+
+
+def _near_dup_verified(spark, sf_dir):
+    """LSH candidate generation -> exact |∩|/|∪| verification >= τ —
+    the two-stage shape every corpus-scale near-dup run uses (candidates
+    bound the quadratic; the exact kernel runs only on candidates)."""
     return (
-        spread_small(cand.join(a, "id_a").join(b, "id_b"), probe=d)
-        .select("id_a", "id_b", set_counts("ta", "tb").alias("c"))
+        _lsh_pair_counts(spark, sf_dir)
         .withColumn("jaccard", F.col("c.n_inter") / F.col("c.n_union"))
         .where(F.col("jaccard") >= NEAR_DUP_JACCARD_T)
         .select("id_a", "id_b", F.col("c.n_inter").alias("n_inter"),
@@ -1390,10 +1342,10 @@ CONTAIN_BP = 8000  # keep pairs with >= 80% one-sided shingle containment
 
 
 def _containment_dedup(spark, sf_dir):
-    """Scale shape: identical to near_dup_verified (bucketed LSH
-    candidates, hot-bucket cap, Arrow set kernel on candidates only);
-    adds per-side cardinalities so both containment directions come out
-    of one kernel pass.
+    """Scale shape: near_dup_verified's chain (``_lsh_pair_counts``:
+    bucketed LSH candidates, hot-bucket cap, Arrow set kernel on
+    candidates only); the kernel's per-side cardinalities give both
+    containment directions from one kernel pass.
 
     Honest recall caveat: resemblance-LSH candidates under-recall PURE
     containment (a band matches with probability ~J^rows, and J is
@@ -1402,62 +1354,20 @@ def _containment_dedup(spark, sf_dir):
     engine's high-recall path for unaligned inclusion. The asymmetric
     branches are pinned by T test_containment_relation_classes with an
     injected candidate pair."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    d = documents(spark, sf_dir)
-    sig = minhash_signatures(d, n_hashes=N_HASHES, k=SHINGLE_K)
-    cand = lsh_candidate_pairs(
-        sig,
-        n_hashes=N_HASHES,
-        band_rows=NEAR_DUP_BAND_ROWS,
-        max_bucket_size=NEAR_DUP_MAX_BUCKET,
-    )
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("n_inter", T.LongType()),
-                T.StructField("n_a", T.LongType()),
-                T.StructField("n_b", T.LongType()),
-            ]
-        )
-    )
-    def set_counts3(ta, tb):
-        import pandas as pd
-
-        from ocr_lib_spark.operators.shingling import batch_pair_set_counts
-
-        # see set_counts in _adjacent_jaccard: vectorized exact kernel
-        ni, na, nb = batch_pair_set_counts(
-            ta.astype(object), tb.astype(object), SHINGLE_K
-        )
-        return pd.DataFrame({"n_inter": ni, "n_a": na, "n_b": nb})
-
-    # see _near_dup_verified: single kernel evaluation
-    set_counts3 = set_counts3.asNondeterministic()
-
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
-    scored = (
-        # see _near_dup_verified: spread the CPU-dense verify kernel
-        spread_small(cand.join(a, "id_a").join(b, "id_b"), probe=d)
-        .select("id_a", "id_b", set_counts3("ta", "tb").alias("c"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col("c.n_inter").alias("n_inter"),
-            F.col("c.n_a").alias("n_a"),
-            F.col("c.n_b").alias("n_b"),
-            F.expr("(10000 * c.n_inter) DIV c.n_a").cast("long").alias("cont_ab_bp"),
-            F.expr("(10000 * c.n_inter) DIV c.n_b").cast("long").alias("cont_ba_bp"),
-            # integer Jaccard test: 100*|∩| >= 35*|∪| <=> J >= 0.35
-            (
-                F.lit(100) * F.col("c.n_inter")
-                >= F.lit(int(NEAR_DUP_JACCARD_T * 100))
-                * (F.col("c.n_a") + F.col("c.n_b") - F.col("c.n_inter"))
-            ).alias("is_dup"),
-        )
+    scored = _lsh_pair_counts(spark, sf_dir).select(
+        "id_a",
+        "id_b",
+        F.col("c.n_inter").alias("n_inter"),
+        F.col("c.n_a").alias("n_a"),
+        F.col("c.n_b").alias("n_b"),
+        F.expr("(10000 * c.n_inter) DIV c.n_a").cast("long").alias("cont_ab_bp"),
+        F.expr("(10000 * c.n_inter) DIV c.n_b").cast("long").alias("cont_ba_bp"),
+        # integer Jaccard test: 100*|∩| >= 35*|∪| <=> J >= 0.35
+        (
+            F.lit(100) * F.col("c.n_inter")
+            >= F.lit(int(NEAR_DUP_JACCARD_T * 100))
+            * (F.col("c.n_a") + F.col("c.n_b") - F.col("c.n_inter"))
+        ).alias("is_dup"),
     )
     return scored.where(
         (F.col("cont_ab_bp") >= CONTAIN_BP) | (F.col("cont_ba_bp") >= CONTAIN_BP)
@@ -1563,55 +1473,11 @@ def _unicode_wrap(oracle: str) -> str:
 
 
 def _text_stats_unicode(spark, sf_dir):
-    d = _udocs(spark, sf_dir)
-    toks = F.split(F.trim("text"), r"\s+")
-    tok_chars = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
-    return d.select(
-        "doc_id",
-        token_count("text").alias("n_tokens"),
-        distinct_token_count("text").alias("n_distinct"),
-        F.length("text").alias("n_chars_m"),
-        (tok_chars / F.greatest(token_count("text"), F.lit(1))).alias("mean_tok_len"),
-    )
+    return _text_stats_of(_udocs(spark, sf_dir))
 
 
 def _token_fingerprints_unicode(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from ocr_lib_spark.functions.text import (
-        bpe_token_count,
-        rolling_hashes_pandas,
-        token_count,
-    )
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("rk_hash", T.LongType()),
-                T.StructField("min_gram8", T.LongType()),
-            ]
-        )
-    )
-    def hashes(texts):
-        return rolling_hashes_pandas(texts, k=8)
-
-    return (
-        spread_small(_udocs(spark, sf_dir))
-        .select(
-            "doc_id",
-            token_count("text").alias("ws_tokens"),
-            bpe_token_count("text").alias("bpe_tokens"),
-            hashes("text").alias("h"),
-        )
-        .select(
-            "doc_id",
-            "ws_tokens",
-            "bpe_tokens",
-            F.col("h.rk_hash").alias("rk_hash"),
-            F.col("h.min_gram8").alias("min_gram8"),
-        )
-    )
+    return _token_fingerprints_of(_udocs(spark, sf_dir))
 
 
 def _minhash_unicode(spark, sf_dir):
@@ -1892,12 +1758,11 @@ SAMPLE_RATES = {"vowelic": 1000, "en-like": 500, "cons-lite": 250, "consonantal"
 
 def _stratified_sample(spark, sf_dir):
     from ocr_lib_spark.functions.text import hex_bucket, lang_id
-    from ocr_lib_spark.partitioning import spread_small
 
-    # spread: lang_id + md5 bucket per row, zero-shuffle map — its
-    # parallelism equals the scan split count (one working task on a
-    # small single-row-group parquet; no-op at scale)
-    d = spread_small(documents(spark, sf_dir)).select(
+    # no spread: lang_id + an md5 bucket per row is too cheap to pay for
+    # a round-robin exchange in front of it, so the map runs at the
+    # scan's split count
+    d = documents(spark, sf_dir).select(
         "doc_id",
         lang_id("text").alias("lang"),
         hex_bucket(F.col("text"), 1000).cast("int").alias("h"),

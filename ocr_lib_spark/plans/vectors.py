@@ -233,14 +233,6 @@ def _batch_vectors(batch, dim):
     return flat.to_numpy().reshape(len(lst), dim)
 
 
-def _spread_vectors(e):
-    from ocr_lib_spark.partitioning import spread_small
-
-    # spread: the n x k scoring kernels are CPU-dense; a small
-    # single-row-group scan feeds them one task (no-op at scale)
-    return spread_small(e.select("vec_id", "v"), probe=e)
-
-
 def _assign_centroids_arrow(e, cent_rows):
     """Nearest-centroid assignment as a zero-shuffle Arrow kernel: the
     (tiny, bounded) centroid matrix rides the closure and every batch
@@ -273,7 +265,11 @@ def _assign_centroids_arrow(e, cent_rows):
                 names=["vec_id", "v", "centroid_id"],
             )
 
-    return _spread_vectors(e).mapInArrow(
+    # no spread in front of this kernel, the Lloyd partials or the recall
+    # pass: on a small scan the round-robin exchange costs more than the
+    # idle cores (sf0.1, local[4]: ivf_recall build+run 1.61/1.51 s with
+    # it, 1.23/1.29 s without)
+    return e.select("vec_id", "v").mapInArrow(
         run, "vec_id long, v array<double>, centroid_id long"
     )
 
@@ -317,7 +313,7 @@ def _lloyd_partial_stats_arrow(e, cent_rows):
             )
 
     # the integer partial sums are partitioning-invariant by construction
-    return _spread_vectors(e).mapInArrow(
+    return e.select("vec_id", "v").mapInArrow(
         run, "centroid_id long, dim int, sum_scaled long, n long"
     )
 
@@ -783,7 +779,7 @@ def _recall_topk(ev, queries, books):
     # hash on query_id alone: the window merge here and any later
     # per-query window share this one exchange
     return (
-        _spread_vectors(ev)
+        ev.select("vec_id", "v")
         .mapInArrow(run, "tag string, query_id long, neighbor_id long, cosine double")
         .repartition("query_id")
         .withColumn("rank", F.row_number().over(w))

@@ -106,11 +106,12 @@ def get_spark(
         # parallelism) a medium input lands in the awkward zone — e.g. a
         # 317 MB corpus read at local[2] packed into 5 uneven splits =
         # 2.5 task waves with a half-idle tail, and 1.3 GB at local[8]
-        # into 19 skewed splits (max/median task 17.2s/13.0s; profiled
-        # via tools/profile_auto.py). Asking the scan for waves*cores
-        # splits makes them ~equal by construction (bytesPerCore sizing)
-        # with NO exchange — the cluster-scale analog is sizing
-        # maxPartitionBytes off the table census before a big read.
+        # into 19 skewed splits (max/median task 17.2s/13.0s, from the
+        # per-task times of a profiled run). Asking the scan for
+        # waves*cores splits makes them ~equal by construction
+        # (bytesPerCore sizing) with NO exchange — the cluster-scale
+        # analog is sizing maxPartitionBytes off the table census
+        # before a big read.
         .config("spark.sql.files.minPartitionNum", str(SCAN_WAVES * cores))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -502,6 +502,22 @@ def test_near_dup_clusters_evaluates_pairs_once(spark):
     assert seen.value == len(pairs)
 
 
+@pytest.mark.parametrize(
+    "query",
+    ["near_dup_verified", "containment_dedup", "incremental_dedup", "adjacent_jaccard"],
+)
+def test_shingle_set_kernel_evaluated_once(spark, query):
+    """Every verifier runs the shared shingle-set kernel in exactly one
+    ArrowEvalPython node. Without its non-deterministic mark the
+    optimizer may copy the kernel to both sides of a pushed-down filter
+    or a collapsed projection, shingling every candidate pair twice."""
+    from ocr_lib_spark.plans import build_registry
+
+    df = build_registry()[query].fn(spark, SF_DIR)
+    names = [n.getClass().getSimpleName() for n in _final_plan_nodes(df)]
+    assert names.count("ArrowEvalPythonExec") == 1, names
+
+
 @contextlib.contextmanager
 def _edges_unmerged(spark):
     """AQE coalesces a small edge exchange to one partition, so
