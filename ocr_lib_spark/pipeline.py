@@ -75,23 +75,6 @@ def extract_turns(
     recast of the reference's weighted progress, core.clj:108-165).
     """
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(taught_prototypes())
-
-    def run(batches):
-        protos, labels, keep = bc.value
-        tm: dict | None = {} if stage_acc is not None else None
-        for pdf in batches:
-            res = extract_batch(pdf["text"], cfg, protos, labels, keep, timings=tm)
-            out = pdf[["conv_id", "turn_idx", "role"]].copy()
-            out["extracted_text"] = res["extracted_text"].values
-            out["spans"] = res["spans"].values
-            out["n_blocks"] = res["n_blocks"].values
-            out["unknown_blocks"] = res["unknown_blocks"].values
-            yield out
-        if stage_acc is not None and tm:
-            for k, acc in stage_acc.items():
-                acc.add(tm.get(k, 0.0))
-
     src = df.select("conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "role", "text")
     p = partitions or spark.sparkContext.defaultParallelism
     if repartition == "auto":
@@ -139,7 +122,39 @@ def extract_turns(
                 src = src.coalesce(SCAN_WAVES * p)
     if repartition:
         src = src.repartition(p, "conv_id", "turn_idx")
-    return src.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return _map_extract(src, cfg, stage_acc=stage_acc)
+
+
+def _map_extract(
+    src: DataFrame,
+    cfg: ExtractionConfig,
+    carry: tuple[str, ...] = (),
+    stage_acc: dict | None = None,
+) -> DataFrame:
+    """The extraction kernel stage: ``extract_batch`` over Arrow batches
+    of ``src`` (conv_id, turn_idx, role, text, ...) with the prototype
+    matrix broadcast once. Emits EXTRACTED_SCHEMA plus the ``carry``
+    columns of ``src``, passed through (the streaming plan carries
+    ``ts`` for its watermark)."""
+    bc = src.sparkSession.sparkContext.broadcast(taught_prototypes())
+    schema = T.StructType(EXTRACTED_SCHEMA.fields + [src.schema[c] for c in carry])
+
+    def run(batches):
+        protos, labels, keep = bc.value
+        tm: dict | None = {} if stage_acc is not None else None
+        for pdf in batches:
+            res = extract_batch(pdf["text"], cfg, protos, labels, keep, timings=tm)
+            out = pdf[["conv_id", "turn_idx", "role"]].copy()
+            for c in ("extracted_text", "spans", "n_blocks", "unknown_blocks"):
+                out[c] = res[c].values
+            for c in carry:
+                out[c] = pdf[c].values
+            yield out
+        if stage_acc is not None and tm:
+            for k, acc in stage_acc.items():
+                acc.add(tm.get(k, 0.0))
+
+    return src.mapInPandas(run, schema=schema)
 
 
 def ordered(extracted: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_lib_spark.plans import QueryDef, documents, load
+from ocr_lib_spark.streaming.replay import replay_to_memory
 
 #: word-K-gram window shared with the decontamination gate
 #: (plans/textops.py DECON_K) — same definition of "an n-gram"
@@ -1081,48 +1082,33 @@ def _q_stream_incremental_dedup(spark, sf_dir):
 
     Ref analog: the daily re-run of read-signs-fn's load→probe split
     (core.clj:957-997) with the probe side streamed."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
-
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    tag = _hashlib.md5(f"incdedup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_incdedup_src_{tag}"
     d = documents(spark, sf_dir)
-    if not _Path(src, "_SUCCESS").exists():
-        d.where(F.col("doc_id") % INC_MOD == INC_NEW_RES).repartitionByRange(
-            4, "doc_id"
-        ).write.mode("overwrite").parquet(src)
     old_dig = (
         d.where(F.col("doc_id") % INC_MOD != INC_NEW_RES)
         .groupBy(F.md5("text").alias("dig"))
         .agg(F.min("doc_id").cast("long").alias("exact_match_id"))
     )
-    sdf = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = (
-        sdf.select("doc_id", F.md5("text").alias("dig"))
-        .join(old_dig, "dig", "left")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.when(F.col("exact_match_id").isNotNull(), F.lit("exact"))
-            .otherwise(F.lit("novel"))
-            .alias("verdict"),
-            F.coalesce("exact_match_id", F.lit(-1)).cast("long").alias("match_id"),
+
+    def verdicts(sdf):
+        return (
+            sdf.select("doc_id", F.md5("text").alias("dig"))
+            .join(old_dig, "dig", "left")
+            .select(
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.when(F.col("exact_match_id").isNotNull(), F.lit("exact"))
+                .otherwise(F.lit("novel"))
+                .alias("verdict"),
+                F.coalesce("exact_match_id", F.lit(-1)).cast("long").alias("match_id"),
+            )
         )
+
+    return replay_to_memory(
+        "stream_incremental_dedup",
+        d.where(F.col("doc_id") % INC_MOD == INC_NEW_RES).repartitionByRange(4, "doc_id"),
+        verdicts,
+        files_per_trigger=1,
+        mode="append",
     )
-    name = f"stream_incdedup_{tag}"
-    spark.catalog.dropTempView(name)
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def _stream_incremental_dedup_oracle() -> str:

@@ -25,6 +25,7 @@ from ocr_lib_spark.sources.synth import (
     TOOL_PRE,
     transcripts_from_documents,
 )
+from ocr_lib_spark.streaming.replay import replay_to_memory
 
 # span-offset constants implied by the construction (python side computes
 # them once; the SQL below inlines the integers)
@@ -1031,27 +1032,6 @@ FROM sess GROUP BY user_id, sid
 """
 
 
-def _stage_poke_last(src: str, pre_existing: set) -> None:
-    """Deterministic file-replay order for the __wm_poke__ convention
-    (ADVICE r7): the file stream orders micro-batches by modification
-    time, and the flush-determinism argument requires the poke file to
-    be read AFTER every data file — if the poke (event time far in the
-    future, watermark delay sized to the DATA span) landed in an early
-    micro-batch, the watermark would jump past every data row and
-    append mode would silently drop them as late. Appending normally
-    yields a later mtime, but filesystem timestamp granularity can tie;
-    force a strict order by bumping every post-append part file 10s
-    above the data files' max mtime. Call with the set of part files
-    present BEFORE the poke append."""
-    import os
-    from pathlib import Path
-
-    base = max((p.stat().st_mtime for p in pre_existing), default=0.0)
-    for p in Path(src).glob("*.parquet"):
-        if p not in pre_existing:
-            os.utime(p, (base + 10.0, base + 10.0))
-
-
 def _q_stream_session_window(spark, sf_dir):
     """STREAMING session windows — the built-in stateful session
     aggregation (F.session_window + watermark, append mode) driven to
@@ -1067,110 +1047,65 @@ def _q_stream_session_window(spark, sf_dir):
     modTime order; a far-future poke row (user_id -1, filtered from the
     result) written AFTER the data files advances the watermark past
     every session end + gap so all sessions flush (the __wm_poke__
-    convention of stream_conv_assembly). The poke part files' mtimes
-    are forced strictly above every data file's (_stage_poke_last), so
-    the file source — which replays in modification-time order —
-    provably reads the poke last regardless of timestamp granularity
-    (ADVICE r7: a poke landing in an early micro-batch would advance
-    the watermark past every data row and drop them all as late)."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
-
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    # v2: staging protocol now forces the poke part file's mtime
-    # strictly above every data file's (_stage_poke_last) — version the
-    # tag so dirs staged under the old protocol are never reused
-    tag = _hashlib.md5(f"sesswin-v2|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_sesswin_src_{tag}"
-    ev_schema = (
+    convention of stream_conv_assembly). The poke part file's mtime is
+    forced strictly above every data file's (replay_to_memory), so the
+    file source — which replays in modification-time order — provably
+    reads the poke last regardless of timestamp granularity (ADVICE r7:
+    a poke landing in an early micro-batch would advance the watermark
+    past every data row and drop them all as late)."""
+    ev = spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
-    )
-    if not _Path(src, "_SUCCESS").exists():
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev.repartition(6).write.mode("overwrite").parquet(src)
-        max_ts = ev.agg(F.max("ts")).collect()[0][0]
-        poke = (
-            spark.createDataFrame([(-1, -1, "poke", 0.0, "")], schema=
-                "event_id long, user_id long, event_type string, value double, props string")
-            .withColumn("ts", F.lit(max_ts) + F.expr("INTERVAL 65 DAYS"))
-            .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        )
-        data_parts = set(_Path(src).glob("*.parquet"))
-        # coalesce(1): a 1-row createDataFrame parallelizes into
-        # defaultParallelism slices and can emit >1 part file (one
-        # empty) — keep the poke to exactly one part so "the poke"
-        # is one file, strictly last in mtime order
-        poke.coalesce(1).write.mode("append").parquet(src)
-        _stage_poke_last(src, data_parts)
+    ).parquet(f"{sf_dir}/events.parquet")
+    max_ts = ev.agg(F.max("ts")).collect()[0][0]
+    poke = spark.createDataFrame(
+        [(-1, -1, "poke", 0.0, "")],
+        "event_id long, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.lit(max_ts) + F.expr("INTERVAL 65 DAYS"))
 
-    name = f"stream_sesswin_{tag}"
-    spark.catalog.dropTempView(name)
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    sessions = (
-        sdf.withWatermark("ts", "31 days")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("event_id").alias("first_event"),
+    def sessions(sdf):
+        return (
+            sdf.withWatermark("ts", "31 days")
+            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+            .agg(
+                F.count("*").alias("n_events"),
+                F.min("event_id").alias("first_event"),
+            )
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                "n_events",
+                "first_event",
+            )
         )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "first_event",
-        )
-    )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).where(F.col("user_id") != -1)
+
+    return replay_to_memory(
+        "stream_session_window",
+        ev.repartition(6),
+        sessions,
+        files_per_trigger=2,
+        mode="append",
+        poke=poke,
+    ).where(F.col("user_id") != -1)
 
 
 def _q_stream_extract(spark, sf_dir):
     """Streaming extraction under the driver's own gate: the transcript
-    fixture is staged once as a multi-file parquet source, driven to
+    fixture is staged per call as a multi-file parquet source, driven to
     completion through the STREAMING plan (file source split into
     micro-batches via maxFilesPerTrigger, memory sink), and the sink
     table is compared against the same closed-form oracle as
     extract_text — stream == batch, externally verified (round 1 this
     equality was pytest-only)."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
+    from ocr_lib_spark.streaming.extract_stream import extract_stream
 
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-    from ocr_lib_spark.streaming.extract_stream import run_stream_to_memory
-
-    # content-addressed staging key (file listing + sizes of the input
-    # dir), NOT the path string: if fixture content changes at the same
-    # path the staged copy is rebuilt instead of silently reused — the
-    # same staleness class parquet_snapshot_id fixes in lineage.py
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    tag = _hashlib.md5(f"{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_src_{tag}"
-    if not _Path(src, "_SUCCESS").exists():
-        transcripts_from_documents(spark, sf_dir).repartition(6).write.mode(
-            "overwrite"
-        ).parquet(src)
-    name = f"stream_extract_{tag}"
-    spark.catalog.dropTempView(name)  # no-op when absent; sink recreates it
-    run_stream_to_memory(spark, src, name=name)
-    return spark.table(name).select(
-        "conv_id", "turn_idx", "extracted_text", "n_blocks"
-    )
+    return replay_to_memory(
+        "stream_extract_text",
+        transcripts_from_documents(spark, sf_dir).repartition(6),
+        lambda sdf: extract_stream(sdf).drop("spans"),
+        files_per_trigger=4,
+        mode="append",
+    ).select("conv_id", "turn_idx", "extracted_text", "n_blocks")
 
 
 def _q_stream_conv_assembly(spark, sf_dir):
@@ -1182,47 +1117,31 @@ def _q_stream_conv_assembly(spark, sf_dir):
     equal the BATCH conv_assembly oracle. A far-future poke turn (conv
     '__wm_poke__', filtered from the result) advances the watermark so
     every session flushes; the file source orders files by modification
-    time, so the poke — written after the data files — always lands in
-    or after the final data micro-batch, and no data row is ever behind
-    the watermark."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
-
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-    from ocr_lib_spark.streaming.extract_stream import extract_stream, stream_transcripts
+    time, and the poke's is forced above every data file's
+    (replay_to_memory), so it always lands in or after the final data
+    micro-batch, and no data row is ever behind the watermark."""
+    from ocr_lib_spark.streaming.extract_stream import extract_stream
     from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
 
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    # v2: see _stage_poke_last — staging protocol version in the tag
-    tag = _hashlib.md5(f"stateful-v2|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_conv_src_{tag}"
     tr = transcripts_from_documents(spark, sf_dir)
-    if not _Path(src, "_SUCCESS").exists():
-        tr.repartition(6).write.mode("overwrite").parquet(src)
-        max_ts = tr.agg(F.max("ts")).collect()[0][0]
-        poke = spark.createDataFrame(
-            [("__wm_poke__", 0, "user", "x", None)],
-            "conv_id string, turn_idx int, role string, text string, tool string",
-        ).withColumn("ts", F.lit(max_ts) + F.expr("INTERVAL 48 HOURS"))
-        data_parts = set(_Path(src).glob("*.parquet"))
-        poke.select(*[f.name for f in tr.schema.fields]).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _stage_poke_last(src, data_parts)
-
-    name = f"stream_conv_{tag}"
-    spark.catalog.dropTempView(name)
-    st = extract_stream(stream_transcripts(spark, src, max_files_per_trigger=2))
+    max_ts = tr.agg(F.max("ts")).collect()[0][0]
+    poke = spark.createDataFrame(
+        [("__wm_poke__", 0, "user", "x", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.lit(max_ts) + F.expr("INTERVAL 48 HOURS"))
     # watermark delay spans the corpus's full event-time range: files
     # replay in mtime order, but turns inside them are not time-ordered
-    out = assemble_conversations_stateful(st, watermark="13 hours", gap_ms=60 * 1000)
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        replay_to_memory(
+            "stream_conv_assembly",
+            tr.repartition(6),
+            lambda sdf: assemble_conversations_stateful(
+                extract_stream(sdf), watermark="13 hours", gap_ms=60 * 1000
+            ),
+            files_per_trigger=2,
+            mode="append",
+            poke=poke,
+        )
         .where(F.col("conv_id") != "__wm_poke__")
         .select(
             "conv_id",

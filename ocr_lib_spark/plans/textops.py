@@ -26,6 +26,7 @@ from ocr_lib_spark.operators.dedup import (
 from ocr_lib_spark.operators.shingling import set_counts_udf
 from ocr_lib_spark.plans import QueryDef, documents
 from ocr_lib_spark.partitioning import spread_small
+from ocr_lib_spark.streaming.replay import replay_to_memory
 
 N_HASHES = 8
 BAND_ROWS = 2
@@ -524,37 +525,15 @@ def _q_stream_exact_dedup(spark, sf_dir):
     DISTINCT digests — that is global dedup's semantics; a pipeline
     that only needs drop-the-dup (no counts) bounds state with
     dropDuplicatesWithinWatermark instead."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
-
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    tag = _hashlib.md5(f"dedup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_dedup_src_{tag}"
-    if not _Path(src, "_SUCCESS").exists():
-        documents(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+    return replay_to_memory(
+        "stream_exact_dedup",
+        documents(spark, sf_dir).repartition(6),
+        lambda sdf: sdf.groupBy(F.md5("text").alias("digest")).agg(
+            F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id")
+        ),
+        files_per_trigger=2,
+        mode="complete",
     )
-    agg = sdf.groupBy(F.md5("text").alias("digest")).agg(
-        F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id")
-    )
-    name = f"stream_dedup_{tag}"
-    spark.catalog.dropTempView(name)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def _q_stream_dedup_watermark(spark, sf_dir):
@@ -580,51 +559,31 @@ def _q_stream_dedup_watermark(spark, sf_dir):
     sequenced single-file micro-batches. Output is payload-free: WHICH
     physical duplicate survives is arrival-order dependent in any
     streaming engine, the set is not."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
 
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
-
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    tag = _hashlib.md5(f"wmdedup2|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_wmdedup_src_{tag}"
-    if not _Path(src, "_SUCCESS").exists():
-        documents(spark, sf_dir).repartitionByRange(6, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    deduped = (
-        sdf.select(
-            F.md5("text").alias("digest"),
-            F.expr(
-                # doc_id stays BIGINT: an INT cast wraps silently past
-                # 2^31 with ANSI off, making event time non-monotonic so
-                # late rows would drop behind the watermark (ADVICE r05)
-                "timestamp'2024-01-01 00:00:00' + doc_id * INTERVAL '1' SECOND"
-            ).alias("ts"),
+    def dedup(sdf):
+        return (
+            sdf.select(
+                F.md5("text").alias("digest"),
+                F.expr(
+                    # doc_id stays BIGINT: an INT cast wraps silently past
+                    # 2^31 with ANSI off, making event time non-monotonic so
+                    # late rows would drop behind the watermark (ADVICE r05)
+                    "timestamp'2024-01-01 00:00:00' + doc_id * INTERVAL '1' SECOND"
+                ).alias("ts"),
+            )
+            .withWatermark("ts", "30 days")
+            .dropDuplicatesWithinWatermark(["digest"])
+            .select("digest")
         )
-        .withWatermark("ts", "30 days")
-        .dropDuplicatesWithinWatermark(["digest"])
-        .select("digest")
-    )
-    name = f"stream_wmdedup_{tag}"
-    spark.catalog.dropTempView(name)
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+
     # sink-side dedupe of horizon-straddling re-emissions (see docstring)
-    return spark.table(name).distinct()
+    return replay_to_memory(
+        "stream_dedup_watermark",
+        documents(spark, sf_dir).repartitionByRange(6, "doc_id"),
+        dedup,
+        files_per_trigger=2,
+        mode="append",
+    ).distinct()
 
 
 _O_STREAM_WM_DEDUP = "SELECT DISTINCT md5(text) AS digest FROM documents"
@@ -839,46 +798,27 @@ def _q_stream_near_dup(spark, sf_dir):
     production behavior is the operator's max_bucket_members knob,
     unit-tested separately). Same stream==batch gate pattern as
     stream_exact_dedup."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
-
     from ocr_lib_spark.operators.dedup import simhash_bits
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
     from ocr_lib_spark.streaming.stateful import simhash_near_dup_stateful
 
-    snap = parquet_snapshot_id(sf_dir).removeprefix("parquet:")
-    tag = _hashlib.md5(f"neardup|{sf_dir}|{snap}".encode()).hexdigest()[:8]
-    src = f"/tmp/ocr_stream_neardup_src_{tag}"
-    if not _Path(src, "_SUCCESS").exists():
-        documents(spark, sf_dir).repartition(6).write.mode("overwrite").parquet(src)
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    fp = simhash_bits(sdf, n_bits=SIMHASH_BITS)
-    pairs = simhash_near_dup_stateful(
-        fp,
-        n_bits=SIMHASH_BITS,
-        bands=SIMHASH_ND_BANDS,
-        max_hamming=SIMHASH_ND_MAX_HAMMING,
-        # gate parity requires UNCAPPED state (see docstring above);
-        # the operator's default is the bounded production cap
-        max_bucket_members=None,
-    )
-    name = f"stream_neardup_{tag}"
-    spark.catalog.dropTempView(name)
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).distinct()
+    def pairs(sdf):
+        return simhash_near_dup_stateful(
+            simhash_bits(sdf, n_bits=SIMHASH_BITS),
+            n_bits=SIMHASH_BITS,
+            bands=SIMHASH_ND_BANDS,
+            max_hamming=SIMHASH_ND_MAX_HAMMING,
+            # gate parity requires UNCAPPED state (see docstring above);
+            # the operator's default is the bounded production cap
+            max_bucket_members=None,
+        )
+
+    return replay_to_memory(
+        "stream_near_dup",
+        documents(spark, sf_dir).repartition(6),
+        pairs,
+        files_per_trigger=2,
+        mode="append",
+    ).distinct()
 
 
 # --- n-gram Jaccard on adjacent-id pairs (bounded pair set; the exact

@@ -12,12 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ocr_lib_spark.config import DEFAULT_CONFIG, ExtractionConfig
-from ocr_lib_spark.pipeline import EXTRACTED_SCHEMA
-from ocr_lib_spark.operators.extract import extract_batch
-from ocr_lib_spark.operators.prototypes import taught_prototypes
+from ocr_lib_spark.pipeline import _map_extract
 from ocr_lib_spark.sources.synth import transcripts_spark_schema
 
 
@@ -32,33 +29,10 @@ def stream_transcripts(spark, path: str, max_files_per_trigger: int = 4) -> Data
 
 
 def extract_stream(transcripts: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Streaming twin of pipeline.extract_turns (no repartition: the
-    micro-batch split is the parallelism unit; keeps ts for watermarks)."""
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(taught_prototypes())
-
-    # copy — StructType.add mutates in place and EXTRACTED_SCHEMA is shared
-    schema = T.StructType(
-        list(EXTRACTED_SCHEMA.fields) + [T.StructField("ts", T.TimestampType())]
-    )
-
-    def run(batches):
-        protos, labels, keep = bc.value
-        for pdf in batches:
-            res = extract_batch(pdf["text"], cfg, protos, labels, keep)
-            out = pdf[["conv_id", "turn_idx", "role", "ts"]].copy()
-            out["extracted_text"] = res["extracted_text"].values
-            out["spans"] = res["spans"].values
-            out["n_blocks"] = res["n_blocks"].values
-            out["unknown_blocks"] = res["unknown_blocks"].values
-            yield out[
-                [
-                    "conv_id", "turn_idx", "role", "extracted_text",
-                    "spans", "n_blocks", "unknown_blocks", "ts",
-                ]
-            ]
-
-    return transcripts.mapInPandas(run, schema=schema)
+    """Streaming twin of pipeline.extract_turns: the same kernel stage
+    with no repartition (the micro-batch split is the parallelism unit),
+    keeping ts for watermarks."""
+    return _map_extract(transcripts, cfg, carry=("ts",))
 
 
 def windowed_extraction_metrics(
@@ -79,20 +53,3 @@ def windowed_extraction_metrics(
         )
         .select(F.col("w.start").alias("window_start"), "n_turns", "n_content_turns", "n_blocks")
     )
-
-
-def run_stream_to_memory(spark, src_path: str, name: str = "extract_out") -> None:
-    """Drive a bounded file stream to completion synchronously (test/bench
-    harness; production would use a real trigger + checkpointLocation)."""
-    st = extract_stream(stream_transcripts(spark, src_path))
-    q = (
-        st.drop("spans")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

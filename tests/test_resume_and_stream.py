@@ -151,20 +151,19 @@ def test_parquet_snapshot_id_content_addressed(spark, transcripts, tmp_path):
     assert parquet_snapshot_id(p1) != a
 
 
-def test_streaming_matches_batch(spark, transcripts, tmp_path):
-    src = str(tmp_path / "stream_src")
-    transcripts.repartition(6).write.mode("overwrite").parquet(src)
+def test_streaming_matches_batch(spark, transcripts):
+    from ocr_lib_spark.streaming.extract_stream import extract_stream
+    from ocr_lib_spark.streaming.replay import replay_to_memory
 
-    from ocr_lib_spark.streaming.extract_stream import run_stream_to_memory
-
-    run_stream_to_memory(spark, src, name="t_stream_out")
-    got = (
-        spark.sql("SELECT conv_id, turn_idx, extracted_text, n_blocks FROM t_stream_out")
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-        .reset_index(drop=True)
+    out = replay_to_memory(
+        "t_stream_out",
+        transcripts.repartition(6),
+        lambda sdf: extract_stream(sdf).drop("spans"),
+        files_per_trigger=4,
+        mode="append",
     )
-    exp = _sorted_pdf(extract_turns(spark.read.parquet(src)))
+    got = _sorted_pdf(out)
+    exp = _sorted_pdf(extract_turns(transcripts))
     pd.testing.assert_frame_equal(got, exp)
 
 
@@ -567,11 +566,13 @@ def test_stream_session_window_merges_across_microbatches(spark, tmp_path):
     ]
 
 
-def test_wm_poke_files_are_strictly_last_in_mtime_order(spark):
+def test_wm_poke_files_are_strictly_last_in_mtime_order(spark, monkeypatch):
     """ADVICE r7: the __wm_poke__ determinism argument requires the
     file source (which replays in modification-time order) to read the
-    poke AFTER every data file. _stage_poke_last forces that; this pins
-    it on the real staged source dirs for both streaming queries."""
+    poke AFTER every data file. replay_to_memory forces that; this pins
+    it on the real staged source dirs for both streaming queries, read
+    just before each call removes its dir."""
+    import shutil
     from pathlib import Path
 
     from ocr_lib_spark.plans.extraction import (
@@ -579,21 +580,111 @@ def test_wm_poke_files_are_strictly_last_in_mtime_order(spark):
         _q_stream_session_window,
     )
 
-    import hashlib
+    staged = []
+    rmtree = shutil.rmtree
 
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
+    def inspect_then_remove(root):
+        parts = Path(root, "data").glob("*.parquet")
+        staged.append(sorted(p.stat().st_mtime for p in parts))
+        rmtree(root)
 
+    monkeypatch.setattr(shutil, "rmtree", inspect_then_remove)
     sf = "/root/testdata/sf0.001"
     _q_stream_session_window(spark, sf).count()
     _q_stream_conv_assembly(spark, sf).count()
-    snap = parquet_snapshot_id(sf).removeprefix("parquet:")
-    for prefix, key in (
-        ("ocr_stream_sesswin_src", "sesswin-v2"),
-        ("ocr_stream_conv_src", "stateful-v2"),
-    ):
-        tag = hashlib.md5(f"{key}|{sf}|{snap}".encode()).hexdigest()[:8]
-        d = Path(f"/tmp/{prefix}_{tag}")
-        assert d.is_dir(), d
-        parts = sorted(d.glob("*.parquet"), key=lambda p: p.stat().st_mtime)
+    assert len(staged) == 2
+    for mtimes in staged:
         # exactly one poke append; it must sort strictly last
-        assert parts[-1].stat().st_mtime > parts[-2].stat().st_mtime
+        assert mtimes[-1] > mtimes[-2]
+
+
+def _write_documents(sf_dir, texts):
+    """A one-file ``documents`` table whose byte size depends only on
+    the text lengths (no compression, dictionary or statistics)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir.mkdir(exist_ok=True)
+    path = sf_dir / "documents.parquet"
+    table = pa.table({"doc_id": list(range(len(texts))), "text": texts})
+    pq.write_table(
+        table, path, compression="NONE", use_dictionary=False, write_statistics=False
+    )
+    return path.stat().st_size
+
+
+def _expected_exact_dedup(texts):
+    import hashlib
+
+    out = {}
+    for i, t in enumerate(texts):
+        d = hashlib.md5(t.encode()).hexdigest()
+        n, keep = out.get(d, (0, i))
+        out[d] = (n + 1, min(keep, i))
+    return sorted((d, n, keep) for d, (n, keep) in out.items())
+
+
+def test_stream_query_reruns_keep_their_own_rows(spark, tmp_path):
+    """A stream query called twice on one input path keeps each call's
+    rows, even when the second input has the same file names and sizes
+    as the first (a staging cache keyed on the listing would replay the
+    first input), and the first call's table survives the second call
+    reusing its sink name."""
+    from ocr_lib_spark.plans.textops import _q_stream_exact_dedup
+
+    sf = tmp_path / "sf"
+    first_texts = ["alpha beta", "alpha beta", "gamma delt"]
+    second_texts = ["omega zeta", "kappa iota", "kappa iota"]
+    size = _write_documents(sf, first_texts)
+    first = _q_stream_exact_dedup(spark, str(sf))
+    assert sorted(map(tuple, first.collect())) == _expected_exact_dedup(first_texts)
+
+    assert _write_documents(sf, second_texts) == size
+    second = _q_stream_exact_dedup(spark, str(sf))
+    assert sorted(map(tuple, second.collect())) == _expected_exact_dedup(second_texts)
+    assert sorted(map(tuple, first.collect())) == _expected_exact_dedup(first_texts)
+
+
+def test_stream_staging_is_removed_on_success_and_failure(spark, tmp_path, monkeypatch):
+    """Every staged dir is gone once the call returns: after a stream
+    query, after a plan that raises while it is built, and after one
+    whose micro-batch raises."""
+    import tempfile
+    from pathlib import Path
+
+    from ocr_lib_spark.plans.textops import _q_stream_exact_dedup
+    from ocr_lib_spark.streaming.replay import replay_to_memory
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def record(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", record)
+    _write_documents(tmp_path / "sf", ["a b", "a b", "c d"])
+    assert _q_stream_exact_dedup(spark, str(tmp_path / "sf")).count() == 2
+
+    def bad_plan(sdf):
+        raise ValueError("plan failed")
+
+    def bad_batch(batches):
+        for _ in batches:
+            raise ValueError("batch failed")
+        yield from ()
+
+    with pytest.raises(ValueError, match="plan failed"):
+        replay_to_memory(
+            "t_bad_plan", spark.range(3), bad_plan, files_per_trigger=1, mode="append"
+        )
+    with pytest.raises(Exception, match="batch failed"):
+        replay_to_memory(
+            "t_bad_batch",
+            spark.range(3),
+            lambda sdf: sdf.mapInPandas(bad_batch, schema=sdf.schema),
+            files_per_trigger=1,
+            mode="append",
+        )
+    assert len(made) == 3
+    assert not [d for d in made if Path(d).exists()]

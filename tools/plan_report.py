@@ -39,7 +39,7 @@ def plan_stats(df) -> dict:
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", p))),
         "scans": sorted(set(scans)),
         "pushed": pushed,
-        "python": ("ArrowEvalPython" in p) or ("MapInPandas" in p) or ("FlatMapGroupsInPandas" in p),
+        "python": re.search(r"ArrowEvalPython|MapIn(Pandas|Arrow)|FlatMapGroupsInPandas", p) is not None,
     }
 
 
@@ -57,7 +57,8 @@ def main() -> None:
         f"Source: `{sf_dir}`. Shuffle exchanges exclude broadcasts. A scan's",
         "ReadSchema shows column pruning; PushedFilters shows predicate",
         "pushdown reaching parquet. `python-stage` marks Arrow-batched",
-        "pandas-UDF stages (the engine's only non-codegen operators).",
+        "pandas-UDF and mapInArrow stages (the engine's only non-codegen",
+        "operators).",
         "",
         "| query | shuffles | broadcasts | codegen spans | python stage | pushed filters | narrowest scan |",
         "|---|---|---|---|---|---|---|",
