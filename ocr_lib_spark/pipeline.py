@@ -2,29 +2,42 @@
 
 Reference lifecycle (SURVEY.md §3.1, core.clj:1772-1806): decode ->
 stripe-parallel segmentation -> prototype load -> bucket-parallel
-classification -> ordered reassembly. Spark recast, one job:
+classification -> ordered reassembly. Spark recast:
 
     transcripts
-      -> repartition(P, conv_id, turn_idx)      # salted spread: hashing
-         (turn_idx participates in the key, so a 10^6-turn conversation
-          spreads across all partitions — the divide-rows/skew analog,
-          core.clj:1519-1589)
-      -> mapInPandas(extract_batch)             # segment + classify +
-         (prototype matrix broadcast once —       assemble, Arrow batches
-          stage 2 of the reference becomes a
-          broadcast variable, not a job)
+      -> repartition(P, conv_id, turn_idx)      # salted spread when the scan
+         (turn_idx in the key spreads a           under-fills the cores: the
+          10^6-turn conversation too)             divide-rows/skew analog,
+                                                  core.clj:1519-1589
+      -> mapInArrow(extract_batch)              # segment + classify +
+         (prototype matrix broadcast once)        assemble, per distinct payload
+      -> groupBy(conv_id) assembly              # sort-rows + text assembly,
+                                                  core.clj:753-785, 1687-1689
       -> stable (conv_id, turn_idx) ordering on demand
 
 Extraction is turn-local (the single biggest simplification vs the
 reference: components never span turns, so the whole stripe-boundary
 merge machinery core.clj:1392-1458 disappears — SURVEY.md §4).
+
+Where a pass spends its time, from traced ``extract_dup`` benchmark
+runs (local[4], 60,000 turns in 1,200 conversations, 4 files): with
+extraction in ``mapInPandas`` and a two-level chunked assembly behind
+``repartition("conv_id")``, 2.43 s of task time went outside the kernel
+(``pipeline.boundary_s``) and 0.79 s to assembly, against 0.82 s of
+kernel CPU. The Arrow stage (``_map_extract``) and the one combining
+aggregation (``assemble_conversations``) give 1.70 s and 0.57 s, and
+the median pass of 10 alternating benchmark pairs went 1.241 ->
+1.002 s.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ocr_lib_spark.config import DEFAULT_CONFIG, ExtractionConfig
 from ocr_lib_spark.operators.extract import extract_batch
@@ -64,7 +77,7 @@ def extract_turns(
     """transcripts(conv_id, turn_idx, role, text, ...) -> extracted turns.
 
     The prototype matrix is broadcast once (nauci-slova analog); the
-    heavy work runs in Arrow-batched ``mapInPandas`` so a 1000-executor
+    heavy work runs in Arrow-batched ``mapInArrow`` so a 1000-executor
     cluster scales linearly — no grouping, no shuffle beyond the one
     explicit balancing repartition (skippable when the upstream layout
     is already balanced, e.g. fresh parquet splits).
@@ -135,26 +148,33 @@ def _map_extract(
     of ``src`` (conv_id, turn_idx, role, text, ...) with the prototype
     matrix broadcast once. Emits EXTRACTED_SCHEMA plus the ``carry``
     columns of ``src``, passed through (the streaming plan carries
-    ``ts`` for its watermark)."""
+    ``ts`` for its watermark).
+
+    Each batch's ``text`` is dictionary-encoded (null is one of the
+    values), the kernel runs over the distinct payloads only, and its
+    four result columns fan out with ``take(indices)``. conv_id,
+    turn_idx, role and the carry columns stay Arrow columns: only the
+    distinct payloads and their results cross into pandas."""
     bc = src.sparkSession.sparkContext.broadcast(taught_prototypes())
     schema = T.StructType(EXTRACTED_SCHEMA.fields + [src.schema[c] for c in carry])
+    # extract_batch's four output columns, after conv_id, turn_idx, role
+    results = [(f.name, to_arrow_type(f.dataType)) for f in EXTRACTED_SCHEMA.fields[3:]]
 
     def run(batches):
         protos, labels, keep = bc.value
         tm: dict | None = {} if stage_acc is not None else None
-        for pdf in batches:
-            res = extract_batch(pdf["text"], cfg, protos, labels, keep, timings=tm)
-            out = pdf[["conv_id", "turn_idx", "role"]].copy()
-            for c in ("extracted_text", "spans", "n_blocks", "unknown_blocks"):
-                out[c] = res[c].values
-            for c in carry:
-                out[c] = pdf[c].values
-            yield out
+        for batch in batches:
+            text = pc.dictionary_encode(batch.column("text"), null_encoding="encode")
+            res = extract_batch(text.dictionary.to_pandas(), cfg, protos, labels, keep, timings=tm)
+            cols = [batch.column(c) for c in ("conv_id", "turn_idx", "role")]
+            cols += [pa.array(res[c], type=t).take(text.indices) for c, t in results]
+            cols += [batch.column(c) for c in carry]
+            yield pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
         if stage_acc is not None and tm:
             for k, acc in stage_acc.items():
                 acc.add(tm.get(k, 0.0))
 
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema=schema)
 
 
 def ordered(extracted: DataFrame) -> DataFrame:
@@ -168,82 +188,49 @@ def ordered(extracted: DataFrame) -> DataFrame:
 def assemble_conversations(
     extracted: DataFrame,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
-    chunk_turns: int = 1024,
 ) -> DataFrame:
     """Conversation-level document assembly: turn texts concatenated in
     turn order (per-row text assembly + newline insertion analog,
     core.clj:1687-1689) — pure Catalyst, no UDF.
 
-    One plan, one exchange. The input is hash-partitioned ONCE on
-    ``conv_id``; then a two-level chunked concat runs inside that
-    stage. Level 1 groups by (conv_id, turn_idx // chunk_turns) and
-    joins each chunk's non-empty turns; level 2 joins the chunk strings
-    in chunk order. ``HashPartitioning(conv_id)`` satisfies the
-    clustering both aggregates require (each groups by a superset of
-    ``conv_id``), so neither adds an exchange of its own. Each
-    aggregation buffer holds at most ``chunk_turns`` turn structs
-    (level 1) or n_turns/chunk_turns chunk strings (level 2): a 10^6-
-    turn conversation never materializes as ONE 10^6-element
-    collect_list row, though all of its chunks run in one task.
+    One ``groupBy("conv_id")``: ``collect_list`` of (turn_idx,
+    extracted_text), ``array_sort``, then a join of the non-empty texts.
+    The partial aggregate runs before the exchange, so each map task
+    ships one buffer per conversation it saw, not one row per turn; an
+    input already in one partition needs no exchange at all.
 
-    The price is map-side combining: the exchange runs before either
-    aggregate, so turn rows cross it uncombined. Measured extract +
-    assemble at local[4], sf0.1, noop sink, on the benchmark's
-    12x-replicated corpus (medians of 10 alternating reps, 3 sessions):
-    0.68-0.73 s, vs 0.71-0.81 s with one exchange per level and
-    0.63-0.64 s for one unchunked groupBy — the chunk bound costs
-    0.05-0.09 s there. An input already in one partition, which satisfied
-    both aggregates with no exchange at all, now pays this one.
+    Each conversation's turns meet in one aggregation buffer, in one
+    task. A two-level plan that bounds that buffer at 1024 turns per
+    chunk lost in every case measured against this one (local[4],
+    2 GB heap, one 10^6-turn conversation in 8 partitions, 1/7 of its
+    turns empty; median of 6 warm reps):
+
+    | non-empty turn | this plan | two-level |
+    |---|---|---|
+    | 50 B | 1.93 s | 2.30 s |
+    | 110 B | 2.35 s | 2.71 s |
+    | 190 B | 3.39 s (2 reps) | 4.51 s (2 reps) |
+    | 250 B | not run | fails, ``Java heap space`` |
+    | 310 B | 5.2 s (2 reps) | fails, ``Java heap space`` |
+    | 410 B | fails, ``Java heap space`` | not run |
     """
-    if chunk_turns < 1:
-        raise ValueError(f"chunk_turns must be >= 1, got {chunk_turns}")
     sep = cfg.block_separator
-    content = F.sum(F.when(F.col("extracted_text") != "", 1).otherwise(0))
-    chunks = (
-        extracted.repartition("conv_id")
-        .groupBy(
-            "conv_id",
-            F.floor(F.col("turn_idx") / F.lit(chunk_turns)).alias("chunk_idx"),
-        )
+    return (
+        extracted.groupBy("conv_id")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("turn_idx", "extracted_text"))
             ).alias("ordered"),
-            F.count("*").alias("c_turns"),
-            content.alias("c_content"),
+            F.count("*").alias("n_turns"),
+            F.sum(F.when(F.col("extracted_text") != "", 1).otherwise(0)).alias(
+                "n_content_turns"
+            ),
         )
         .select(
             "conv_id",
-            "chunk_idx",
-            # join the chunk's non-empty turns now: downstream carries ONE
-            # string per chunk, not chunk_turns structs
             F.array_join(
                 F.filter(
                     F.transform("ordered", lambda s: s.extracted_text),
-                    lambda t: t != "",
-                ),
-                sep,
-            ).alias("chunk_text"),
-            "c_turns",
-            "c_content",
-        )
-    )
-    return (
-        chunks.groupBy("conv_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("chunk_idx", "chunk_text"))).alias(
-                "ordered"
-            ),
-            F.sum("c_turns").alias("n_turns"),
-            F.sum("c_content").alias("n_content_turns"),
-        )
-        .select(
-            "conv_id",
-            # all-empty chunks join to '' and are filtered here, exactly as
-            # empty turns are at level 1
-            F.array_join(
-                F.filter(
-                    F.transform("ordered", lambda s: s.chunk_text),
                     lambda t: t != "",
                 ),
                 sep,

@@ -440,10 +440,10 @@ def _q_conv_loop_detect(spark, sf_dir):
     (conv, turn order) window flags run starts, a cumulative sum
     numbers the runs, one groupBy counts them. Scale: both windows
     partition by conv_id (the loss_mask_spans precedent) — fine for
-    the fixture's bounded convs; a 10^6-turn conversation would run
-    the same two windows over its chunked assembly order
-    (pipeline.assemble_conversations chunk keys) to bound partitions;
-    the aggregates themselves are map-side combinable. Ref analog:
+    the fixture's bounded convs; a 10^6-turn conversation runs each
+    window in one task, as assemble_conversations holds it in one
+    aggregation buffer; the aggregates themselves are map-side
+    combinable. Ref analog:
     run-length boundary detection (event_run_length) applied to the
     extraction output."""
     tr = transcripts_from_documents(spark, sf_dir)
@@ -592,8 +592,9 @@ def loss_mask_spans(ex, cfg=None):
     `conv_text[mask_start:mask_end]` is exactly the assistant turn's
     extracted text (pinned by test for the default AND a 2-char
     separator). One window per conversation — the same bounded-key
-    shape as event_reindex; a 10^6-turn conversation would use the
-    chunked two-level variant assembly already implements."""
+    shape as event_reindex, and the same per-conversation unit as
+    assemble_conversations' one aggregation buffer: a 10^6-turn
+    conversation sorts in one task."""
     from pyspark.sql import Window
 
     from ocr_lib_spark.config import DEFAULT_CONFIG

@@ -43,7 +43,7 @@ def get_spark(
     app: str = "ocr-lib-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "6g",
+    driver_memory: str = "2g",
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
@@ -57,7 +57,8 @@ def get_spark(
       allocation is kernel-bound (mmap + page zeroing showed up as
       60-70%% sys time). ``-Xms == -Xmx`` + ``AlwaysPreTouch`` keeps the
       steady state out of the kernel; on a real cluster this is the
-      standard executor sizing rule (fixed heap per executor).
+      standard executor sizing rule (fixed heap per executor). The 2 GB
+      default is the heap the benchmark runs both workloads in.
     - Python daemon ``ocr_lib_spark.pydaemon``: workers stop re-parsing
       SPARK_HOME's zip archives at every task start (0.15-0.29 s of
       Python CPU per task). The daemon imports this package before any

@@ -2,7 +2,7 @@
 
 The reference has no streaming (progress atoms are its only live state,
 core.clj:15-19). Here the batch extraction core is reused verbatim under
-Structured Streaming — mapInPandas is stateless per-turn, so the
+Structured Streaming — the Arrow kernel stage is stateless per turn, so the
 streaming plan is the batch plan with a source swap, plus a watermarked
 tumbling-window metrics aggregation (late turns tolerated up to the
 watermark).

@@ -50,8 +50,7 @@ OUTPUT_SCHEMA = T.StructType(
 #: conversation materialized a million-element python list of strings
 #: through the GroupState tuple codec on EVERY update — the one
 #: remaining 10^6-turn OOM hazard. Now state is keyed per chunk
-#: (``turn_idx // chunk_turns``, mirroring the batch twin's two-level
-#: plan, pipeline.assemble_conversations): per chunk ONE byte-store
+#: (``turn_idx // chunk_turns``): per chunk ONE byte-store
 #: (the chunk's texts concatenated, UTF-8, no separators) and ONE
 #: packed meta blob ((turn_idx, byte_len) int32 pairs in sorted
 #: order), so element count is O(n_turns / chunk_turns) and per-update
@@ -117,8 +116,10 @@ def assemble_conversations_stateful(
     State is CHUNKED per ``chunk_turns`` (see STATE_SCHEMA): a turn
     arriving for chunk ``turn_idx // chunk_turns`` rewrites only that
     chunk's byte-store, and the state row holds O(n_turns/chunk_turns)
-    elements, never a per-turn array — the streaming twin of the batch
-    assembler's two-level chunked concat (pipeline.py)."""
+    elements, never a per-turn array. The batch assembler
+    (pipeline.assemble_conversations) has no chunks: its aggregation
+    buffer lives for one task, this state is re-encoded on every
+    update that touches the conversation."""
     if chunk_turns < 1:
         raise ValueError(f"chunk_turns must be >= 1, got {chunk_turns}")
     sep_b = separator.encode()

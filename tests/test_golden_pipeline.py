@@ -214,3 +214,136 @@ def test_loss_mask_spans_multi_char_separator(spark):
     )
     assert len(joined) > 0
     assert (joined.sliced == joined.extracted_text).all()
+
+
+def _kernel_rows(pdf):
+    """``extract_batch`` on the frame's pandas ``text`` column, keyed by
+    (conv_id, turn_idx), in the shape ``toPandas`` gives Spark's rows."""
+    from ocr_lib_spark.operators.extract import extract_batch
+
+    res = extract_batch(pdf["text"])
+    return {
+        (c, int(t)): (x, [(s["start"], s["end"], s["label"]) for s in sp], int(nb), list(u))
+        for c, t, x, sp, nb, u in zip(
+            pdf.conv_id, pdf.turn_idx, res.extracted_text, res.spans, res.n_blocks,
+            res.unknown_blocks,
+        )
+    }
+
+
+def _spark_rows(out):
+    return {
+        (r.conv_id, int(r.turn_idx)): (
+            r.extracted_text,
+            [(s["start"], s["end"], s["label"]) for s in r.spans],
+            int(r.n_blocks),
+            list(r.unknown_blocks),
+        )
+        for r in out.itertuples()
+    }
+
+
+def test_arrow_stage_edge_cases_equal_extract_batch(spark, corpus_pdf):
+    """The Arrow extraction stage gives exactly ``extract_batch``'s rows
+    for null and empty text, a batch whose payloads all repeat, and
+    empty partitions; ``extract_stream`` passes ``ts`` through
+    bit-identical."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from ocr_lib_spark.sources.synth import transcripts_spark_schema
+    from ocr_lib_spark.streaming.extract_stream import extract_stream
+
+    schema = transcripts_spark_schema()
+    payload = corpus_pdf.text[corpus_pdf.text.str.len().idxmax()]
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 1)
+    repeated = pd.DataFrame(
+        [("conv-rep", i, "user", payload, None, t0) for i in range(40)], columns=schema.names
+    )
+    texts = [None, "", payload, None, "", corpus_pdf.text.iloc[0]]
+    rows = [
+        ("conv-edge", i, "user", x, None, None if i == 3 else t0 + dt.timedelta(seconds=i))
+        for i, x in enumerate(texts)
+    ]
+    edge = pd.DataFrame(rows, columns=schema.names)
+    df = spark.createDataFrame(repeated, schema=schema).coalesce(1).union(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, len(rows) + 3), schema)
+    )
+    # the repeated payloads arrive as one batch, and some partitions are empty
+    assert sorted(df.rdd.glom().map(len).collect())[0] == 0
+    assert max(df.rdd.glom().map(len).collect()) == len(repeated)
+
+    pdf = pd.concat([repeated, edge], ignore_index=True)
+    want = _kernel_rows(pdf)
+    assert want[("conv-edge", 0)] == ("", [], 0, [])
+    got = extract_turns(df, repartition=False)
+    assert _spark_rows(got.toPandas()) == want
+
+    streamed = extract_stream(df).select(
+        "conv_id", "turn_idx", F.unix_micros("ts").alias("us"),
+        *[c for c in got.columns if c not in ("conv_id", "turn_idx", "role")],
+    ).toPandas()
+    assert _spark_rows(streamed) == want
+    ts_in = df.select("conv_id", "turn_idx", F.unix_micros("ts").alias("us")).toPandas()
+    key = ["conv_id", "turn_idx"]
+    pd.testing.assert_frame_equal(
+        streamed[key + ["us"]].sort_values(key).reset_index(drop=True),
+        ts_in.sort_values(key).reset_index(drop=True),
+    )
+
+
+def test_assembly_on_replicated_file_layout_matches_pandas(spark, corpus_pdf, golden, tmp_path):
+    """The benchmark's extraction layout, scaled down: whole replicas of
+    the corpus dealt to single-row-group files (each conversation inside
+    one file, every payload repeated within a file), one file per core,
+    read by a plain scan. Assembly of the extracted turns equals the
+    pandas golden."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n_files, per_file = spark.sparkContext.defaultParallelism, 2
+    rng = np.random.default_rng(3)
+    for k in range(n_files):
+        part = pd.concat(
+            [corpus_pdf.assign(conv_id=corpus_pdf.conv_id + f"-{k}-{r}") for r in range(per_file)],
+            ignore_index=True,
+        ).iloc[rng.permutation(per_file * len(corpus_pdf))]
+        part = part.astype({"turn_idx": "int32"})
+        pq.write_table(
+            pa.Table.from_pandas(part, preserve_index=False),
+            tmp_path / f"part-{k:04d}.parquet",
+            coerce_timestamps="us",
+        )
+    src = spark.read.parquet(str(tmp_path))
+    assert src.rdd.getNumPartitions() == n_files
+    got = (
+        assemble_conversations(extract_turns(src))
+        .orderBy("conv_id")
+        .toPandas()
+        .reset_index(drop=True)
+    )
+    base = golden.groupby("conv_id").agg(
+        conv_text=("extracted_text", lambda s: "\n".join(x for x in s if x != "")),
+        n_turns=("extracted_text", "size"),
+        n_content_turns=("extracted_text", lambda s: int((s != "").sum())),
+    )
+    exp = (
+        pd.concat(
+            [
+                base.rename(index=lambda c, s=f"-{k}-{r}": c + s)
+                for k in range(n_files)
+                for r in range(per_file)
+            ]
+        )
+        .rename_axis("conv_id")
+        .reset_index()
+        .sort_values("conv_id")
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(exp) == n_files * per_file * corpus_pdf.conv_id.nunique()
+    assert (got.conv_id.values == exp.conv_id.values).all()
+    assert (got.conv_text.values == exp.conv_text.values).all()
+    assert (got.n_turns.values == exp.n_turns.values).all()
+    assert (got.n_content_turns.values == exp.n_content_turns.values).all()

@@ -80,10 +80,9 @@ def main() -> None:
     lines += [
         "",
         "Notes:",
-        "- conv_* assembly adds ONE shuffle, on conv_id: both levels of the",
-        "  chunked concat (bounded aggregation buffers for mega-conversations)",
-        "  run inside that stage, since conv_id hash partitioning satisfies",
-        "  the (conv_id, chunk) and the conv_id aggregates alike.",
+        "- conv_* assembly is one groupBy(conv_id) with a map-side partial",
+        "  aggregate: at most ONE shuffle, on conv_id, and none when its",
+        "  input already sits in one partition.",
         "- stream_extract_text is audited post-hoc (memory sink), so its row",
         "  shows the sink scan, not the streaming micro-batch plan; ditto",
         "  stream_conv_assembly (stateful applyInPandasWithState plan).",
