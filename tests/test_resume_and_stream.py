@@ -1,16 +1,26 @@
 """Resume + streaming tests (SURVEY.md §5 new-engine strategy (d)):
 kill-after-N-buckets -> re-run -> identical output, no duplicate lineage."""
 
+from pathlib import Path
+
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from ocr_lib_spark.pipeline import extract_turns, ordered
+from ocr_lib_spark.sources import lineage
 from ocr_lib_spark.sources.lineage import (
+    committed_buckets,
     read_lineage,
     read_output,
     run_with_resume,
+    snapshot_id_of,
 )
 from ocr_lib_spark.sources.synth import generated_transcripts_df
+
+#: snapshot id of the ``transcripts`` fixture, which is cached and so
+#: reads no files to derive one from
+SNAP = "test:gen-40-11"
 
 
 @pytest.fixture(scope="module")
@@ -32,14 +42,14 @@ def test_resume_after_injected_failure(spark, transcripts, tmp_path):
     n_buckets = 8
 
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_resume(transcripts, out, n_buckets=n_buckets, fail_after=3)
+        run_with_resume(transcripts, out, n_buckets=n_buckets, input_snapshot_id=SNAP, fail_after=3)
 
     lin = read_lineage(spark, out).toPandas()
     assert len(lin) == 3
     assert set(lin.status) == {"committed"}
 
     # resume: completes only the remaining buckets
-    n2 = run_with_resume(transcripts, out, n_buckets=n_buckets)
+    n2 = run_with_resume(transcripts, out, n_buckets=n_buckets, input_snapshot_id=SNAP)
     assert n2 == n_buckets - 3
 
     lin2 = read_lineage(spark, out).toPandas()
@@ -53,7 +63,7 @@ def test_resume_after_injected_failure(spark, transcripts, tmp_path):
     pd.testing.assert_frame_equal(got, exp)
 
     # idempotent: a third run does nothing
-    assert run_with_resume(transcripts, out, n_buckets=n_buckets) == 0
+    assert run_with_resume(transcripts, out, n_buckets=n_buckets, input_snapshot_id=SNAP) == 0
 
     # lineage schema v2: measured per-stage kernel profile is recorded
     # (the core.clj:108-165 weighted-progress recast); stages that did
@@ -64,91 +74,124 @@ def test_resume_after_injected_failure(spark, transcripts, tmp_path):
     assert int(lin2.classify_ms.sum()) >= 0
 
 
-def test_batched_bucket_jobs_identical_output(spark, transcripts, tmp_path):
-    """buckets_per_job>1 amortizes Spark-job overhead (4096 buckets /
-    32 per job = 128 jobs at scale) with identical output, complete
-    per-bucket lineage, and unchanged resume semantics."""
-    out = str(tmp_path / "batched")
-    n_buckets = 8
-    n = run_with_resume(transcripts, out, n_buckets=n_buckets, buckets_per_job=3)
-    assert n == n_buckets
-
-    lin = read_lineage(spark, out).toPandas()
-    assert len(lin) == n_buckets and lin.bucket.is_unique
-    assert int(lin.turn_count.sum()) == transcripts.count()
-
-    got = _sorted_pdf(read_output(spark, out))
-    exp = _sorted_pdf(extract_turns(transcripts))
-    pd.testing.assert_frame_equal(got, exp)
-
-    # idempotent under the same snapshot, batched or not
-    assert run_with_resume(transcripts, out, n_buckets=n_buckets, buckets_per_job=3) == 0
-    assert run_with_resume(transcripts, out, n_buckets=n_buckets) == 0
-
-    # crash mid-run: fail_after fires at group granularity; resume
-    # completes only the remaining buckets
-    out2 = str(tmp_path / "batched_fail")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_resume(
-            transcripts, out2, n_buckets=n_buckets, buckets_per_job=3, fail_after=3
-        )
-    done = len(read_lineage(spark, out2).toPandas())
-    assert done == 3  # first group of 3 committed
-    n2 = run_with_resume(transcripts, out2, n_buckets=n_buckets, buckets_per_job=3)
-    assert n2 == n_buckets - done
-    pd.testing.assert_frame_equal(_sorted_pdf(read_output(spark, out2)), exp)
-
-
 def test_resume_is_keyed_on_input_snapshot(spark, transcripts, tmp_path):
-    """A changed input snapshot invalidates committed buckets AND the
-    staging layout: lineage rows committed against snapshot A do not
-    block re-processing under snapshot B, and the output reflects the
-    NEW input (the Iceberg snapshot-id contract on plain parquet)."""
+    """A changed input invalidates committed buckets AND the staging
+    layout under the DEFAULT snapshot id (derived from the files the
+    frame reads): lineage rows committed against input A do not block
+    re-processing of input B, and the output reflects the NEW input
+    (the Iceberg snapshot-id contract on plain parquet)."""
     from pyspark.sql import functions as F
-
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
 
     out = str(tmp_path / "snap_run")
     n_buckets = 4
 
+    # input A: half the conversations; input B: all of them
     in_a = str(tmp_path / "input_a")
-    transcripts.write.mode("overwrite").parquet(in_a)
-    snap_a = parquet_snapshot_id(in_a)
+    transcripts.where(F.crc32("conv_id") % 2 == 0).write.parquet(in_a)
     df_a = spark.read.parquet(in_a)
-    n1 = run_with_resume(df_a, out, n_buckets=n_buckets, input_snapshot_id=snap_a)
-    assert n1 == n_buckets
-    assert run_with_resume(df_a, out, n_buckets=n_buckets, input_snapshot_id=snap_a) == 0
+    assert run_with_resume(df_a, out, n_buckets=n_buckets) == n_buckets
+    assert run_with_resume(df_a, out, n_buckets=n_buckets) == 0
 
-    # new snapshot: half the conversations
     in_b = str(tmp_path / "input_b")
-    df_small = df_a.where(F.crc32("conv_id") % 2 == 0)
-    df_small.write.mode("overwrite").parquet(in_b)
-    snap_b = parquet_snapshot_id(in_b)
-    assert snap_b != snap_a
+    transcripts.write.parquet(in_b)
     df_b = spark.read.parquet(in_b)
-    n2 = run_with_resume(df_b, out, n_buckets=n_buckets, input_snapshot_id=snap_b)
+    n2 = run_with_resume(df_b, out, n_buckets=n_buckets)
     assert n2 == n_buckets  # every bucket reprocessed for the new snapshot
 
     lin = read_lineage(spark, out).toPandas()
-    current = lin[lin.input_snapshot_id == snap_b]
-    assert len(current) == n_buckets
-    assert int(current.turn_count.sum()) == df_b.count()
+    assert set(lin.input_snapshot_id) == {snapshot_id_of(df_b)}
+    assert len(lin) == n_buckets
+    assert int(lin.turn_count.sum()) == df_b.count() == transcripts.count()
     # output matches a straight-through run over the NEW input
     got = _sorted_pdf(read_output(spark, out))
     exp = _sorted_pdf(extract_turns(df_b))
     pd.testing.assert_frame_equal(got, exp)
 
 
-def test_parquet_snapshot_id_content_addressed(spark, transcripts, tmp_path):
+def test_snapshot_id_tracks_input_files(spark, transcripts, tmp_path):
     p1 = str(tmp_path / "s1")
     transcripts.coalesce(1).write.mode("overwrite").parquet(p1)
-    from ocr_lib_spark.sources.lineage import parquet_snapshot_id
 
-    a = parquet_snapshot_id(p1)
-    assert a == parquet_snapshot_id(p1)  # stable
+    a = snapshot_id_of(spark.read.parquet(p1))
+    assert a == snapshot_id_of(spark.read.parquet(p1))  # same files, same id
     # appending a file changes the snapshot
     transcripts.limit(5).coalesce(1).write.mode("append").parquet(p1)
-    assert parquet_snapshot_id(p1) != a
+    assert snapshot_id_of(spark.read.parquet(p1)) != a
+
+
+def test_frame_without_input_files_needs_snapshot_id(transcripts, tmp_path):
+    assert transcripts.inputFiles() == []
+    with pytest.raises(ValueError, match="input_snapshot_id"):
+        run_with_resume(transcripts, str(tmp_path / "out"), n_buckets=2)
+    assert not (tmp_path / "out").exists()
+
+
+def test_crash_before_marker_reruns_only_that_bucket(spark, transcripts, tmp_path, monkeypatch):
+    """The last bucket's data is written, then its marker write fails:
+    the resume re-runs that bucket alone and the output is exact."""
+    out = str(tmp_path / "torn")
+    n_buckets = 4
+    real, calls = lineage._write_marker, []
+
+    def fail_last(path, row):
+        calls.append(row["bucket"])
+        if len(calls) == n_buckets:
+            raise OSError("crash before marker")
+        real(path, row)
+
+    monkeypatch.setattr(lineage, "_write_marker", fail_last)
+    with pytest.raises(OSError, match="crash before marker"):
+        run_with_resume(transcripts, out, n_buckets=n_buckets, input_snapshot_id=SNAP)
+    monkeypatch.undo()
+
+    assert committed_buckets(out, SNAP) == set(range(n_buckets - 1))
+    assert (Path(out) / "data" / f"bucket={n_buckets - 1}").exists()
+    assert run_with_resume(transcripts, out, n_buckets=n_buckets, input_snapshot_id=SNAP) == 1
+    got = _sorted_pdf(read_output(spark, out))
+    pd.testing.assert_frame_equal(got, _sorted_pdf(extract_turns(transcripts)))
+
+
+def test_temporary_marker_is_never_committed(spark, transcripts, tmp_path, monkeypatch):
+    """A marker left under its temporary name (crash between fsync and
+    rename) holds a whole committed row but never counts as committed."""
+    out = str(tmp_path / "tmp_marker")
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(lineage.os, "replace", crash)
+    with pytest.raises(OSError, match="crash before rename"):
+        run_with_resume(transcripts, out, n_buckets=2, input_snapshot_id=SNAP)
+    monkeypatch.undo()
+
+    (tmp,) = (Path(out) / "lineage").iterdir()
+    assert pq.read_table(tmp).to_pylist()[0]["status"] == "committed"
+    assert committed_buckets(out, SNAP) == set()
+    assert run_with_resume(transcripts, out, n_buckets=2, input_snapshot_id=SNAP) == 2
+    assert len(read_lineage(spark, out).toPandas()) == 2
+
+
+def test_commit_job_count(spark, transcripts, tmp_path):
+    """Each pending bucket costs one Spark job plus a fixed few per
+    call; a no-op resume starts none beyond the caller's input read."""
+    sc = spark.sparkContext
+    src = str(tmp_path / "input")
+    transcripts.repartition(4).write.parquet(src)
+    df = spark.read.parquet(src)  # the caller's read, outside the groups
+    out, n_buckets = str(tmp_path / "out"), 8
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            n = run_with_resume(df, out, n_buckets=n_buckets)
+        finally:
+            sc.setJobGroup("idle", "idle")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n, n_jobs = jobs("lineage-commit")
+    assert n == n_buckets and n_jobs <= n_buckets + 5
+    assert jobs("lineage-noop") == (0, 0)
 
 
 def test_streaming_matches_batch(spark, transcripts):
@@ -258,7 +301,7 @@ def test_iceberg_snapshot_lineage_roundtrip(spark, transcripts, tmp_path):
     cluster configured per the lineage module docstring
     (spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog),
     the first run exercises the full snapshot-keyed resume contract
-    with the TABLE's snapshot id replacing parquet_snapshot_id — with
+    with the TABLE's snapshot id as input_snapshot_id — with
     zero extra work beyond submitting this suite."""
     from ocr_lib_spark.sources.lineage import run_with_resume, try_iceberg
 

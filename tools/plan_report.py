@@ -26,15 +26,19 @@ def plan_stats(df) -> dict:
         df.explain("formatted")
     p = buf.getvalue()
     # Exchange counts come from the FINAL executed tree (AQE may reuse
-    # or eliminate exchanges); scan/codegen details from the full text
-    # (operator details are printed after the initial-plan section).
+    # or eliminate exchanges, depending on which stages finish first);
+    # ``planned_shuffles`` from the initial tree, which is the same on
+    # every call. Scan/codegen details come from the full text (operator
+    # details are printed after the trees, past the first blank line).
     final_tree = p.split("== Initial Plan ==")[0]
+    initial_tree = p.split("\n\n")[0].split("== Initial Plan ==")[-1]
     scans = []
     for m in re.finditer(r"Scan parquet[^\n]*\n(?:.*\n)*?.*ReadSchema: ([^\n]+)", p):
         scans.append(m.group(1).strip())
     pushed = sorted(set(f for f in re.findall(r"PushedFilters: \[([^\]]*)\]", p) if f))
     return {
         "exchanges": final_tree.count("Exchange") - final_tree.count("BroadcastExchange"),
+        "planned_shuffles": len(re.findall(r"\bExchange \(", initial_tree)),
         "broadcasts": final_tree.count("BroadcastExchange"),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", p))),
         "scans": sorted(set(scans)),
@@ -54,25 +58,28 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan audit (auto-generated by tools/plan_report.py)",
         "",
-        f"Source: `{sf_dir}`. Shuffle exchanges exclude broadcasts. A scan's",
+        f"Source: `{sf_dir}`. Shuffle exchanges exclude broadcasts. `shuffles`",
+        "counts the final adaptive plan, which can change from run to run;",
+        "`planned` counts the initial plan, which does not. A scan's",
         "ReadSchema shows column pruning; PushedFilters shows predicate",
         "pushdown reaching parquet. `python-stage` marks Arrow-batched",
         "pandas-UDF and mapInArrow stages (the engine's only non-codegen",
         "operators).",
         "",
-        "| query | shuffles | broadcasts | codegen spans | python stage | pushed filters | narrowest scan |",
-        "|---|---|---|---|---|---|---|",
+        "| query | shuffles | planned | broadcasts | codegen spans | python stage "
+        "| pushed filters | narrowest scan |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     for name, fn in entry_mod.queries().items():
         try:
             st = plan_stats(fn(spark, sf_dir))
         except Exception as e:  # pragma: no cover
-            lines.append(f"| {name} | ERROR: {type(e).__name__} | | | | | |")
+            lines.append(f"| {name} | ERROR: {type(e).__name__} | | | | | | |")
             continue
         scan = min(st["scans"], key=len) if st["scans"] else "(in-memory)"
         pushed = "; ".join(st["pushed"])[:80] or "—"
         lines.append(
-            f"| {name} | {st['exchanges']} | {st['broadcasts']} | "
+            f"| {name} | {st['exchanges']} | {st['planned_shuffles']} | {st['broadcasts']} | "
             f"{st['codegen_spans']} | {'yes' if st['python'] else '—'} | "
             f"{pushed} | `{scan[:90]}` |"
         )
