@@ -77,20 +77,30 @@ def md5_fingerprint(text: Column | str) -> Column:
     return F.md5(c)
 
 
-def hex_bucket(text: Column | str, n_buckets: int = 1024) -> Column:
-    """Stable integer bucket from the md5 prefix — the cross-engine
-    deterministic hash primitive (15 hex digits fit int64)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return (
-        F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long") % n_buckets
-    )
-
-
 def stable_hash64(col: Column | str) -> Column:
     """Deterministic 60-bit integer hash usable as a minhash kernel —
     identical to DuckDB's ``('0x' || substr(md5(x),1,15))::BIGINT``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def hex_bucket(text: Column | str, n_buckets: int = 1024) -> Column:
+    """Stable integer bucket from the md5 prefix — the cross-engine
+    deterministic hash primitive (15 hex digits fit int64)."""
+    return stable_hash64(text) % n_buckets
+
+
+def word_grams(tokens: str, k: int) -> Column:
+    """Word k-gram array over the token-array column ``tokens``: each
+    window of k consecutive tokens joined by one space; arrays shorter
+    than k yield no grams. The DuckDB twin is ``list_transform(range(len(t)
+    - k + 1), i -> array_to_string(list_slice(t, i + 1, i + k), ' '))``."""
+    return F.expr(
+        f"CASE WHEN size({tokens}) >= {k} THEN "
+        f"transform(sequence(0, cast(size({tokens}) as int) - {k}), "
+        f"i -> concat_ws(' ', slice({tokens}, i + 1, {k}))) "
+        f"ELSE cast(array() as array<string>) END"
+    )
 
 
 def char_shingles(text: Column | str, k: int = 5) -> Column:

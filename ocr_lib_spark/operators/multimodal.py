@@ -778,7 +778,7 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
                 }
             )
 
-    return spread_small(df.select(id_col, payload_col)).mapInPandas(run, schema=DECODE_SCHEMA)
+    return df.select(id_col, payload_col).mapInPandas(run, schema=DECODE_SCHEMA)
 
 
 HIST_SCHEMA = T.StructType(
@@ -820,7 +820,7 @@ def byte_histogram(
                 }
             )
 
-    return spread_small(df.select(id_col, payload_col)).mapInPandas(run, schema=HIST_SCHEMA)
+    return df.select(id_col, payload_col).mapInPandas(run, schema=HIST_SCHEMA)
 
 
 THUMB_SCHEMA = T.StructType(

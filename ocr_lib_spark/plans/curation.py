@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ocr_lib_spark.functions.text import hex_bucket, stable_hash64, word_grams
 from ocr_lib_spark.plans import QueryDef, documents, load
 from ocr_lib_spark.streaming.replay import replay_to_memory
 
@@ -41,12 +42,6 @@ def _gram_hash_pairs(d):
     unconditional; novelty itself degrades by at most the collision
     count."""
     toks = F.split(F.trim("text"), " ")
-    grams = F.expr(
-        f"CASE WHEN size(t) >= {NOVELTY_K} THEN "
-        f"transform(sequence(0, cast(size(t) as int) - {NOVELTY_K}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {NOVELTY_K}))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
     from ocr_lib_spark.partitioning import spread_small
 
     # spread: the gram build + md5 stage measured 1.15 s on one working
@@ -54,11 +49,8 @@ def _gram_hash_pairs(d):
     return (
         spread_small(d)
         .select("doc_id", toks.alias("t"))
-        .select("doc_id", F.explode(grams).alias("g"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long").alias("gh"),
-        )
+        .select("doc_id", F.explode(word_grams("t", NOVELTY_K)).alias("g"))
+        .select("doc_id", stable_hash64("g").alias("gh"))
         .distinct()
     )
 
@@ -153,9 +145,7 @@ def _q_mix_rebalance(spark, sf_dir):
     numbers are emitted so the plan/apply gap is visible."""
     d = documents(spark, sf_dir).select(
         "source",
-        (F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long") % _PPM).alias(
-            "h"
-        ),
+        hex_bucket("text", _PPM).alias("h"),
     )
     census = (
         d.groupBy("source")
@@ -236,12 +226,8 @@ def _q_quality_curriculum(spark, sf_dir):
         f"n_distinct * {_PPM} DIV n_tokens ELSE 0 END"
     )
     toks = F.split(F.trim("text"), " ")
-    from ocr_lib_spark.partitioning import spread_small
-
     d = (
-        # spread: tokenize + array_distinct per row runs single-task on
-        # a small single-row-group scan (no-op at scale)
-        spread_small(documents(spark, sf_dir))
+        documents(spark, sf_dir)
         .select(
             "doc_id",
             F.size(toks).cast("long").alias("n_tokens"),
@@ -346,9 +332,7 @@ def _q_temperature_mix(spark, sf_dir):
     (rows = #sources) broadcasts back onto the scan. No other shuffle."""
     d = documents(spark, sf_dir).select(
         "source",
-        (F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long") % _PPM).alias(
-            "h"
-        ),
+        hex_bucket("text", _PPM).alias("h"),
     )
     census = (
         d.groupBy("source")
@@ -1023,9 +1007,7 @@ def _q_shard_manifest(spark, sf_dir):
         (F.col("doc_id") % PACK_SHARDS).cast("int").alias("shard"),
         token_count("text").cast("long").alias("ws"),
         bpe_token_count("text").cast("long").alias("bpe"),
-        F.conv(F.substring(F.md5(F.md5("text")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("dh"),
+        stable_hash64(F.md5("text")).alias("dh"),
     )
     return d.groupBy("shard").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1383,9 +1365,7 @@ def _q_dsir_select(spark, sf_dir):
         .select(
             "doc_id",
             "is_t",
-            (
-                F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long") % B
-            ).alias("b"),
+            hex_bucket("tok", B).alias("b"),
         )
     )
     pd_counts = (
@@ -1583,7 +1563,13 @@ def funnel_attribution_frame(d):
     the doc spine is keyed on doc_id (uniform). The derived-text spine
     is lazily checkpointed — it feeds the digest, quality, and gram
     branches."""
-    from ocr_lib_spark.plans.textops import DECON_HOLDOUT_MOD, DECON_K, gopher_bits_frame
+    from ocr_lib_spark.plans.textops import (
+        DECON_HOLDOUT_MOD,
+        DECON_K,
+        frequency_split_join,
+        gopher_bits_frame,
+        holdout_hits,
+    )
 
     d = d.localCheckpoint(eager=False)
     dig = d.select("doc_id", F.md5("txt").alias("digest")).localCheckpoint(
@@ -1595,39 +1581,19 @@ def funnel_attribution_frame(d):
         .localCheckpoint(eager=False)
     )
     tot = grp.agg(F.sum("c").alias("n_total"))
-    g2 = grp.crossJoin(F.broadcast(tot))
-    hot = g2.where(F.col("c") * FUNNEL_DENOM > F.col("n_total")).select(
-        "digest", "keep_id"
-    )
-    tail = g2.where(F.col("c") * FUNNEL_DENOM <= F.col("n_total")).select(
-        "digest", "keep_id"
-    )
-    keep = dig.join(F.broadcast(hot), "digest").select("doc_id", "keep_id").union(
-        dig.join(tail, "digest").select("doc_id", "keep_id")
-    )
+    keep = frequency_split_join(
+        dig, grp.crossJoin(F.broadcast(tot)), "digest", "c", "n_total", FUNNEL_DENOM
+    ).select("doc_id", "keep_id")
     qual = gopher_bits_frame(d.select("doc_id", F.col("txt").alias("text"))).select(
         "doc_id", "n_words", "pass_all"
     )
     toks = F.split(F.trim("txt"), " ")
-    grams = F.expr(
-        f"CASE WHEN size(t) >= {DECON_K} THEN "
-        f"transform(sequence(0, cast(size(t) as int) - {DECON_K}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {DECON_K}))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
     g = d.select("doc_id", toks.alias("t")).select(
-        "doc_id", F.explode(grams).alias("g")
+        "doc_id", F.explode(word_grams("t", DECON_K)).alias("g")
     )
-    holdout = (
-        g.where(F.col("doc_id") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
-    )
-    hits = (
-        g.where(F.col("doc_id") % DECON_HOLDOUT_MOD != 0)
-        .join(F.broadcast(holdout), "g")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("g").cast("long").alias("n_hit_grams"))
-    )
-    is_holdout = (F.col("doc_id") % DECON_HOLDOUT_MOD == 0).cast("long")
+    in_holdout = F.col("doc_id") % DECON_HOLDOUT_MOD == 0
+    hits = holdout_hits(g, "doc_id", in_holdout)
+    is_holdout = in_holdout.cast("long")
     is_dup = (F.col("doc_id") != F.col("keep_id")).cast("long")
     return (
         d.select("doc_id")
@@ -1907,12 +1873,6 @@ BPE_MATCHES_EXPR = (
     "i -> t[i] = pair_a AND t[i+1] = pair_b) "
     "ELSE cast(array() as array<int>) END"
 )
-BPE_GREEDY_EXPR = (
-    "aggregate(m, struct(CAST(0 AS BIGINT) AS n, CAST(-2 AS BIGINT) AS lt), "
-    "(acc, p) -> IF(p >= acc.lt + 2, "
-    "struct(acc.n + CAST(1 AS BIGINT) AS n, CAST(p AS BIGINT) AS lt), acc), "
-    "acc -> acc.n)"
-)
 
 
 def _bpe_pair_argmax(t_df):
@@ -1963,37 +1923,22 @@ def _q_bpe_merge_step(spark, sf_dir):
     from ocr_lib_spark.partitioning import spread_small
 
     d = (
-        # spread: census explode + greedy count pass run off this
+        # spread: census explode + greedy pass run off the round's
         # checkpoint; a small single-row-group scan gives it one task
         spread_small(documents(spark, sf_dir))
         .select("doc_id", toks.alias("t"))
         .select("doc_id", F.expr("filter(t, x -> x != '')").alias("t"))
-        .localCheckpoint(eager=False)  # feeds the census and the count pass
     )
-    best = _bpe_pair_argmax(d)
-    out = d.crossJoin(F.broadcast(best))
-    matches = F.expr(BPE_MATCHES_EXPR)
-    greedy = F.expr(BPE_GREEDY_EXPR)
-    return (
-        out.select(
-            "doc_id",
-            F.size("t").cast("long").alias("n_tokens"),
-            "pair_a",
-            "pair_b",
-            "pair_count",
-            matches.alias("m"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "pair_a",
-            "pair_b",
-            "pair_count",
-            F.size("m").cast("long").alias("n_matches"),
-            greedy.alias("n_merges"),
-        )
-        .withColumn("n_tokens_after", (F.col("n_tokens") - F.col("n_merges")).cast("long"))
-    )
+    [(_, tt)], _ = _bpe_rounds(d, 1)
+    return tt.select(
+        "doc_id",
+        F.size("t").cast("long").alias("n_tokens"),
+        "pair_a",
+        "pair_b",
+        "pair_count",
+        F.size("m").cast("long").alias("n_matches"),
+        F.size("ch").cast("long").alias("n_merges"),
+    ).withColumn("n_tokens_after", (F.col("n_tokens") - F.col("n_merges")).cast("long"))
 
 
 # DuckDB twin: the greedy pass runs as gaps-and-islands over match
@@ -2062,7 +2007,7 @@ FROM dm LEFT JOIN merges mg USING (doc_id)
 BPE_STEPS = 3
 #: ordered fold over match positions m: keep p iff p >= last_kept + 2
 #: (matches are generated in increasing order), accumulating the
-#: CHOSEN array rather than just its count (BPE_GREEDY_EXPR's twin)
+#: CHOSEN array; its size is the round's per-doc merge count
 BPE_CHOSEN_EXPR = (
     "aggregate(m, struct(cast(array() as array<int>) AS ch, CAST(-2 AS BIGINT) AS lt), "
     "(acc, p) -> IF(p >= acc.lt + 2, "
@@ -2129,11 +2074,12 @@ def bpe_merge_loop_frame(t, steps_n: int = BPE_STEPS):
 
 def _bpe_rounds(t, steps_n: int, checkpoint_matched: bool = False):
     """The BPE merge rounds over a (doc_id, t token-array, ...) frame,
-    written once for bpe_merge_loop and bpe_apply_merges. Each round
-    checkpoints the stream (the census and the match pass both read
-    it), broadcasts its ``_bpe_pair_argmax`` pair onto every row, adds
-    the match positions m and the greedy chosen positions ch, and
-    rebuilds the stream from ch; columns other than t carry through.
+    written once for bpe_merge_step, bpe_merge_loop and
+    bpe_apply_merges. Each round checkpoints the stream (the census and
+    the match pass both read it), broadcasts its ``_bpe_pair_argmax``
+    pair onto every row, adds the match positions m and the greedy
+    chosen positions ch, and rebuilds the stream from ch; columns other
+    than t carry through.
     ``checkpoint_matched`` also checkpoints the matched frame, for
     callers that read it twice (per-round stats and the next round's
     stream). Returns
@@ -2293,11 +2239,7 @@ def _q_leakage_safe_split(spark, sf_dir):
             F.col("cluster_id").isNotNull().cast("long").alias("in_cluster"),
         )
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("cluster_rep").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = hex_bucket(F.col("cluster_rep").cast("string"), 100)
     return base.select(
         "doc_id",
         "cluster_rep",
@@ -2727,9 +2669,7 @@ def _q_quality_score(spark, sf_dir):
         .select("doc_id", F.explode(bigrams).alias("bg"))
         .select(
             "doc_id",
-            (F.conv(F.substring(F.md5("bg"), 1, 15), 16, 10).cast("long") % B).alias(
-                "b"
-            ),
+            hex_bucket("bg", B).alias("b"),
         )
         .groupBy("doc_id", "b")
         .agg(F.count("*").cast("long").alias("c"))

@@ -730,10 +730,8 @@ def _pack_conversations(conv):
     BPE-ish token count and (chunk_idx, chunk_offset) placement under
     the context budget: a per-shard running-sum window, no global sort.
     Shared by conv_packing and conv_training_mix."""
-    from pyspark.sql import Window
-
     from ocr_lib_spark.functions.text import bpe_token_count, stable_hash64
-    from ocr_lib_spark.plans.textops import PACK_BUDGET, PACK_SHARDS
+    from ocr_lib_spark.plans.textops import PACK_BUDGET, PACK_SHARDS, pack_window
 
     d = conv.select(
         "conv_id",
@@ -742,20 +740,7 @@ def _pack_conversations(conv):
         .alias("shard"),
         bpe_token_count("conv_text").cast("int").alias("n_tokens"),
     )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
-    return d.select(
-        "conv_id",
-        "shard",
-        F.lit(PACK_SHARDS).cast("int").alias("n_shards"),
-        "n_tokens",
-        F.floor(start / PACK_BUDGET).cast("long").alias("chunk_idx"),
-        (start % PACK_BUDGET).cast("long").alias("chunk_offset"),
-    )
+    return pack_window(d, "conv_id", PACK_SHARDS, PACK_BUDGET)
 
 
 def _conv_packing_oracle() -> str:
@@ -1164,7 +1149,8 @@ def _q_conv_decontaminate(spark, sf_dir):
     corpus side streams through the broadcast join — never a
     corpus×corpus product. Composes extract -> assemble -> gram
     overlap, all earned from payloads."""
-    from ocr_lib_spark.plans.textops import DECON_HOLDOUT_MOD, DECON_K
+    from ocr_lib_spark.functions.text import word_grams
+    from ocr_lib_spark.plans.textops import DECON_HOLDOUT_MOD, DECON_K, holdout_hits
 
     from ocr_lib_spark.partitioning import spread_small
 
@@ -1187,24 +1173,12 @@ def _q_conv_decontaminate(spark, sf_dir):
         .localCheckpoint(eager=False)
     )
     toks = F.split(F.trim("text"), " ")
-    grams = F.expr(
-        f"CASE WHEN size(t) >= {DECON_K} THEN "
-        f"transform(sequence(0, cast(size(t) as int) - {DECON_K}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {DECON_K}))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
     g = conv.select(
         "conv_id",
         F.substring("conv_id", 6, 8).cast("long").alias("cnum"),
         toks.alias("t"),
-    ).select("conv_id", "cnum", F.explode(grams).alias("g"))
-    holdout = g.where(F.col("cnum") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
-    return (
-        g.where(F.col("cnum") % DECON_HOLDOUT_MOD != 0)
-        .join(F.broadcast(holdout), "g")
-        .groupBy("conv_id")
-        .agg(F.countDistinct("g").cast("long").alias("n_hit_grams"))
-    )
+    ).select("conv_id", "cnum", F.explode(word_grams("t", DECON_K)).alias("g"))
+    return holdout_hits(g, "conv_id", F.col("cnum") % DECON_HOLDOUT_MOD == 0)
 
 
 def _conv_decontaminate_oracle() -> str:

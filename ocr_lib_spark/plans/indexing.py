@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ocr_lib_spark.functions.text import stable_hash64
 from ocr_lib_spark.plans import QueryDef, documents
-from ocr_lib_spark.plans.textops import _O_TOKS_CTE, _toks_nonempty
+from ocr_lib_spark.plans.textops import _O_TOKS_CTE, _tok_doc_counts
 
 #: retrieval fan-out: QK query terms, top K docs per term.
 TFIDF_QK = 8
@@ -40,19 +40,6 @@ INDEX_SHARDS = 16
 #: this many equal-width buckets. Bounded constant -> the cumulative
 #: window at the end runs over NB rows regardless of corpus size.
 HEAPS_BUCKETS = 16
-
-
-def _tok_doc_counts(spark, sf_dir) -> DataFrame:
-    """(tok, doc_id, tf) pre-aggregate — the single shuffle every IR
-    statistic here derives from (the unigram_surprisal exchange-reuse
-    shape). Map-side combinable; lazily checkpointed so the df branch
-    and the score branch reuse one exchange instead of re-exploding."""
-    return (
-        _toks_nonempty(spark, sf_dir)
-        .groupBy("tok", "doc_id")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
 
 
 _O_TD_CTE = f"""{_O_TOKS_CTE},

@@ -16,6 +16,7 @@ from ocr_lib_spark.functions.text import (
     quality_score,
     token_count,
     vowel_ratio,
+    word_grams,
 )
 from ocr_lib_spark.operators.dedup import (
     exact_duplicates,
@@ -204,26 +205,28 @@ DECON_HOLDOUT_MOD = 7
 
 def _decontaminate(spark, sf_dir):
     toks = F.split(F.trim("text"), " ")
-    grams_expr = F.expr(
-        f"CASE WHEN size(t) >= {DECON_K} THEN "
-        f"transform(sequence(0, cast(size(t) as int) - {DECON_K}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {DECON_K}))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
     from ocr_lib_spark.partitioning import spread_small
 
     # spread: the K-gram construction (concat_ws over sliced token
     # arrays) is CPU-dense and runs once per branch (holdout broadcast +
     # probe); a small single-row-group scan would run each on one task
     d = spread_small(documents(spark, sf_dir)).select("doc_id", toks.alias("t"))
-    d = d.select("doc_id", F.explode(grams_expr).alias("g"))
-    holdout = (
-        d.where(F.col("doc_id") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
-    )
-    corpus = d.where(F.col("doc_id") % DECON_HOLDOUT_MOD != 0)
+    d = d.select("doc_id", F.explode(word_grams("t", DECON_K)).alias("g"))
+    return holdout_hits(d, "doc_id", F.col("doc_id") % DECON_HOLDOUT_MOD == 0)
+
+
+def holdout_hits(grams, key: str, is_holdout):
+    """(key, g) gram frame -> per-key count of distinct grams that also
+    occur in a holdout row (``is_holdout`` true), for the keys of the
+    other rows. The distinct holdout gram set broadcasts (holdouts are
+    small by nature) and the rest of the frame probes it; keys with no
+    hit are absent. Shared by decontaminate, the curation funnel and
+    conv_decontaminate."""
+    holdout = grams.where(is_holdout).select("g").distinct()
     return (
-        corpus.join(F.broadcast(holdout), "g")
-        .groupBy("doc_id")
+        grams.where(~is_holdout)
+        .join(F.broadcast(holdout), "g")
+        .groupBy(key)
         .agg(F.countDistinct("g").cast("long").alias("n_hit_grams"))
     )
 
@@ -260,14 +263,8 @@ def _decontaminate_spans(spark, sf_dir):
     `decontaminate`; output rows are bounded by the contamination
     rate."""
     toks = F.split(F.trim("text"), " ")
-    grams_expr = F.expr(
-        f"CASE WHEN size(t) >= {DECON_K} THEN "
-        f"transform(sequence(0, cast(size(t) as int) - {DECON_K}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {DECON_K}))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
     d = documents(spark, sf_dir).select("doc_id", toks.alias("t"))
-    g = d.select("doc_id", "t", F.posexplode(grams_expr).alias("pos", "g"))
+    g = d.select("doc_id", "t", F.posexplode(word_grams("t", DECON_K)).alias("pos", "g"))
     holdout = (
         g.where(F.col("doc_id") % DECON_HOLDOUT_MOD == 0).select("g").distinct()
     )
@@ -1624,8 +1621,6 @@ def pack_tokens(
     both recorded in the output, so any consumer can reproduce the
     deterministic layout regardless of what default was in effect.
     """
-    from pyspark.sql import Window
-
     from ocr_lib_spark.functions.text import bpe_token_count
 
     if shards is None:
@@ -1645,16 +1640,28 @@ def pack_tokens(
         F.pmod("doc_id", F.lit(shards)).cast("int").alias("shard"),
         bpe_token_count("text").alias("n_tokens"),
     )
+    return pack_window(d, "doc_id", shards, budget)
+
+
+def pack_window(d, key: str, n_shards: int, budget: int):
+    """(key, shard, n_tokens) -> the same rows plus n_shards and their
+    (chunk_idx, chunk_offset) placement: within a shard, rows are laid
+    end-to-end in ``key`` order and cut every ``budget`` tokens. One
+    running-sum window partitioned by shard, so the sort is
+    partition-local, never global. Shared by pack_tokens and the
+    conversation packing."""
+    from pyspark.sql import Window
+
     w = (
         Window.partitionBy("shard")
-        .orderBy("doc_id")
+        .orderBy(key)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
     return d.select(
-        "doc_id",
+        key,
         "shard",
-        F.lit(shards).cast("int").alias("n_shards"),
+        F.lit(n_shards).cast("int").alias("n_shards"),
         "n_tokens",
         F.floor(start / budget).cast("long").alias("chunk_idx"),
         (start % budget).cast("long").alias("chunk_offset"),
@@ -1798,6 +1805,21 @@ def _toks_nonempty(spark, sf_dir):
     )
 
 
+def _tok_doc_counts(spark, sf_dir):
+    """(tok, doc_id, tf) pre-aggregate — the single shuffle every
+    token statistic over the corpus derives from (vocab rarity,
+    unigram surprisal, the IR statistics in plans/indexing.py).
+    Map-side combinable; lazily checkpointed so the diverging branches
+    reuse one exchange instead of re-running the explode per branch
+    (without it a consumer plan read the parquet once per branch)."""
+    return (
+        _toks_nonempty(spark, sf_dir)
+        .groupBy("tok", "doc_id")
+        .agg(F.count("*").cast("long").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+
+
 _O_TOKS_CTE = f"""
 toks AS (
   SELECT doc_id,
@@ -1865,17 +1887,9 @@ def _rare_token_ratio(spark, sf_dir):
     rare_bp = basis points via floor division."""
     # The corpus is SCANNED ONCE: all consumers (global counts, corpus
     # totals, per-doc totals, rare join-back) derive from one
-    # (tok, doc_id) pre-aggregate, lazily localCheckpoint'ed so the
-    # diverging branches reuse it instead of re-running the explode per
-    # branch (the exchange-reuse pattern from round 3 -- without this
-    # the plan read the parquet 4x)
-    t = _toks_nonempty(spark, sf_dir)
-    pd_counts = (
-        t.groupBy("tok", "doc_id")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    occ = pd_counts.groupBy("tok").agg(F.sum("c").alias("n_occ"))
+    # (tok, doc_id) pre-aggregate
+    pd_counts = _tok_doc_counts(spark, sf_dir)
+    occ = pd_counts.groupBy("tok").agg(F.sum("tf").alias("n_occ"))
     tot = occ.agg(
         F.sum("n_occ").alias("total_occ"), F.count("*").alias("vocab_n")
     )
@@ -1894,9 +1908,9 @@ def _rare_token_ratio(spark, sf_dir):
         )
         .select("tok")
     )
-    n_tok = pd_counts.groupBy("doc_id").agg(F.sum("c").cast("long").alias("n_tokens"))
+    n_tok = pd_counts.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("n_tokens"))
     n_rare = pd_counts.join(rare, "tok").groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_rare")
+        F.sum("tf").cast("long").alias("n_rare")
     )
     return (
         n_tok.join(n_rare, "doc_id", "left")
@@ -2013,13 +2027,8 @@ def _unigram_surprisal(spark, sf_dir):
     needed because the skewed keys never enter the shuffle at all.
     Ref analog: check-matching-fn's broadcast score table
     (core.clj:1020-1069) keyed by token frequency class."""
-    t = _toks_nonempty(spark, sf_dir)
-    pd_counts = (
-        t.groupBy("tok", "doc_id")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    occ = pd_counts.groupBy("tok").agg(F.sum("c").cast("long").alias("n_occ"))
+    pd_counts = _tok_doc_counts(spark, sf_dir)
+    occ = pd_counts.groupBy("tok").agg(F.sum("tf").cast("long").alias("n_occ"))
     tot = occ.agg(F.sum("n_occ").cast("long").alias("total_occ"))
     scored = occ.crossJoin(F.broadcast(tot)).select(
         "tok",
@@ -2029,22 +2038,30 @@ def _unigram_surprisal(spark, sf_dir):
         .cast("long")
         .alias("bits"),
     )
-    hot = scored.where(
-        F.col("n_occ") * SURPRISAL_HEAVY_DENOM > F.col("total_occ")
-    ).select("tok", "bits")
-    tail = scored.where(
-        F.col("n_occ") * SURPRISAL_HEAVY_DENOM <= F.col("total_occ")
-    ).select("tok", "bits")
-    joined = pd_counts.join(F.broadcast(hot), "tok").unionByName(
-        pd_counts.join(tail, "tok")
+    joined = frequency_split_join(
+        pd_counts, scored, "tok", "n_occ", "total_occ", SURPRISAL_HEAVY_DENOM
     )
     return joined.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
-        F.sum(F.col("c") * F.col("bits")).cast("long").alias("sum_bits"),
-        F.expr("sum(c * bits) * 1000000 DIV sum(c)")
+        F.sum("tf").cast("long").alias("n_tokens"),
+        F.sum(F.col("tf") * F.col("bits")).cast("long").alias("sum_bits"),
+        F.expr("sum(tf * bits) * 1000000 DIV sum(tf)")
         .cast("long")
         .alias("mean_ubits"),
     )
+
+
+def frequency_split_join(probe, dim, key: str, n: str, total: str, denom: int):
+    """``probe`` joined to ``dim`` on ``key``, with the dim rows split by
+    key frequency: a key is hot iff n * denom > total, so by pigeonhole
+    there are at most ``denom`` hot keys at any corpus size and they
+    BROADCAST; the tail equi-joins, each tail key carrying at most
+    total/denom rows. The skewed keys never enter a shuffle, so no
+    salting is needed. The ``n`` and ``total`` columns are dropped
+    before the join. Shared by unigram_surprisal and the curation funnel's
+    keep-first join."""
+    hot = dim.where(F.col(n) * denom > F.col(total)).drop(n, total)
+    tail = dim.where(F.col(n) * denom <= F.col(total)).drop(n, total)
+    return probe.join(F.broadcast(hot), key).unionByName(probe.join(tail, key))
 
 
 _O_UNIGRAM_SURPRISAL = f"""

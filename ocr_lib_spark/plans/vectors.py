@@ -922,7 +922,7 @@ def _q_embedding_quantize(spark, sf_dir):
         "vec_id",
         (F.col("dim0") + 1).alias("dim"),
         F.floor(F.col("val").cast("double") * TRAIN_SCALE).cast("long").alias("vi"),
-    ).localCheckpoint(eager=False)
+    )
     scale = vi.groupBy("vec_id").agg(F.max(F.abs("vi")).cast("long").alias("maxabs"))
     q = vi.join(scale, "vec_id").select(
         "vec_id",

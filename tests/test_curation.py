@@ -542,7 +542,7 @@ def test_bpe_greedy_self_pair_runs_merge_floor_half(spark):
     """The self-pair (a,a) case the fixture argmax may never exercise:
     a run of L identical tokens must merge floor(L/2) times (matches =
     L-1). Evaluates the SAME expressions the gated query ships."""
-    from ocr_lib_spark.plans.curation import BPE_GREEDY_EXPR, BPE_MATCHES_EXPR
+    from ocr_lib_spark.plans.curation import BPE_CHOSEN_EXPR, BPE_MATCHES_EXPR
 
     cases = [(L, ["x"] * L + ["y"] + ["x"] * 3) for L in range(1, 7)]
     df = spark.createDataFrame(
@@ -552,7 +552,7 @@ def test_bpe_greedy_self_pair_runs_merge_floor_half(spark):
         r.L: r
         for r in df.select(
             "L", F.expr(BPE_MATCHES_EXPR).alias("m")
-        ).select("L", F.size("m").alias("n_matches"), F.expr(BPE_GREEDY_EXPR).alias("n"))
+        ).select("L", F.size("m").alias("n_matches"), F.size(F.expr(BPE_CHOSEN_EXPR)).alias("n"))
         .collect()
     }
     for L, toks in cases:

@@ -31,3 +31,13 @@ def test_planned_shuffles_count_the_initial_plan(spark):
     assert st["planned_shuffles"] == 3 and st["exchanges"] == 0
     assert plan_stats(df)["planned_shuffles"] == 3
     assert plan_stats(spark.range(4))["planned_shuffles"] == 0
+
+
+def test_reused_exchange_is_not_counted_as_a_shuffle(spark):
+    # both join sides read one aggregate: the initial plan has two
+    # shuffles, the final plan runs one and the other side reads it
+    # as a ReusedExchange
+    agg = spark.range(1000).groupBy((F.col("id") % 5).alias("k")).agg(F.sum("id").alias("s"))
+    df = agg.hint("shuffle_merge").join(agg.withColumnRenamed("s", "s2"), "k")
+    st = plan_stats(df)
+    assert (st["exchanges"], st["planned_shuffles"]) == (1, 2)

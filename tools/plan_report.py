@@ -37,7 +37,7 @@ def plan_stats(df) -> dict:
         scans.append(m.group(1).strip())
     pushed = sorted(set(f for f in re.findall(r"PushedFilters: \[([^\]]*)\]", p) if f))
     return {
-        "exchanges": final_tree.count("Exchange") - final_tree.count("BroadcastExchange"),
+        "exchanges": len(re.findall(r"\bExchange \(", final_tree)),
         "planned_shuffles": len(re.findall(r"\bExchange \(", initial_tree)),
         "broadcasts": final_tree.count("BroadcastExchange"),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", p))),
