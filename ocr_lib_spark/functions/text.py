@@ -103,6 +103,19 @@ def word_grams(tokens: str, k: int) -> Column:
     )
 
 
+def word_segments(tokens: str, k: int) -> Column:
+    """Non-overlapping word k-segments of the token-array column
+    ``tokens``: tokens [i*k, (i+1)*k) joined by one space for each whole
+    segment; a trailing remainder shorter than k and arrays shorter than
+    k yield nothing."""
+    return F.expr(
+        f"CASE WHEN size({tokens}) >= {k} THEN "
+        f"transform(sequence(0, size({tokens}) div {k} - 1), "
+        f"i -> concat_ws(' ', slice({tokens}, i * {k} + 1, {k}))) "
+        f"ELSE cast(array() as array<string>) END"
+    )
+
+
 def char_shingles(text: Column | str, k: int = 5) -> Column:
     """Distinct character k-gram shingle array (set semantics — the
     dot-set implicit-DISTINCT analog, SURVEY.md §2.3). Strings shorter

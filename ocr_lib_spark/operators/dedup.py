@@ -55,7 +55,6 @@ def minhash_signatures(
     n_hashes: int = 8,
     k: int = 5,
     vectorized: bool = True,
-    spread: bool = True,
 ) -> DataFrame:
     """k-min-hash signature per document.
 
@@ -74,7 +73,7 @@ def minhash_signatures(
     if n_hashes > len(MINHASH_A):
         raise ValueError(f"n_hashes > {len(MINHASH_A)} needs more family constants")
     if vectorized:
-        return _minhash_vectorized(df, text_col, id_col, n_hashes, k, spread)
+        return _minhash_vectorized(df, text_col, id_col, n_hashes, k)
     # NULL-text docs are dropped (both paths): char_shingles(NULL) is
     # [NULL], which would otherwise survive as an all-NULL signature row
     sh = df.where(F.col(text_col).isNotNull()).select(
@@ -115,7 +114,7 @@ def _md5_prefix64(s: str) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _minhash_vectorized(df, text_col, id_col, n_hashes, k, spread=True) -> DataFrame:
+def _minhash_vectorized(df, text_col, id_col, n_hashes, k) -> DataFrame:
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -154,10 +153,7 @@ def _minhash_vectorized(df, text_col, id_col, n_hashes, k, spread=True) -> DataF
         [T.StructField(id_col, id_field.dataType)]
         + [T.StructField(f"h{i}", T.LongType()) for i in range(n_hashes)]
     )
-    src = df.select(id_col, text_col)
-    if spread:
-        src = spread_small(src)
-    return src.mapInPandas(run, schema=schema)
+    return spread_small(df.select(id_col, text_col)).mapInPandas(run, schema=schema)
 
 
 def lsh_band_table(

@@ -5,18 +5,16 @@ columns with typed metadata — the byte[]-payload pattern of the
 reference's every entry point (base64 → byte[] → decode,
 read-base64-image-fn core.clj:190-208, ImageIO/read core.clj:1498-1500).
 
-The container has no image/audio codecs, so the DECODE KERNEL is
-stubbed behind an import-try (`_try_pil`): with PIL absent,
-`decode_image_meta` produces pinned deterministic fake dims. Everything
-around the kernel — BinaryType columns, Arrow batch shape, mapInPandas
-signatures, schemas, partition behavior — is real and tested, and a
-real codec drops into the marked slot without touching the plumbing.
+Decode needs no codec library: `decode_image_meta` takes dims from a
+stdlib-only pixel decode (PNG, baseline gray JPEG) or a container-header
+probe (PNG/GIF/JPEG/BMP), and only a payload none of them recognizes
+(the text-bytes twin queries' input) gets pinned closed-form dims,
+labelled ``stub`` in the ``decoder`` column.
 
-`byte_histogram` and `frame_sample` are NOT stubs: they compute real
-byte-level features (numpy bincount over the raw buffer; evenly-spaced
-frame slicing + digest), the shape a feature-extraction stage has at
-100 TB — one pass over the bytes, no shuffle, output rows bounded by
-(docs × frames).
+`byte_histogram` and `frame_sample` compute byte-level features
+(numpy bincount over the raw buffer; evenly-spaced frame slicing +
+digest), the shape a feature-extraction stage has at 100 TB — one pass
+over the bytes, no shuffle, output rows bounded by (docs × frames).
 """
 
 from __future__ import annotations
@@ -33,15 +31,6 @@ from pyspark.sql import types as T
 from ocr_lib_spark.partitioning import spread_small
 
 
-def _try_pil():
-    try:  # pragma: no cover - codec not present in this container
-        from PIL import Image  # noqa: F401
-
-        return Image
-    except ImportError:
-        return None
-
-
 def _bytes(b) -> bytes:
     """Nil-guard: NULL payloads behave as empty bytes everywhere (the
     empty-not-null discipline of the reference's guards, SURVEY.md §1.3)."""
@@ -52,9 +41,9 @@ def probe_image_dims(buf: bytes) -> tuple[int, int, str] | None:
     """Dependency-free image-dimension probe: struct-parse the container
     header (pure stdlib, deterministic). Returns (width, height, format)
     or None when the payload is not a recognizable image — the real
-    recast of ImageIO/read's metadata role (core.clj:1498-1500) for a
-    container with no codecs; pixel decode still needs PIL and stays a
-    gated slot.
+    recast of ImageIO/read's metadata role (core.clj:1498-1500) without
+    a codec library; ``png_decode`` and ``jpeg_gray_decode`` cover the
+    pixel side for the formats they read.
 
     Formats: PNG (IHDR big-endian dims at offset 16/20), GIF87a/89a
     (little-endian uint16 at 6/8), JPEG (marker walk to SOF0-SOF15,
@@ -723,7 +712,6 @@ DECODE_SCHEMA = T.StructType(
 def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
     """Decode metadata per binary payload, per-row decoder cascade:
 
-      pil  — full codec (when PIL is installed; not in this container)
       png  — REAL stdlib-only pixel decode (``png_decode``): dims from
              the reconstructed pixel array itself
       jpg  — REAL baseline-DCT gray decode (``jpeg_gray_decode``)
@@ -736,17 +724,8 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
     """
 
     def run(batches):
-        pil = _try_pil()
-        import io
-
         def dims(b):
             b = _bytes(b)
-            if pil is not None:  # pragma: no cover - codec absent here
-                try:
-                    w, h = pil.open(io.BytesIO(b)).size
-                    return w, h, "pil"
-                except Exception:
-                    pass
             if b[:8] == b"\x89PNG\r\n\x1a\n":
                 px = png_decode(b)
                 if px is not None:

@@ -32,9 +32,11 @@ the median pass of 10 alternating benchmark pairs went 1.241 ->
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
@@ -188,16 +190,28 @@ def ordered(extracted: DataFrame) -> DataFrame:
 def assemble_conversations(
     extracted: DataFrame,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
+    by: Sequence[str | Column] = ("conv_id",),
 ) -> DataFrame:
     """Conversation-level document assembly: turn texts concatenated in
     turn order (per-row text assembly + newline insertion analog,
     core.clj:1687-1689) — pure Catalyst, no UDF.
 
-    One ``groupBy("conv_id")``: ``collect_list`` of (turn_idx,
+    One ``groupBy(*by)``: ``collect_list`` of (turn_idx,
     extracted_text), ``array_sort``, then a join of the non-empty texts.
-    The partial aggregate runs before the exchange, so each map task
-    ships one buffer per conversation it saw, not one row per turn; an
-    input already in one partition needs no exchange at all.
+    The grouping keys lead the output columns. The partial aggregate
+    runs before the exchange, so each map task ships one buffer per
+    conversation it saw, not one row per turn; an input already in one
+    partition needs no exchange at all.
+
+    A stream assembles with the same aggregate: group a watermarked
+    frame by ``("conv_id", F.session_window("ts", gap))`` and write it
+    in append mode. A conversation's row is emitted once the watermark
+    passes its last turn's ``ts`` plus ``gap``, and a pause longer than
+    ``gap`` in event time splits the conversation into one row per
+    session, however the files are batched into micro-batches and
+    however far the watermark lags. A turn whose ``ts`` is null belongs
+    to no session window and is dropped before the aggregate, so a
+    conversation with no timestamped turn emits no row.
 
     Each conversation's turns meet in one aggregation buffer, in one
     task. A two-level plan that bounds that buffer at 1024 turns per
@@ -214,28 +228,24 @@ def assemble_conversations(
     | 310 B | 5.2 s (2 reps) | fails, ``Java heap space`` |
     | 410 B | fails, ``Java heap space`` | not run |
     """
-    sep = cfg.block_separator
-    return (
-        extracted.groupBy("conv_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "extracted_text"))
-            ).alias("ordered"),
-            F.count("*").alias("n_turns"),
-            F.sum(F.when(F.col("extracted_text") != "", 1).otherwise(0)).alias(
-                "n_content_turns"
+    agg = extracted.groupBy(*by).agg(
+        F.array_sort(
+            F.collect_list(F.struct("turn_idx", "extracted_text"))
+        ).alias("ordered"),
+        F.count("*").alias("n_turns"),
+        F.sum(F.when(F.col("extracted_text") != "", 1).otherwise(0)).alias(
+            "n_content_turns"
+        ),
+    )
+    return agg.select(
+        *agg.columns[: len(by)],
+        F.array_join(
+            F.filter(
+                F.transform("ordered", lambda s: s.extracted_text),
+                lambda t: t != "",
             ),
-        )
-        .select(
-            "conv_id",
-            F.array_join(
-                F.filter(
-                    F.transform("ordered", lambda s: s.extracted_text),
-                    lambda t: t != "",
-                ),
-                sep,
-            ).alias("conv_text"),
-            "n_turns",
-            "n_content_turns",
-        )
+            cfg.block_separator,
+        ).alias("conv_text"),
+        "n_turns",
+        "n_content_turns",
     )

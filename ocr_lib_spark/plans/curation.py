@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocr_lib_spark.functions.text import hex_bucket, stable_hash64, word_grams
+from ocr_lib_spark.functions.text import hex_bucket, stable_hash64, word_grams, word_segments
 from ocr_lib_spark.plans import QueryDef, documents, load
 from ocr_lib_spark.streaming.replay import replay_to_memory
 
@@ -710,12 +710,7 @@ def _q_segment_scrub(spark, sf_dir):
         t.select(
             "doc_id",
             F.posexplode(
-                F.expr(
-                    f"CASE WHEN size(toks) >= {SEG_K} THEN "
-                    f"transform(sequence(0, size(toks) div {SEG_K} - 1), "
-                    f"i -> concat_ws(' ', slice(toks, i * {SEG_K} + 1, {SEG_K}))) "
-                    f"ELSE cast(array() as array<string>) END"
-                )
+                word_segments("toks", SEG_K)
             ).alias("seg_idx", "seg"),
         )
         .select(

@@ -17,6 +17,7 @@ from ocr_lib_spark.functions.text import (
     token_count,
     vowel_ratio,
     word_grams,
+    word_segments,
 )
 from ocr_lib_spark.operators.dedup import (
     exact_duplicates,
@@ -611,12 +612,7 @@ def segment_dedup_frame(docs):
     seg = t.select(
         "doc_id",
         F.posexplode(
-            F.expr(
-                f"CASE WHEN size(toks) >= {SEG_K} THEN "
-                f"transform(sequence(0, size(toks) div {SEG_K} - 1), "
-                f"i -> concat_ws(' ', slice(toks, i * {SEG_K} + 1, {SEG_K}))) "
-                f"ELSE cast(array() as array<string>) END"
-            )
+            word_segments("toks", SEG_K)
         ).alias("seg_idx", "seg"),
     ).select("doc_id", F.col("seg_idx").cast("int").alias("seg_idx"), F.md5("seg").alias("h"))
     keeper = seg.groupBy("h").agg(F.min(F.struct("doc_id", "seg_idx")).alias("k"))

@@ -1,26 +1,14 @@
-"""Custom stateful streaming operator: cross-micro-batch conversation
-assembly with ``applyInPandasWithState`` (event-time session semantics).
+"""Custom stateful streaming operator: incremental near-dup detection
+over a fingerprint stream with ``applyInPandasWithState``.
 
-The batch engine assembles a conversation in one conv_id-partitioned
-stage (pipeline.assemble_conversations). In a stream, a conversation's turns
-arrive across micro-batches, so assembly needs per-conversation state:
-accumulate (turn_idx, extracted_text) pairs; when the event-time
-watermark passes the conversation's last activity plus ``gap``, the
-conversation is complete — emit the assembled document and drop the
-state. This is the reference's progress-atom machinery
-(core.clj:15-19, 87-106) grown into a durable streaming operator, and
-the stateful pattern a transcript pipeline needs for any cross-batch
-step at 10^12-turn scale: state is per-key, CHUNKED (element count
-O(turns/chunk_turns), see STATE_SCHEMA), keyed shuffles only.
-
-Event-time (watermark) timeout, NOT processing-time: determinism
-doesn't depend on wall clock or trigger cadence, late turns are
-tolerated up to the watermark — and pyspark 4.1's processing-time
-timeout path crashes workers on idle empty micro-batches (observed;
-transformWithStateInPandas is unavailable here: its driver worker
-needs protobuf). Emitted text equals the batch assembler's output for
-the same turns — turns sort by turn_idx at emit, so arrival order
-across micro-batches doesn't matter.
+Streamed conversation assembly needs no custom state: it runs the batch
+aggregate (pipeline.assemble_conversations) per conv_id and event-time
+session window, and Spark's streaming aggregation keeps the state.
+The near-dup index below cannot be written as an aggregate: each
+arriving fingerprint is compared against every prior member of its
+band buckets and emits pairs at once, so it keeps its own per-bucket
+state (transformWithStateInPandas is unavailable here: its driver
+worker needs protobuf).
 """
 
 from __future__ import annotations
@@ -32,178 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("conv_text", T.StringType()),
-        T.StructField("n_turns", T.IntegerType()),
-        T.StructField("n_content_turns", T.IntegerType()),
-        # state-boundedness witness: chunks held for this conversation
-        # at emit (chunks never shrink, so emit count == peak count)
-        T.StructField("n_state_chunks", T.IntegerType()),
-    ]
-)
-
-#: Chunked per-conversation state (round 6; VERDICT r05 item 1). The
-#: round-5 layout held two parallel PER-TURN arrays, so a 10^6-turn
-#: conversation materialized a million-element python list of strings
-#: through the GroupState tuple codec on EVERY update — the one
-#: remaining 10^6-turn OOM hazard. Now state is keyed per chunk
-#: (``turn_idx // chunk_turns``): per chunk ONE byte-store
-#: (the chunk's texts concatenated, UTF-8, no separators) and ONE
-#: packed meta blob ((turn_idx, byte_len) int32 pairs in sorted
-#: order), so element count is O(n_turns / chunk_turns) and per-update
-#: codec work touches only the chunks the batch actually hit.
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("chunk_idxs", T.ArrayType(T.LongType())),
-        T.StructField("chunk_meta", T.ArrayType(T.BinaryType())),
-        T.StructField("chunk_store", T.ArrayType(T.BinaryType())),
-        T.StructField("last_ts_ms", T.LongType()),
-    ]
-)
-
-#: packed per-turn meta record inside a chunk: (turn_idx, byte_len)
-_META_DT = _np.dtype([("li", "<i4"), ("blen", "<i4")])
-
-
-def encode_chunk(entries: list) -> tuple[bytes, bytes]:
-    """``[(turn_idx, text_bytes), ...]`` (already sorted) -> (meta,
-    store). store = concatenated text bytes; meta = packed
-    (turn_idx:int32, byte_len:int32) records framing it."""
-    meta = _np.empty(len(entries), dtype=_META_DT)
-    if entries:
-        meta["li"] = [li for li, _ in entries]
-        meta["blen"] = [len(b) for _, b in entries]
-    return meta.tobytes(), b"".join(b for _, b in entries)
-
-
-def decode_chunk(meta: bytes, store: bytes) -> list:
-    """Inverse of :func:`encode_chunk`."""
-    rec = _np.frombuffer(meta, dtype=_META_DT)
-    out, off = [], 0
-    for li, blen in zip(rec["li"].tolist(), rec["blen"].tolist()):
-        out.append((li, store[off : off + blen]))
-        off += blen
-    return out
-
-
-def merge_chunk(meta: bytes, store: bytes, new_entries: list) -> tuple[bytes, bytes]:
-    """Fold newly arrived ``(turn_idx, text_bytes)`` pairs into an
-    encoded chunk. Sort key is (turn_idx, text_bytes) — identical to
-    the batch twin's ``array_sort(struct(turn_idx, extracted_text))``
-    (Spark's UTF8String ordering is byte-wise, i.e. python ``bytes``
-    ordering of the UTF-8 encoding), so duplicate turn_idx rows land in
-    the same order as the batch plan."""
-    entries = decode_chunk(meta, store) + new_entries
-    entries.sort(key=lambda e: (e[0], e[1]))
-    return encode_chunk(entries)
-
-
-def assemble_conversations_stateful(
-    extracted_stream: DataFrame,
-    watermark: str = "10 seconds",
-    gap_ms: int = 1000,
-    separator: str = "\n",
-    chunk_turns: int = 1024,
-) -> DataFrame:
-    """extracted turns stream (must carry ``ts``) -> assembled-conversation
-    stream. A conversation emits once the watermark advances ``gap_ms``
-    past its last observed activity (an explicit terminator turn would
-    emit eagerly in the same structure).
-
-    State is CHUNKED per ``chunk_turns`` (see STATE_SCHEMA): a turn
-    arriving for chunk ``turn_idx // chunk_turns`` rewrites only that
-    chunk's byte-store, and the state row holds O(n_turns/chunk_turns)
-    elements, never a per-turn array. The batch assembler
-    (pipeline.assemble_conversations) has no chunks: its aggregation
-    buffer lives for one task, this state is re-encoded on every
-    update that touches the conversation."""
-    if chunk_turns < 1:
-        raise ValueError(f"chunk_turns must be >= 1, got {chunk_turns}")
-    sep_b = separator.encode()
-
-    def _emit(conv_id, chunk_idxs, metas, stores):
-        order = sorted(range(len(chunk_idxs)), key=lambda i: chunk_idxs[i])
-        n_turns = n_content = 0
-        parts: list[bytes] = []
-        for i in order:
-            entries = decode_chunk(bytes(metas[i]), bytes(stores[i]))
-            n_turns += len(entries)
-            for _, b in entries:
-                if b:
-                    n_content += 1
-                    parts.append(b)
-        return pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "conv_text": [sep_b.join(parts).decode()],
-                "n_turns": [n_turns],
-                "n_content_turns": [n_content],
-                "n_state_chunks": [len(chunk_idxs)],
-            }
-        )
-
-    def assemble(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        if state.hasTimedOut:
-            chunk_idxs, metas, stores, _ = state.get
-            state.remove()
-            yield _emit(conv_id, chunk_idxs, metas, stores)
-            return
-        chunk_idxs, metas, stores, last_ts_ms = (
-            state.get if state.exists else ([], [], [], 0)
-        )
-        chunks = {
-            int(c): (bytes(m), bytes(s))
-            for c, m, s in zip(chunk_idxs, metas, stores)
-        }
-        pending: dict[int, list] = {}
-        for pdf in pdfs:
-            for ti, t in zip(pdf["turn_idx"], pdf["extracted_text"]):
-                ti = int(ti)
-                tb = b"" if t is None else str(t).encode()
-                pending.setdefault(ti // chunk_turns, []).append((ti, tb))
-            if len(pdf):
-                batch_max = int(pdf["ts"].max().value // 1_000_000)
-                last_ts_ms = max(last_ts_ms, batch_max)
-        for c, new_entries in pending.items():
-            meta, store = chunks.get(c, (b"", b""))
-            chunks[c] = merge_chunk(meta, store, new_entries)
-        ks = list(chunks)
-        state.update(
-            (ks, [chunks[c][0] for c in ks], [chunks[c][1] for c in ks], last_ts_ms)
-        )
-        # session timeout keyed to the conversation's OWN last event time
-        # (a watermark-relative timeout would fire as soon as the global
-        # watermark jumps, ending conversations mid-stream); clamped
-        # above the current watermark as the API requires
-        state.setTimeoutTimestamp(
-            max(last_ts_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        return
-        yield  # pragma: no cover - generator marker
-
-    return (
-        extracted_stream.withWatermark("ts", watermark)
-        .select("conv_id", "turn_idx", "extracted_text", "ts")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            assemble,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# --- incremental near-dup: stateful banded simhash index ---------------------
 
 PAIR_SCHEMA = T.StructType(
     [

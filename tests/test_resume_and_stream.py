@@ -224,16 +224,15 @@ def test_windowed_metrics_batch_twin(spark, transcripts):
 
 
 def test_stateful_conversation_assembly_across_microbatches(spark, transcripts, tmp_path):
-    """Custom stateful streaming operator (applyInPandasWithState,
-    event-time timeout): conversations whose turns arrive across
-    micro-batches are assembled per-key in state and emitted when the
-    watermark passes their last activity, matching the batch assembler
-    exactly regardless of arrival order."""
+    """Streamed assembly (the batch aggregate per conv_id and event-time
+    session window): conversations whose turns arrive across
+    micro-batches are merged in the state store and emitted when the
+    watermark passes their last activity + gap, matching the batch
+    assembler exactly regardless of arrival order."""
     from pyspark.sql import functions as F
 
     from ocr_lib_spark.pipeline import assemble_conversations
     from ocr_lib_spark.streaming.extract_stream import extract_stream, stream_transcripts
-    from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
 
     src = str(tmp_path / "stateful_src")
     # shuffle turn order across 6 files -> a conversation spans micro-batches
@@ -243,12 +242,13 @@ def test_stateful_conversation_assembly_across_microbatches(spark, transcripts, 
     max_ts = transcripts.agg(F.max("ts")).collect()[0][0]
 
     st = extract_stream(stream_transcripts(spark, src, max_files_per_trigger=1))
-    # session gap keyed to each conversation's own last activity; the
-    # far-future poke advances the watermark past everyone's
-    # last-activity + gap so all sessions flush
+    # the generator spaces one conversation's turns 1 s apart; the
     # watermark delay covers the corpus's full event-time span (~11h):
     # files arrive in arbitrary order, so any turn may be that "late"
-    out = assemble_conversations_stateful(st, watermark="13 hours", gap_ms=60 * 1000)
+    out = assemble_conversations(
+        st.withWatermark("ts", "13 hours"),
+        by=("conv_id", F.session_window("ts", "1 minute")),
+    )
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -286,12 +286,68 @@ def test_stateful_conversation_assembly_across_microbatches(spark, transcripts, 
         .reset_index(drop=True)
     )
     assert len(got) == len(exp)
-    pd.testing.assert_frame_equal(
-        got,
-        exp[["conv_id", "conv_text", "n_turns", "n_content_turns"]].astype(
-            {"n_turns": "int32", "n_content_turns": "int32"}
-        ),
+    pd.testing.assert_frame_equal(got, exp)
+
+
+@pytest.mark.parametrize("files_per_trigger", [1, 100])
+def test_stream_assembly_splits_conversation_at_event_time_gap(spark, files_per_trigger):
+    """A pause longer than the session gap splits a conversation into
+    two rows whether the turns arrive one file per micro-batch or all in
+    one trigger: the session closes on event time, not on how far the
+    watermark has moved when the later turns arrive. A turn with a null
+    ts belongs to no session and is dropped."""
+    from pyspark.sql import functions as F
+
+    from ocr_lib_spark.pipeline import assemble_conversations
+    from ocr_lib_spark.streaming.replay import replay_to_memory
+
+    t0 = "2024-01-01 00:00:00"
+    rows = [("c", i, f"early {i}", i) for i in range(6)]
+    rows += [("c", i, f"late {i}", 3600 + i) for i in range(6, 10)]
+    rows += [("c", 10, "no time", None), ("d", 0, "d0", 30), ("d", 1, "", 31)]
+    turns = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, extracted_text string, s int"
+    ).select(
+        "conv_id",
+        "turn_idx",
+        "extracted_text",
+        (F.to_timestamp(F.lit(t0)) + F.col("s") * F.expr("INTERVAL 1 SECOND")).alias("ts"),
     )
+    poke = spark.createDataFrame(
+        [("zz_poke", 0, "x")], "conv_id string, turn_idx int, extracted_text string"
+    ).withColumn("ts", F.to_timestamp(F.lit("2024-01-03 00:00:00")))
+
+    got = (
+        replay_to_memory(
+            f"t_session_split_{files_per_trigger}",
+            # turn order shuffled over 4 files
+            turns.orderBy(F.md5(F.col("extracted_text"))).repartition(4),
+            lambda sdf: assemble_conversations(
+                # the delay exceeds the pause: no late turn is dropped
+                sdf.withWatermark("ts", "2 hours"),
+                by=("conv_id", F.session_window("ts", "1 minute")),
+            ),
+            files_per_trigger=files_per_trigger,
+            mode="append",
+            poke=poke,
+        )
+        .where("conv_id != 'zz_poke'")
+        .select(
+            "conv_id",
+            F.date_format("session_window.start", "HH:mm:ss").alias("start"),
+            F.date_format("session_window.end", "HH:mm:ss").alias("end"),
+            "conv_text",
+            "n_turns",
+            "n_content_turns",
+        )
+        .orderBy("conv_id", "start")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [
+        ("c", "00:00:00", "00:01:05", "\n".join(f"early {i}" for i in range(6)), 6, 6),
+        ("c", "01:00:06", "01:01:09", "\n".join(f"late {i}" for i in range(6, 10)), 4, 4),
+        ("d", "00:00:30", "00:01:31", "d0", 2, 1),
+    ]
 
 
 def test_iceberg_snapshot_lineage_roundtrip(spark, transcripts, tmp_path):
@@ -447,50 +503,17 @@ def test_watermark_dedup_horizon_eviction(spark, tmp_path):
     }
 
 
-def test_chunk_codec_roundtrip_and_batch_sort_parity():
-    """Pure-function contract of the chunked GroupState codec (round 6):
-    encode/decode are inverse, and merge_chunk's (turn_idx, bytes) sort
-    equals the batch twin's array_sort(struct(turn_idx, text)) order —
-    Spark compares UTF8String byte-wise, so python bytes ordering of the
-    UTF-8 encoding is the same total order."""
-    from ocr_lib_spark.streaming.stateful import (
-        decode_chunk,
-        encode_chunk,
-        merge_chunk,
-    )
-
-    entries = [(0, "héllo".encode()), (1, b""), (3, b"x" * 1000), (7, b"z")]
-    meta, store = encode_chunk(entries)
-    assert decode_chunk(meta, store) == entries
-
-    # out-of-order + duplicate turn_idx arrivals fold into sorted order
-    # with byte-wise text tiebreak (the batch array_sort tiebreak)
-    meta, store = encode_chunk([])
-    for batch in ([(3, b"bb")], [(1, "ü".encode()), (3, b"aa")], [(0, b"")]):
-        meta, store = merge_chunk(meta, store, batch)
-    assert decode_chunk(meta, store) == [
-        (0, b""),
-        (1, "ü".encode()),
-        (3, b"aa"),
-        (3, b"bb"),
-    ]
-
-
 def test_stateful_assembly_mega_conversation_bounded_state(spark, tmp_path):
     """North-rule 10^6-turn hazard, scaled to 10^5 (VERDICT r05 item 1):
     a single 100k-turn conversation streams across 8 micro-batches in
-    shuffled turn order; the emitted document equals the batch
-    assembler's, and the state held per-chunk blobs — the emitted
-    n_state_chunks witness equals ceil(n_turns / chunk_turns), NOT a
-    per-turn array length."""
-    import math
-
+    shuffled turn order; its session's aggregation buffer is merged in
+    the state store batch after batch, and the emitted document equals
+    the batch assembler's."""
     from pyspark.sql import functions as F
 
     from ocr_lib_spark.pipeline import assemble_conversations
-    from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
 
-    n, chunk_turns = 100_000, 1024
+    n = 100_000
     base = spark.range(n).select(
         F.lit("conv-big").alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
@@ -503,7 +526,7 @@ def test_stateful_assembly_mega_conversation_bounded_state(spark, tmp_path):
         ).alias("ts"),
     )
     src = str(tmp_path / "mega_src")
-    # shuffled order across 8 files -> every micro-batch hits most chunks
+    # shuffled order across 8 files -> every micro-batch extends the session
     base.orderBy(F.md5(F.col("id").cast("string"))).repartition(8).write.parquet(src)
 
     st = (
@@ -513,8 +536,11 @@ def test_stateful_assembly_mega_conversation_bounded_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = assemble_conversations_stateful(
-        st, watermark="2 hours", gap_ms=60_000, chunk_turns=chunk_turns
+    # every second of the hour carries turns, so the 1-minute gap never
+    # splits the one session
+    out = assemble_conversations(
+        st.withWatermark("ts", "2 hours"),
+        by=("conv_id", F.session_window("ts", "1 minute")),
     )
     q = (
         out.writeStream.outputMode("append")
@@ -545,7 +571,6 @@ def test_stateful_assembly_mega_conversation_bounded_state(spark, tmp_path):
     assert got["conv_text"] == exp["conv_text"]
     assert int(got["n_turns"]) == n == int(exp["n_turns"])
     assert int(got["n_content_turns"]) == int(exp["n_content_turns"])
-    assert int(got["n_state_chunks"]) == math.ceil(n / chunk_turns)
 
 
 def test_stream_session_window_merges_across_microbatches(spark, tmp_path):

@@ -12,7 +12,6 @@
 
 import contextlib
 import hashlib
-import math
 
 import pandas as pd
 import pytest
@@ -97,15 +96,15 @@ def test_mega_conversation_assembly_equals_pandas_golden(spark, mega_extracted):
 
 @pytest.fixture(scope="module")
 def mega_stateful(spark, mega_extracted, tmp_path_factory):
-    """The mega fixture streamed through the chunked stateful assembler
-    at two chunk sizes: turns arrive in shuffled order over 4
-    single-file micro-batches, and a far-future poke turn flushes every
-    session. Returns ``{chunk_turns: assembled pandas frame}``."""
-    from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
-
+    """The mega fixture streamed through the assembly aggregate per
+    (conv_id, event-time session window): turns arrive in shuffled
+    order over 4 single-file micro-batches, and a far-future poke turn
+    flushes every session. Returns the assembled pandas frame."""
     pdf, _ = mega_extracted
-    root = tmp_path_factory.mktemp("mega_stateful")
+    src = str(tmp_path_factory.mktemp("mega_stateful") / "src")
     turns = spark.createDataFrame(pdf, schema="conv_id string, turn_idx int, extracted_text string")
+    # every second of the first 10 minutes carries turns, so the
+    # 1-minute gap keeps each conversation in one session
     turns = turns.withColumn(
         "ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")) + (F.col("turn_idx") % 600) * F.expr("INTERVAL 1 SECOND")
     ).orderBy(F.md5(F.concat("conv_id", F.col("turn_idx").cast("string"))))
@@ -113,60 +112,55 @@ def mega_stateful(spark, mega_extracted, tmp_path_factory):
         [("zz_poke", 0, "x")], "conv_id string, turn_idx int, extracted_text string"
     ).withColumn("ts", F.to_timestamp(F.lit("2024-01-03 00:00:00")))
 
-    out = {}
-    for chunk_turns in (64, 1024):
-        src = str(root / f"src_{chunk_turns}")
-        turns.repartition(4).write.parquet(src)
-        st = (
-            spark.readStream.schema("conv_id string, turn_idx int, extracted_text string, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    turns.repartition(4).write.parquet(src)
+    st = (
+        spark.readStream.schema("conv_id string, turn_idx int, extracted_text string, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        assemble_conversations(
+            st.withWatermark("ts", "2 hours"),
+            by=("conv_id", F.session_window("ts", "1 minute")),
         )
-        name = f"t_mega_stateful_{chunk_turns}"
-        q = (
-            assemble_conversations_stateful(st, watermark="2 hours", gap_ms=60_000, chunk_turns=chunk_turns)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # the far-future poke advances the watermark past every
-            # conversation's last activity + gap, so all sessions emit
-            poke.write.mode("append").parquet(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out[chunk_turns] = (
-            spark.sql(f"SELECT * FROM {name} WHERE conv_id != 'zz_poke'")
-            .orderBy("conv_id")
-            .toPandas()
-            .reset_index(drop=True)
-        )
-    return out
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("t_mega_stateful")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        # the far-future poke advances the watermark past every
+        # conversation's last activity + gap, so all sessions emit
+        poke.write.mode("append").parquet(src)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return (
+        spark.sql("SELECT * FROM t_mega_stateful WHERE conv_id != 'zz_poke'")
+        .orderBy("conv_id")
+        .toPandas()
+        .reset_index(drop=True)
+    )
 
 
 def test_chunked_assembly_equals_single_level_and_golden(spark, mega_extracted, mega_stateful):
-    """The streaming assembler keeps chunked state: at two chunk sizes
-    it emits exactly what the single-level batch assembly and the
-    pandas golden give, and holds ceil(n_turns / chunk_turns) chunks."""
+    """The streamed assembly emits exactly what the batch assembly and
+    the pandas golden give on the mega fixture."""
     pdf, df = mega_extracted
     golden = _pandas_golden(pdf)
     single = assemble_conversations(df).orderBy("conv_id").toPandas().reset_index(drop=True)
-    for chunk_turns, got in mega_stateful.items():
-        for exp in (single, golden):
-            assert (got.conv_id.values == exp.conv_id.values).all(), chunk_turns
-            assert (got.conv_text.values == exp.conv_text.values).all(), chunk_turns
-            assert (got.n_turns.values == exp.n_turns.values).all(), chunk_turns
-            assert (got.n_content_turns.values == exp.n_content_turns.values).all(), chunk_turns
-        assert list(got.n_state_chunks) == [math.ceil(n / chunk_turns) for n in golden.n_turns]
+    got = mega_stateful
+    for exp in (single, golden):
+        assert (got.conv_id.values == exp.conv_id.values).all()
+        assert (got.conv_text.values == exp.conv_text.values).all()
+        assert (got.n_turns.values == exp.n_turns.values).all()
+        assert (got.n_content_turns.values == exp.n_content_turns.values).all()
 
 
 def test_conv_dedup_identical_under_chunking(spark, mega_extracted, mega_stateful):
     """Digest-level equality: the downstream exact-dedup digest (md5 of
-    conv_text) is the same at both chunk sizes of the streaming
-    assembler and equals the golden's."""
+    conv_text) of the streamed assembly equals the golden's."""
     pdf, _ = mega_extracted
     golden = _pandas_golden(pdf)
     expected = pd.DataFrame(
@@ -175,18 +169,14 @@ def test_conv_dedup_identical_under_chunking(spark, mega_extracted, mega_statefu
             "d": [hashlib.md5(t.encode()).hexdigest() for t in golden.conv_text],
         }
     )
-
-    def digests(chunk_turns):
-        got = mega_stateful[chunk_turns]
-        return pd.DataFrame(
-            {
-                "conv_id": got.conv_id,
-                "d": [hashlib.md5(t.encode()).hexdigest() for t in got.conv_text],
-            }
-        )
-
-    pd.testing.assert_frame_equal(digests(64), expected)
-    pd.testing.assert_frame_equal(digests(1024), expected)
+    got = mega_stateful
+    digests = pd.DataFrame(
+        {
+            "conv_id": got.conv_id,
+            "d": [hashlib.md5(t.encode()).hexdigest() for t in got.conv_text],
+        }
+    )
+    pd.testing.assert_frame_equal(digests, expected)
 
 
 def test_assembly_partial_aggregate_combines_turns_per_partition(spark, mega_extracted):
@@ -219,17 +209,6 @@ def test_assembly_partitions_once_on_conv_id(spark, mega_extracted):
             for n in _final_plan_nodes(assemble_conversations(src))
         ]
         assert names.count("ShuffleExchangeExec") == exchanges, names
-
-
-@pytest.mark.parametrize("chunk_turns", [0, -2])
-def test_assembly_rejects_non_positive_chunk_turns(chunk_turns):
-    """Floor division by a negative chunk size reversed the chunk order
-    and 0 only failed once an action ran; the streaming assembler's
-    chunked state raises at call time."""
-    from ocr_lib_spark.streaming.stateful import assemble_conversations_stateful
-
-    with pytest.raises(ValueError, match="chunk_turns"):
-        assemble_conversations_stateful(None, chunk_turns=chunk_turns)
 
 
 DEGENERATE_DOCS = [

@@ -70,7 +70,9 @@ def main() -> None:
         "| pushed filters | narrowest scan |",
         "|---|---|---|---|---|---|---|---|",
     ]
-    for name, fn in entry_mod.queries().items():
+    # registry-name order: queries() order follows gate staleness, so a
+    # regeneration diff would show rows moving that no plan moved
+    for name, fn in sorted(entry_mod.queries().items()):
         try:
             st = plan_stats(fn(spark, sf_dir))
         except Exception as e:  # pragma: no cover
@@ -92,7 +94,8 @@ def main() -> None:
         "  input already sits in one partition.",
         "- stream_extract_text is audited post-hoc (memory sink), so its row",
         "  shows the sink scan, not the streaming micro-batch plan; ditto",
-        "  stream_conv_assembly (stateful applyInPandasWithState plan).",
+        "  stream_conv_assembly (the conv_* assembly aggregate grouped by",
+        "  conv_id and an event-time session window).",
         "- percentile_pick (round 3): distributed order statistics — the",
         "  broadcast joins carry the per-(type,q) search-state table; the",
         "  only window runs over candidate sets capped at 64Ki rows BY",
