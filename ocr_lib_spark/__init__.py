@@ -11,7 +11,7 @@ The mapping (SURVEY.md header table):
   ocr-lib stage                      this engine
   ---------------------------------  ------------------------------------
   base64 -> image decode             payload decode (tool wrappers, data:
-                                     URIs) in Arrow-batched pandas UDFs
+                                     URIs) in Arrow-batched kernels
   binarization (pixel -> b/w)        token/markup-class signal per node
   black-dot scan                     candidate text-node extraction
   connected-component grouping       gap-tolerant block grouping
@@ -23,7 +23,7 @@ The mapping (SURVEY.md header table):
   progress atoms                     per-partition lineage + metrics rows
 
 Everything is DataFrame/Catalyst-first; the non-relational core
-(segmentation + classification) lives in vectorized Arrow `mapInPandas`
+(segmentation + classification) lives in vectorized `mapInArrow`
 batches — never row-at-a-time Python UDFs.
 """
 

@@ -150,8 +150,9 @@ RK_MOD = (1 << 31) - 1  # Mersenne prime 2^31-1
 
 def rolling_hash(text: Column | str) -> Column:
     """Full-document Rabin-Karp hash: fold c_i into acc*B + c_i mod M —
-    one pass, pure Catalyst (aggregate over the codepoint sequence)."""
-    c = F.col(text) if isinstance(text, str) else text
+    one pass, pure Catalyst (aggregate over the codepoint sequence).
+    NULL hashes as '' (0), as in the DuckDB oracle and the Arrow stage."""
+    c = F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit(""))
     chars = F.split(c, "")
     return F.aggregate(
         chars,
@@ -163,10 +164,9 @@ def rolling_hash(text: Column | str) -> Column:
 def min_gram_hash(text: Column | str, k: int = 8) -> Column:
     """Min polynomial hash over all k-grams — the rolling-window
     fingerprint (winnowing's selection primitive). Short docs (< k
-    chars) hash their whole text. O(n·k) as a Catalyst expression;
-    the O(n) incremental-roll variant lives in the pandas-UDF path if a
-    profile ever demands it (doc payloads are short relative to k)."""
-    c = F.col(text) if isinstance(text, str) else text
+    chars) hash their whole text, NULL as ''. O(n·k) as a Catalyst
+    expression; the O(n) variant is ``rolling_hashes_pandas``."""
+    c = F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit(""))
     n = F.length(c)
     starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     gram_hash = lambda i: F.aggregate(  # noqa: E731
@@ -178,8 +178,8 @@ def min_gram_hash(text: Column | str, k: int = 8) -> Column:
 
 
 def rolling_hashes_pandas(texts, k: int = 8):
-    """Fully vectorized twin of (rolling_hash, min_gram_hash) for one
-    pandas Series of texts. Identity used: the fold
+    """Fully vectorized twin of (rolling_hash, min_gram_hash) for a
+    sequence of texts (None hashes as ''). Identity used: the fold
     ``acc = (acc·B + c_i) mod M`` equals ``Σ c_i·B^{n-1-i} mod M``, so
     with a shared power table (one per batch, sized to the longest doc)
     both hashes are pure numpy — no per-character Python loop:
@@ -200,7 +200,7 @@ def rolling_hashes_pandas(texts, k: int = 8):
         np.fromiter(map(ord, t), dtype=np.int64, count=len(t))
         if isinstance(t, str) and t
         else None
-        for t in texts.astype(object)
+        for t in texts
     ]
     max_n = max((len(c) for c in cps if c is not None), default=0)
     pows = np.ones(max(max_n, k), dtype=np.int64)

@@ -64,7 +64,7 @@ def minhash_signatures(
     minhash guarantees (pairwise-independent family mod 2^61-1).
 
     Default path (``vectorized=True``): signatures computed per row in
-    an Arrow-batched ``mapInPandas`` — ZERO shuffles (a signature needs
+    an Arrow-batched ``mapInArrow`` — ZERO shuffles (a signature needs
     only its own document) and measured 1.7× faster than the relational
     build. ``vectorized=False`` keeps the pure-Catalyst twin
     (explode → map-side-combinable min aggregate; one narrow shuffle of
@@ -116,17 +116,18 @@ def _md5_prefix64(s: str) -> int:
 
 def _minhash_vectorized(df, text_col, id_col, n_hashes, k) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ocr_lib_spark.operators.shingling import batch_minhash
 
     A = np.array(MINHASH_A[:n_hashes], dtype=np.int64)
     B = np.array(MINHASH_B[:n_hashes], dtype=np.int64)
     C = np.array(MINHASH_C[:n_hashes], dtype=np.int64)
+    hs = [f"h{i}" for i in range(n_hashes)]
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             # NULL-text docs are DROPPED, matching the relational twin
             # (explode of a null shingle array emits no row); empty-string
             # docs keep their single '' shingle in both paths.
@@ -136,24 +137,17 @@ def _minhash_vectorized(df, text_col, id_col, n_hashes, k) -> DataFrame:
             # each UNIQUE shingle is md5'd once per batch. Bit-identical
             # to the per-row Python-set path (min over a multiset == min
             # over its distinct values), ~3x faster per batch.
-            col = pdf[text_col].astype(object)
-            keep = np.fromiter(
-                (isinstance(t, str) for t in col), dtype=bool, count=len(col)
+            keep = pc.is_valid(batch.column(text_col))
+            kept = batch.filter(keep)
+            mins = batch_minhash(kept.column(text_col).to_pylist(), A, B, C, k, MINHASH_P, _M30)
+            yield pa.RecordBatch.from_arrays(
+                [kept.column(id_col)] + [pa.array(mins[:, i]) for i in range(n_hashes)],
+                names=[id_col] + hs,
             )
-            texts = [t for t in col if isinstance(t, str)]
-            mins = batch_minhash(texts, A, B, C, k, MINHASH_P, _M30)
-            out = pd.DataFrame(
-                mins, columns=[f"h{i}" for i in range(n_hashes)]
-            )
-            out.insert(0, id_col, pdf[id_col].values[keep])
-            yield out
 
-    id_field = df.schema[id_col]
-    schema = T.StructType(
-        [T.StructField(id_col, id_field.dataType)]
-        + [T.StructField(f"h{i}", T.LongType()) for i in range(n_hashes)]
-    )
-    return spread_small(df.select(id_col, text_col)).mapInPandas(run, schema=schema)
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = ", ".join([f"{id_col} {id_type}"] + [f"{h} long" for h in hs])
+    return spread_small(df.select(id_col, text_col)).mapInArrow(run, schema)
 
 
 def lsh_band_table(
@@ -272,8 +266,7 @@ def simhash_bits(
     explicit sign-term pack produces; pinned by the simhash64_near_dup
     gate and test_simhash64_full_width)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
     import re as _re
 
@@ -284,18 +277,18 @@ def simhash_bits(
     powers = (1 << np.arange(n_bits, dtype=np.int64))
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             # token-less docs (NULL/empty/whitespace-only) are DROPPED,
             # matching the relational twin (explode + tok<>'' filter
             # leaves no group to aggregate) and the DuckDB oracle.
             # Each UNIQUE token is md5'd once per batch (natural-language
             # batches repeat tokens heavily); votes keep multiplicity —
             # bit-identical to hashing every occurrence.
-            keep = np.zeros(len(pdf), dtype=bool)
-            fps = np.zeros(len(pdf), dtype=np.int64)
+            keep = np.zeros(batch.num_rows, dtype=bool)
+            fps = np.zeros(batch.num_rows, dtype=np.int64)
             uid: dict[str, int] = {}
             doc_rows: list[tuple[int, np.ndarray]] = []
-            for ri, t in enumerate(pdf[text_col].astype(object)):
+            for ri, t in enumerate(batch.column(text_col).to_pylist()):
                 toks = ws.split(t.strip()) if isinstance(t, str) and t.strip() else []
                 toks = [x for x in toks if x]
                 if not toks:
@@ -316,14 +309,12 @@ def simhash_bits(
             for ri, ids in doc_rows:
                 votes = bits_u[ids].sum(axis=0)
                 fps[ri] = int(powers[votes > 0].sum())
-            out = pd.DataFrame({id_col: pdf[id_col].values[keep]})
-            out["simhash"] = fps[keep]
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).filter(pa.array(keep)), pa.array(fps[keep])],
+                names=[id_col, "simhash"],
+            )
 
-    id_field = df.schema[id_col]
-    schema = T.StructType(
-        [T.StructField(id_col, id_field.dataType), T.StructField("simhash", T.LongType())]
-    )
+    schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}, simhash long"
     src = df.select(id_col, text_col)
     if spread:
         # ``spread=False`` is for callers whose frame is known to be a
@@ -331,7 +322,7 @@ def simhash_bits(
         # checkpoint): the kernel is ~ms there and the byte estimate
         # cannot see row counts, so a spread exchange is pure overhead
         src = spread_small(src)
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema)
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

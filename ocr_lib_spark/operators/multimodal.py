@@ -22,19 +22,19 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ocr_lib_spark.partitioning import spread_small
 
 
-def _bytes(b) -> bytes:
-    """Nil-guard: NULL payloads behave as empty bytes everywhere (the
+def _payloads(batch: pa.RecordBatch, col: str) -> pa.Array:
+    """The batch's payload column with NULL as empty bytes (the
     empty-not-null discipline of the reference's guards, SURVEY.md §1.3)."""
-    return b if isinstance(b, (bytes, bytearray)) else b""
+    return pc.fill_null(batch.column(col), b"")
 
 
 def probe_image_dims(buf: bytes) -> tuple[int, int, str] | None:
@@ -651,18 +651,11 @@ def synth_container_payloads(
     kernel, zero shuffle."""
     import struct
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                doc_id = int(doc_id)
+            ids = batch.column(id_col)
+            for doc_id, text in zip(ids.to_pylist(), batch.column(text_col).to_pylist()):
                 cls = doc_id % MM_CLASSES
                 if cls in (0, 1, 2):
                     w, h = mm_census_dims(doc_id)
@@ -692,21 +685,13 @@ def synth_container_payloads(
                     payloads.append(b"\x00" + hashlib.md5(str(doc_id).encode()).digest())
                 else:
                     payloads.append(("" if text is None else str(text)).encode("utf-8"))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(payloads, pa.binary())], names=["doc_id", "payload"]
+            )
 
-    return spread_small(df.select(id_col, text_col)).mapInPandas(run, schema=schema)
-
-
-DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("content_md5", T.StringType()),
-        T.StructField("decoder", T.StringType()),
-    ]
-)
+    return spread_small(df.select(id_col, text_col)).mapInArrow(
+        run, "doc_id long, payload binary"
+    )
 
 
 def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
@@ -725,7 +710,6 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
 
     def run(batches):
         def dims(b):
-            b = _bytes(b)
             if b[:8] == b"\x89PNG\r\n\x1a\n":
                 px = png_decode(b)
                 if px is not None:
@@ -743,30 +727,26 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
             # a latent divergence on any empty/NULL text doc)
             return (b[0] % 64) + 1 if len(b) else 1, (len(b) % 64) + 1, "stub"
 
-        for pdf in batches:
-            raw = pdf[payload_col].map(_bytes)
-            whd = [dims(b) for b in raw]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": raw.map(len).astype("int32"),
-                    "width": pd.Series([t[0] for t in whd], index=pdf.index, dtype="int32"),
-                    "height": pd.Series([t[1] for t in whd], index=pdf.index, dtype="int32"),
-                    "content_md5": raw.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "decoder": pd.Series([t[2] for t in whd], index=pdf.index, dtype=object),
-                }
+        for batch in batches:
+            col = _payloads(batch, payload_col)
+            raw = col.to_pylist()
+            w, h, dec = zip(*map(dims, raw)) if raw else ((), (), ())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col),
+                    pc.binary_length(col),
+                    pa.array(w, pa.int32()),
+                    pa.array(h, pa.int32()),
+                    pa.array([hashlib.md5(b).hexdigest() for b in raw], pa.string()),
+                    pa.array(dec, pa.string()),
+                ],
+                names=["doc_id", "n_bytes", "width", "height", "content_md5", "decoder"],
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-HIST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("hist", T.ArrayType(T.IntegerType())),
-    ]
-)
+    return df.select(id_col, payload_col).mapInArrow(
+        run,
+        "doc_id long, n_bytes int, width int, height int, content_md5 string, decoder string",
+    )
 
 
 def byte_histogram(
@@ -781,35 +761,24 @@ def byte_histogram(
     shift = 8 - (bins - 1).bit_length()
 
     def run(batches):
-        for pdf in batches:
-            raw = pdf[payload_col].map(_bytes)
+        for batch in batches:
+            col = _payloads(batch, payload_col)
             hists = [
                 np.bincount(
                     np.frombuffer(b, dtype=np.uint8) >> shift, minlength=bins
                 ).astype("int32").tolist()
                 if len(b)
                 else [0] * bins
-                for b in raw
+                for b in col.to_pylist()
             ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": raw.map(len).astype("int32"),
-                    "hist": pd.Series(hists, index=pdf.index, dtype=object),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), pc.binary_length(col), pa.array(hists, pa.list_(pa.int32()))],
+                names=["doc_id", "n_bytes", "hist"],
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=HIST_SCHEMA)
-
-
-THUMB_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("mean_byte", T.IntegerType()),
-    ]
-)
+    return df.select(id_col, payload_col).mapInArrow(
+        run, "doc_id long, n_bytes int, hist array<int>"
+    )
 
 
 def byte_thumbnail(
@@ -869,11 +838,12 @@ def byte_thumbnail(
         return np.where(hi > lo, (csum[hi] - csum[lo]) // np.maximum(hi - lo, 1), 0)
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             ids, ns, cs, vs = [], [], [], []
             cell_idx = np.arange(cells, dtype=np.int64)
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                b = _bytes(b)
+            for did, b in zip(
+                batch.column(id_col).to_pylist(), _payloads(batch, payload_col).to_pylist()
+            ):
                 n = len(b)
                 true_px = png_cells(b) if n else None
                 if true_px is not None:
@@ -892,16 +862,19 @@ def byte_thumbnail(
                 ns.extend([n] * cells)
                 cs.extend(range(cells))
                 vs.extend(int(v) for v in vals)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(ns, dtype="int32"),
-                    "cell": pd.Series(cs, dtype="int32"),
-                    "mean_byte": pd.Series(vs, dtype="int32"),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(ns, pa.int32()),
+                    pa.array(cs, pa.int32()),
+                    pa.array(vs, pa.int32()),
+                ],
+                names=["doc_id", "n_bytes", "cell", "mean_byte"],
             )
 
-    return spread_small(df.select(id_col, payload_col)).mapInPandas(run, schema=THUMB_SCHEMA)
+    return spread_small(df.select(id_col, payload_col)).mapInArrow(
+        run, "doc_id long, n_bytes int, cell int, mean_byte int"
+    )
 
 
 def frame_sample(

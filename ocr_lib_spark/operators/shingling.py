@@ -104,40 +104,34 @@ def batch_pair_set_counts(ta, tb, k: int):
     return ni, na, nb
 
 
-def set_counts_udf(k: int):
+def pair_set_counts(pairs, k: int):
     """Arrow-batched shingle-set kernel for candidate-pair verification:
-    the one definition every verifier calls. Struct fields: n_inter
-    (|∩|), n_union (|∪|) and the per-side cardinalities n_a, n_b
-    (containment needs them). Marked non-deterministic so the optimizer
-    never duplicates it around a pushed-down filter: without the mark
-    near_dup_verified and containment_dedup plan two ArrowEvalPython
-    nodes, each shingling every candidate pair (measured as a duplicated
-    380 ms single-task stage). The kernel is pure — the mark only pins
-    a single evaluation."""
-    import pandas as pd
+    the one definition every verifier calls. The pair frame's text
+    columns ``ta`` and ``tb`` are replaced by n_inter (|∩|), n_union
+    (|∪|) and the per-side cardinalities n_a, n_b (containment needs
+    them); every other column passes through."""
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField(f, T.LongType())
-                for f in ("n_inter", "n_union", "n_a", "n_b")
-            ]
-        )
+    carry = [c for c in pairs.columns if c not in ("ta", "tb")]
+    counts = ["n_inter", "n_union", "n_a", "n_b"]
+
+    def run(batches):
+        for batch in batches:
+            ni, na, nb = batch_pair_set_counts(
+                batch.column("ta").to_pylist(), batch.column("tb").to_pylist(), k
+            )
+            nu = [a + b - i for a, b, i in zip(na, nb, ni)]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in carry]
+                + [pa.array(v, pa.int64()) for v in (ni, nu, na, nb)],
+                names=carry + counts,
+            )
+
+    schema = T.StructType(
+        [pairs.schema[c] for c in carry] + [T.StructField(f, T.LongType()) for f in counts]
     )
-    def set_counts(ta, tb):
-        ni, na, nb = batch_pair_set_counts(ta.astype(object), tb.astype(object), k)
-        return pd.DataFrame(
-            {
-                "n_inter": ni,
-                "n_union": [a + b - i for a, b, i in zip(na, nb, ni)],
-                "n_a": na,
-                "n_b": nb,
-            }
-        )
-
-    return set_counts.asNondeterministic()
+    return pairs.mapInArrow(run, schema)
 
 
 def batch_minhash(texts, A, B, C, k: int, p: int, m30: int) -> np.ndarray:

@@ -568,24 +568,25 @@ def _q_incremental_dedup(spark, sf_dir):
     # pre-shingled fat arrays (~200x the bytes through the candidate
     # join) and measured ~4x slower on this shape; |∩|/|∪| and the
     # >= τ verdicts are identical
-    from ocr_lib_spark.operators.shingling import set_counts_udf
+    from ocr_lib_spark.operators.shingling import pair_set_counts
     from ocr_lib_spark.partitioning import spread_small
 
-    set_counts = set_counts_udf(SHINGLE_K)
     tx = d.select("doc_id", "text")
     ver = (
-        spread_small(
-            cand.join(
-                tx.select(F.col("doc_id").alias("new_id"), F.col("text").alias("ta")),
-                "new_id",
-            ).join(
-                tx.select(F.col("doc_id").alias("old_id"), F.col("text").alias("tb")),
-                "old_id",
+        pair_set_counts(
+            spread_small(
+                cand.join(
+                    tx.select(F.col("doc_id").alias("new_id"), F.col("text").alias("ta")),
+                    "new_id",
+                ).join(
+                    tx.select(F.col("doc_id").alias("old_id"), F.col("text").alias("tb")),
+                    "old_id",
+                ),
+                probe=d,
             ),
-            probe=d,
+            SHINGLE_K,
         )
-        .select("new_id", "old_id", set_counts("ta", "tb").alias("c"))
-        .withColumn("jac", F.col("c.n_inter") / F.col("c.n_union"))
+        .withColumn("jac", F.col("n_inter") / F.col("n_union"))
         .where(F.col("jac") >= NEAR_DUP_JACCARD_T)
         .groupBy("new_id")
         .agg(
@@ -1995,28 +1996,29 @@ FROM dm LEFT JOIN merges mg USING (doc_id)
 # Chosen-merge semantics are the step's documented greedy pass: within
 # each ISLAND of consecutive match positions, take s, s+2, s+4, ...
 # (ceil(L/2) merges per island of L matches; floor(L/2) for a run of L
-# identical tokens) — the Spark side builds the chosen-position array
-# with one ordered HOF fold, the DuckDB twin with gaps-and-islands
-# row_number parity, value-identical by the island argument.
+# identical tokens) — the Spark side filters the match array by island
+# offset parity (islands keyed by m[j] - j), the DuckDB twin by
+# gaps-and-islands row_number parity: the same island argument.
 
 BPE_STEPS = 3
-#: ordered fold over match positions m: keep p iff p >= last_kept + 2
-#: (matches are generated in increasing order), accumulating the
-#: CHOSEN array; its size is the round's per-doc merge count
+#: greedy chosen positions as one filter over the match positions m
+#: (no fold, no array grown per match). The matches m[j] with equal
+#: m[j] - j form one island of consecutive positions, and greedy takes
+#: the even offsets from the island's first match; a match that starts
+#: its island (always, unless pair_a = pair_b) is taken without the
+#: island search. Its size is the round's per-doc merge count.
 BPE_CHOSEN_EXPR = (
-    "aggregate(m, struct(cast(array() as array<int>) AS ch, CAST(-2 AS BIGINT) AS lt), "
-    "(acc, p) -> IF(p >= acc.lt + 2, "
-    "struct(concat(acc.ch, array(p)) AS ch, CAST(p AS BIGINT) AS lt), acc), "
-    "acc -> acc.ch)"
+    "filter(m, (p, k) -> k = 0 OR m[k - 1] < p - 1 OR "
+    "(k + 1 - array_position(transform(m, (x, j) -> x - j), p - k)) % 2 = 0)"
 )
-#: stream rebuild from the chosen positions: a chosen i emits the
-#: fused pair, i+1 of a chosen i emits nothing, everything else passes
+#: stream rebuild from the chosen positions: a doc with none keeps t;
+#: otherwise i+1 of a chosen i is dropped, a chosen i emits the fused
+#: pair and everything else passes
 BPE_REBUILD_EXPR = (
-    "CASE WHEN size(t) < 1 THEN t ELSE "
-    "flatten(transform(sequence(0, cast(size(t) as int) - 1), "
-    "i -> CASE WHEN array_contains(ch, i) THEN array(concat(t[i], '_', t[i+1])) "
-    "WHEN array_contains(ch, i - 1) THEN cast(array() as array<string>) "
-    "ELSE array(t[i]) END)) END"
+    "CASE WHEN size(ch) = 0 THEN t ELSE "
+    "transform(filter(sequence(0, cast(size(t) as int) - 1), "
+    "i -> NOT array_contains(ch, i - 1)), "
+    "i -> IF(array_contains(ch, i), concat(t[i], '_', t[i+1]), t[i])) END"
 )
 
 

@@ -25,7 +25,7 @@ from ocr_lib_spark.operators.dedup import (
     minhash_signatures,
     simhash64,
 )
-from ocr_lib_spark.operators.shingling import set_counts_udf
+from ocr_lib_spark.operators.shingling import pair_set_counts
 from ocr_lib_spark.plans import QueryDef, documents
 from ocr_lib_spark.partitioning import spread_small
 from ocr_lib_spark.streaming.replay import replay_to_memory
@@ -820,7 +820,7 @@ def _q_stream_near_dup(spark, sf_dir):
 def _adjacent_jaccard(spark, sf_dir):
     # Join the (narrow) texts first — joining pre-shingled fat arrays
     # shuffles ~200× more bytes. The shingle-set |∩|/|∪| kernel runs in
-    # an Arrow-batched pandas UDF (operators/shingling.py: exact
+    # an Arrow-batched mapInArrow stage (operators/shingling.py: exact
     # cardinalities, ~4× faster than the char_shingles +
     # array_intersect/array_union Catalyst expressions on this shape).
     d = documents(spark, sf_dir)
@@ -828,18 +828,13 @@ def _adjacent_jaccard(spark, sf_dir):
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
     # The broadcast self-join PRESERVES the probe side's partitioning,
     # and a small-SF single-file scan is ONE split — which fed the whole
-    # pandas kernel to one python worker (the r2 bench regression:
+    # shingle kernel to one python worker (the r2 bench regression:
     # 1.32s single-task vs ~0.97s repartitioned). probe=d: the join's
     # size estimate is not honest.
     j = spread_small(a.join(b, F.col("id_b") == F.col("id_a") + 1), probe=d)
     return (
-        j.select("id_a", "id_b", set_counts_udf(SHINGLE_K)("ta", "tb").alias("c"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col("c.n_inter").alias("n_inter"),
-            F.col("c.n_union").alias("n_union"),
-        )
+        pair_set_counts(j, SHINGLE_K)
+        .select("id_a", "id_b", "n_inter", "n_union")
         .withColumn("jaccard", F.col("n_inter") / F.col("n_union"))
     )
 
@@ -1094,12 +1089,12 @@ def _token_fingerprints(spark, sf_dir):
 
 
 def _token_fingerprints_of(d):
-    # token counts stay JVM-side (regex codegen); the two rolling hashes
-    # run in an Arrow-batched pandas UDF — the O(n) prefix-hash twin of
-    # the O(n·k) Catalyst expressions (bit-identical mod 2^31-1;
-    # measured ~4× faster on this shape, see functions/text.py)
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    # token counts stay JVM-side (regex codegen) and pass through; the
+    # two rolling hashes run in an Arrow-batched mapInArrow stage — the
+    # O(n) prefix-hash twin of the O(n·k) Catalyst expressions
+    # (bit-identical mod 2^31-1; measured ~4× faster on this shape, see
+    # functions/text.py)
+    import pyarrow as pa
 
     from ocr_lib_spark.functions.text import (
         bpe_token_count,
@@ -1107,16 +1102,16 @@ def _token_fingerprints_of(d):
         token_count,
     )
 
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("rk_hash", T.LongType()),
-                T.StructField("min_gram8", T.LongType()),
-            ]
-        )
-    )
-    def hashes(texts):
-        return rolling_hashes_pandas(texts, k=8)
+    carry = ["doc_id", "ws_tokens", "bpe_tokens"]
+
+    def hashes(batches):
+        for batch in batches:
+            h = rolling_hashes_pandas(batch.column("text").to_pylist(), k=8)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in carry]
+                + [pa.array(h.rk_hash), pa.array(h.min_gram8)],
+                names=carry + ["rk_hash", "min_gram8"],
+            )
 
     return (
         spread_small(d)
@@ -1124,14 +1119,10 @@ def _token_fingerprints_of(d):
             "doc_id",
             token_count("text").alias("ws_tokens"),
             bpe_token_count("text").alias("bpe_tokens"),
-            hashes("text").alias("h"),
+            "text",
         )
-        .select(
-            "doc_id",
-            "ws_tokens",
-            "bpe_tokens",
-            F.col("h.rk_hash").alias("rk_hash"),
-            F.col("h.min_gram8").alias("min_gram8"),
+        .mapInArrow(
+            hashes, "doc_id long, ws_tokens int, bpe_tokens int, rk_hash long, min_gram8 long"
         )
     )
 
@@ -1178,8 +1169,8 @@ def _lsh_pair_counts(spark, sf_dir):
     containment_dedup: banded MinHash candidates (precision bands +
     hot-bucket cap), the narrow texts joined back by id, and ONE
     evaluation of the shingle-set kernel per candidate pair. Returns
-    (id_a, id_b, c) with c the ``set_counts_udf`` struct; each caller
-    adds only its verdict columns."""
+    (id_a, id_b) and the ``pair_set_counts`` columns; each caller adds
+    only its verdict columns."""
     d = documents(spark, sf_dir)
     sig = minhash_signatures(d, n_hashes=N_HASHES, k=SHINGLE_K)
     cand = lsh_candidate_pairs(
@@ -1195,8 +1186,8 @@ def _lsh_pair_counts(spark, sf_dir):
     # CPU-dense shingle kernel 1-2 tasks (measured 386 ms on 2 tasks at
     # local[32]). probe=d — join-output size estimates are
     # multiplicative garbage; the base table's is honest.
-    return spread_small(cand.join(a, "id_a").join(b, "id_b"), probe=d).select(
-        "id_a", "id_b", set_counts_udf(SHINGLE_K)("ta", "tb").alias("c")
+    return pair_set_counts(
+        spread_small(cand.join(a, "id_a").join(b, "id_b"), probe=d), SHINGLE_K
     )
 
 
@@ -1206,10 +1197,9 @@ def _near_dup_verified(spark, sf_dir):
     bound the quadratic; the exact kernel runs only on candidates)."""
     return (
         _lsh_pair_counts(spark, sf_dir)
-        .withColumn("jaccard", F.col("c.n_inter") / F.col("c.n_union"))
+        .withColumn("jaccard", F.col("n_inter") / F.col("n_union"))
         .where(F.col("jaccard") >= NEAR_DUP_JACCARD_T)
-        .select("id_a", "id_b", F.col("c.n_inter").alias("n_inter"),
-                F.col("c.n_union").alias("n_union"), "jaccard")
+        .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
     )
 
 
@@ -1290,16 +1280,16 @@ def _containment_dedup(spark, sf_dir):
     scored = _lsh_pair_counts(spark, sf_dir).select(
         "id_a",
         "id_b",
-        F.col("c.n_inter").alias("n_inter"),
-        F.col("c.n_a").alias("n_a"),
-        F.col("c.n_b").alias("n_b"),
-        F.expr("(10000 * c.n_inter) DIV c.n_a").cast("long").alias("cont_ab_bp"),
-        F.expr("(10000 * c.n_inter) DIV c.n_b").cast("long").alias("cont_ba_bp"),
+        "n_inter",
+        "n_a",
+        "n_b",
+        F.expr("(10000 * n_inter) DIV n_a").cast("long").alias("cont_ab_bp"),
+        F.expr("(10000 * n_inter) DIV n_b").cast("long").alias("cont_ba_bp"),
         # integer Jaccard test: 100*|∩| >= 35*|∪| <=> J >= 0.35
         (
-            F.lit(100) * F.col("c.n_inter")
+            F.lit(100) * F.col("n_inter")
             >= F.lit(int(NEAR_DUP_JACCARD_T * 100))
-            * (F.col("c.n_a") + F.col("c.n_b") - F.col("c.n_inter"))
+            * (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
         ).alias("is_dup"),
     )
     return scored.where(

@@ -50,7 +50,7 @@ def get_spark(
 
     - AQE on: runtime partition coalescing + skew-join splitting are the
       backstop for residual skew after explicit conv_id salting.
-    - Arrow on: every pandas UDF round-trips columnar batches.
+    - Arrow on: ``toPandas``/``createDataFrame`` move columnar batches.
     - UTC session timezone: required for DuckDB-oracle comparability.
     - Modest pre-touched heap: a large lazily-grown heap (24g) measured
       3-5× slower at local[32] — heap grow/shrink under concurrent

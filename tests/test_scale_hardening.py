@@ -394,11 +394,15 @@ def test_recall_pass_nan_first_zero_norm_last_like_duckdb(spark):
 
 
 def test_rolling_hash_codepoint_twins_non_ascii(spark):
+    """The Catalyst twin, the numpy kernel and the token_fingerprints
+    Arrow stage agree on non-ASCII, short, NULL, empty and
+    whitespace-only texts (NULL hashes as '', as in the DuckDB oracle)."""
     from ocr_lib_spark.functions.text import (
         min_gram_hash,
         rolling_hash,
         rolling_hashes_pandas,
     )
+    from ocr_lib_spark.plans.textops import _token_fingerprints_of
 
     texts = [
         "héllo wörld ünïcode",
@@ -406,20 +410,31 @@ def test_rolling_hash_codepoint_twins_non_ascii(spark):
         "mixed ascii + ωμέγα",
         "plain ascii control",
         "ab",  # shorter than k
+        None,
+        "",
+        " \t  ",
     ]
     pdf_hashes = rolling_hashes_pandas(pd.Series(texts), k=8)
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], schema="i long, text string")
-    catalyst = (
-        df.select(
-            "i",
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], schema="doc_id long, text string"
+    )
+    catalyst = [
+        (r.rk_hash, r.min_gram8)
+        for r in df.select(
+            "doc_id",
             rolling_hash("text").alias("rk_hash"),
             min_gram_hash("text", k=8).alias("min_gram8"),
         )
-        .orderBy("i")
-        .toPandas()
-    )
-    assert list(catalyst.rk_hash) == list(pdf_hashes.rk_hash)
-    assert list(catalyst.min_gram8) == list(pdf_hashes.min_gram8)
+        .orderBy("doc_id")
+        .collect()
+    ]
+    stage = [
+        (r.rk_hash, r.min_gram8)
+        for r in _token_fingerprints_of(df).orderBy("doc_id").collect()
+    ]
+    assert catalyst == list(zip(pdf_hashes.rk_hash, pdf_hashes.min_gram8))
+    assert stage == catalyst
+    assert catalyst[5] == catalyst[6] == (0, 0)
 
 
 def test_pack_tokens_invariants_at_two_shard_counts(spark):
@@ -543,20 +558,62 @@ def test_near_dup_clusters_evaluates_pairs_once(spark):
     assert seen.value == len(pairs)
 
 
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
 @pytest.mark.parametrize(
     "query",
     ["near_dup_verified", "containment_dedup", "incremental_dedup", "adjacent_jaccard"],
 )
 def test_shingle_set_kernel_evaluated_once(spark, query):
-    """Every verifier runs the shared shingle-set kernel in exactly one
-    ArrowEvalPython node. Without its non-deterministic mark the
-    optimizer may copy the kernel to both sides of a pushed-down filter
-    or a collapsed projection, shingling every candidate pair twice."""
+    """Every verifier runs the shared shingle-set kernel exactly once:
+    one operator of the final plan, whatever its class, introduces the
+    kernel's four count columns. A copy of the kernel (e.g. on both
+    sides of a pushed-down filter) would introduce a second set and
+    shingle every candidate pair twice."""
+    from ocr_lib_spark.plans import build_registry
+
+    counts = {"n_inter", "n_union", "n_a", "n_b"}
+
+    def new_counts(node):
+        inherited = {a.exprId().id() for c in _seq(node.children()) for a in _seq(c.output())}
+        return {
+            a.name() for a in _seq(node.output())
+            if a.name() in counts and a.exprId().id() not in inherited
+        }
+
+    df = build_registry()[query].fn(spark, SF_DIR)
+    producers = [
+        (n.getClass().getSimpleName(), new)
+        for n in _final_plan_nodes(df)
+        if (new := new_counts(n))
+    ]
+    assert [new for _, new in producers] == [counts], producers
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "minhash_sigs",
+        "simhash",
+        "adjacent_jaccard",
+        "token_fingerprints",
+        "multimodal_meta",
+        "multimodal_hist",
+        "multimodal_thumb",
+        "multimodal_decode_census",
+    ],
+)
+def test_python_kernels_cross_as_arrow(spark, query):
+    """Each Python kernel stage is a mapInArrow node: none crosses the
+    boundary as a pandas UDF or a mapInPandas stage."""
     from ocr_lib_spark.plans import build_registry
 
     df = build_registry()[query].fn(spark, SF_DIR)
-    names = [n.getClass().getSimpleName() for n in _final_plan_nodes(df)]
-    assert names.count("ArrowEvalPythonExec") == 1, names
+    names = {n.getClass().getSimpleName() for n in _final_plan_nodes(df)}
+    assert "MapInArrowExec" in names, names
+    assert not names & {"ArrowEvalPythonExec", "MapInPandasExec"}, names
 
 
 @contextlib.contextmanager

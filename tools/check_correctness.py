@@ -6,6 +6,8 @@ row count + column names + an order-insensitive value hash (columns
 sorted by name, rows sorted, values stringified with float rounding).
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+``tools/gate_state.py verify`` calls ``check`` to re-verify queries.
 """
 
 from __future__ import annotations
@@ -57,8 +59,17 @@ def frame_hash(df: pd.DataFrame) -> str:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    results = check(sf_dir, set(sys.argv[2:]))
+    bad = {k: v for k, v in results.items() if v.startswith(("FAIL", "SPARK", "ORACLE"))}
+    print(f"\n{len(results) - len(bad)}/{len(results)} OK")
+    if bad:
+        sys.exit(1)
 
+
+def check(sf_dir: str, only: set[str]) -> dict[str, str]:
+    """Per-query verdict ("OK", "rows-only: ...", "FAIL: ...", "SPARK
+    ERROR: ..." or "ORACLE ERROR: ...") for every query, or for the
+    ``only`` ones when given, at ``sf_dir``."""
     sys.path.insert(0, ".")
     import __spark_entry__ as entry_mod
     from ocr_lib_spark.session import get_spark
@@ -112,10 +123,7 @@ def main():
         print(f"{name:24s} {status}  ({len(sdf)} rows, {spark_s:.1f}s)", flush=True)
 
     spark.stop()
-    bad = {k: v for k, v in results.items() if v.startswith(("FAIL", "SPARK", "ORACLE"))}
-    print(f"\n{len(results) - len(bad)}/{len(results)} OK")
-    if bad:
-        sys.exit(1)
+    return results
 
 
 def _driver_shape_problems(sdf, odf):

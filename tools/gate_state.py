@@ -7,6 +7,14 @@ Usage, at round START (HEAD == the code the driver just gated):
                                                    # the fingerprint doesn't cover)
     python tools/gate_state.py status              # show stale/fresh per query
 
+After a change, re-verify the touched queries locally:
+
+    python tools/gate_state.py verify sf_dir[,sf_dir ...] q1 q2 ...
+
+``verify`` runs ``tools/check_correctness.py`` at every listed scale
+factor and stores the current fingerprint of each query that is OK at
+all of them (its recorded round is kept), so it leaves the stale list.
+
 ``record`` stores, for every query whose row is fully green
 (rows+schema+hash, no err), the CURRENT fingerprint — valid only while
 the working tree still matches what the driver ran, which is why this
@@ -79,6 +87,20 @@ def touch(names: list[str]) -> None:
     print(f"touched {len(names)} queries (forced stale)")
 
 
+def verify(sf_dirs: list[str], names: list[str]) -> None:
+    from tools.check_correctness import check
+
+    green = set(names)
+    for sf_dir in sf_dirs:
+        green &= {q for q, v in check(sf_dir, set(names)).items() if v == "OK"}
+    fps = current_fingerprints(_registry())
+    state = load_state()
+    for q in green:
+        state.setdefault(q, {"round": None})["fp"] = fps[q]
+    _save(state)
+    print(f"verified {len(green)}/{len(names)}; still stale: {sorted(set(names) - green)}")
+
+
 def status() -> None:
     reg = _registry()
     fps = current_fingerprints(reg)
@@ -99,6 +121,8 @@ def main() -> None:
         record(int(sys.argv[2]))
     elif cmd == "touch":
         touch(sys.argv[2:])
+    elif cmd == "verify":
+        verify(sys.argv[2].split(","), sys.argv[3:])
     elif cmd == "status":
         status()
     else:
